@@ -97,6 +97,22 @@ def url_key_py(url: str) -> int:
 # Vectorized numpy kernels
 # ---------------------------------------------------------------------------
 
+def _arrow_strings(values):
+    """An Arrow string array of ``values`` (a Series, list or Arrow array);
+    values Arrow cannot take as strings (ints, bytes, mixed objects) become
+    null, so the kernels degrade them to "" instead of raising."""
+    import pyarrow as pa
+
+    if isinstance(values, (pa.Array, pa.ChunkedArray)):
+        return values
+    try:
+        return pa.array(values, type=pa.string(), from_pandas=True)
+    except (pa.ArrowInvalid, pa.ArrowTypeError):
+        return pa.array(
+            [v if isinstance(v, str) else None for v in values], type=pa.string()
+        )
+
+
 def _pack_bytes(values) -> tuple[np.ndarray, np.ndarray]:
     """Encode a string Series (or Arrow string array) into one flat uint8
     array + per-row lengths.
@@ -104,31 +120,21 @@ def _pack_bytes(values) -> tuple[np.ndarray, np.ndarray]:
     The flat bytes come straight out of the Arrow string array's value
     buffer (offsets buffer → lengths) — zero-copy, no per-row Python
     ``.encode`` (the previous listcomp measured 0.43 s per 1.3M URLs,
-    this path 0.11 s). Nulls/non-strings degrade to b"" exactly as the
-    listcomp did (``fill_null`` also rebuilds any null slots whose offset
-    ranges are not empty, so lengths stay correct); inputs Arrow cannot
-    convert fall back to the original per-row encode."""
+    this path 0.11 s). Nulls/non-strings degrade to b"" (``fill_null``
+    also rebuilds any null slots whose offset ranges are not empty, so
+    lengths stay correct). ``large_string`` arrays (a pandas
+    ``ArrowDtype(pa.large_string())`` Series converts to one) carry int64
+    offsets, ``string`` arrays int32."""
     import pyarrow as pa
 
-    if isinstance(values, (pa.Array, pa.ChunkedArray)):
-        arr = values
-    else:
-        try:
-            arr = pa.array(values, type=pa.string(), from_pandas=True)
-        except (pa.ArrowInvalid, pa.ArrowTypeError):
-            encoded = [
-                s.encode("utf-8") if isinstance(s, str) else b"" for s in values
-            ]
-            lens = np.fromiter(
-                (len(b) for b in encoded), dtype=np.int64, count=len(encoded)
-            )
-            return np.frombuffer(b"".join(encoded), dtype=np.uint8), lens
+    arr = _arrow_strings(values)
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
+    off_dtype = np.int64 if pa.types.is_large_string(arr.type) else np.int32
     if arr.null_count:
         arr = arr.fill_null("")
     n = len(arr)
-    offs = np.frombuffer(arr.buffers()[1], dtype=np.int32)
+    offs = np.frombuffer(arr.buffers()[1], dtype=off_dtype)
     offs = offs[arr.offset : arr.offset + n + 1].astype(np.int64)
     buf = arr.buffers()[2]
     data = (
@@ -171,11 +177,9 @@ def _host_checksum_np(urls: pd.Series) -> np.ndarray:
     The extraction runs in Arrow's RE2 (non-matches → "", like the old
     fillna) and the byte sums come from the resulting array's value buffer
     (1.49 → 0.36 s per 1.3M URLs, identical checksums)."""
-    import pyarrow as pa
     import pyarrow.compute as pc
 
-    arr = pa.array(urls, type=pa.string(), from_pandas=True)
-    st = pc.extract_regex(arr, pattern=r"^https?://(?P<h>[^/]+)")
+    st = pc.extract_regex(_arrow_strings(urls), pattern=r"^https?://(?P<h>[^/]+)")
     hosts = pc.if_else(st.is_valid(), pc.struct_field(st, "h"), "")
     flat, lens = _pack_bytes(hosts)
     n = len(hosts)
@@ -221,7 +225,12 @@ def clean_url_np(urls: pd.Series) -> pd.Series:
     # `$` tolerates only a trailing newline, which [^?#]* already consumes);
     # two memchr substring scans instead of a per-row regex (0.60 → 0.28 s
     # per 1.3M URLs). Nulls → non-trivial, like the old fillna(False).
-    arr = pa.array(urls, type=pa.string(), from_pandas=True)
+    try:
+        arr = pa.array(urls, type=pa.string(), from_pandas=True)
+    except (pa.ArrowInvalid, pa.ArrowTypeError):
+        # non-string values are cleaned as their string form (what the
+        # regex path did), not rejected
+        arr = pa.array(s, type=pa.string(), from_pandas=True)
     has_qf = pc.or_(pc.match_substring(arr, "?"), pc.match_substring(arr, "#"))
     trivial = pd.Series(
         pc.invert(has_qf).fill_null(False).to_numpy(zero_copy_only=False),

@@ -67,7 +67,7 @@ from scrape_spark.operators.cuckoo import (
     rebuild_flagged,
     update_cuckoo,
 )
-from scrape_spark.operators.store import UrlStore
+from scrape_spark.operators.store import REQUESTED_KEY, UrlStore
 from scrape_spark.plans.batch_extract import (
     IMPLAUSIBLE_SIZE_BYTES,
     _plan_size_bytes,
@@ -858,7 +858,11 @@ class Crawl:
             epoch_pages,
             probe_rows_hint=int(sel_def.sel),
         ).cache()
-        results = finalize_results(extracted, self.store.ttl_seconds).cache()
+        # the frontier key rides along as the request key: the store's
+        # id_map write and the cuckoo alias inserts reuse it, no re-hash
+        results = finalize_results(
+            extracted, self.store.ttl_seconds, keep_requested_key=True
+        ).cache()
         errors = results.filter(F.col("error").isNotNull())
 
         # 5. outlink discovery from the same extraction pass — plus, in
@@ -954,11 +958,10 @@ class Crawl:
             # row, one alias-copy per non-self redirect, one attempted-copy
             # per new error — mirrors _cuckoo_multiset's source structure
             ok = results.filter(F.col("error").isNull())
-            rk = url_key(F.col("parsed_url"))
             inserts = (
                 ok.select("key")
                 .unionByName(
-                    ok.select(rk.alias("key"), F.col("key").alias("__c"))
+                    ok.select(F.col(REQUESTED_KEY).alias("key"), F.col("key").alias("__c"))
                     .filter(F.col("key").isNotNull() & (F.col("key") != F.col("__c")))
                     .select("key")
                 )

@@ -61,6 +61,9 @@ from scrape_spark.functions.urlkeys import clean_url, url_key
 from scrape_spark.schemas import DEFAULT_TTL_SECONDS, ID_MAP_SCHEMA, URL_STORE_SCHEMA
 
 BUCKET_COL = "__bucket"
+# Optional merge-input column: the request key of each result row (see
+# UrlStore.merge). Never stored.
+REQUESTED_KEY = "requested_key"
 
 
 class SnapshotExpiredError(OSError):
@@ -796,22 +799,37 @@ class UrlStore:
         """Upsert result rows (RESULT_SCHEMA-ish; `original_url` is dropped —
         never stored). Error rows are NOT stored (internal/scrape.go:82-85).
         Also records requested→canonical alias rows, self-referential ones
-        included."""
-        cols = {f.name for f in URL_STORE_SCHEMA.fields}
-        incoming = results.filter(F.col("error").isNull())
-        incoming = incoming.withColumn(
-            "fetch_time", F.coalesce(F.col("fetch_time"), stamp_fetch_time())
-        ).withColumn(
-            "expires",
-            F.coalesce(F.col("expires"), expires_at("fetch_time", self.ttl_seconds)),
-        )
-        new_urls = incoming.select(*[F.col(c) for c in URL_STORE_SCHEMA.fieldNames() if c in cols])
+        included.
 
-        # alias rows: requested (parsed_url) key → canonical (url) key.
+        The alias's requested key comes from the REQUESTED_KEY column when
+        ``results`` carries one — the request key the caller already
+        computed (``batch_extract`` and the crawl epoch pass it through
+        ``finalize_results(..., keep_requested_key=True)``), so the id_map
+        write runs no Python UDF. Plain RESULT_SCHEMA input derives it as
+        ``url_key(parsed_url)``, which is the same value: a request key IS
+        the key of the cleaned requested URL."""
+        incoming = results.filter(F.col("error").isNull())
+        fetch_time = F.coalesce(F.col("fetch_time"), stamp_fetch_time())
+        stamped = {
+            "fetch_time": fetch_time,
+            "expires": F.coalesce(
+                F.col("expires"), expires_at(fetch_time, self.ttl_seconds)
+            ),
+        }
+        new_urls = incoming.select(
+            *[stamped.get(c, F.col(c)).alias(c) for c in URL_STORE_SCHEMA.fieldNames()]
+        )
+
+        # alias rows: requested key → canonical (url) key.
         # NOT pre-deduped — _merge_table's max_by dedupe is the single
         # per-key pass (a dropDuplicates here was a second full shuffle).
+        requested = (
+            F.col(REQUESTED_KEY)
+            if REQUESTED_KEY in results.columns
+            else url_key(F.col("parsed_url"))
+        )
         new_aliases = incoming.select(
-            url_key(F.col("parsed_url")).alias("requested_id"),
+            requested.alias("requested_id"),
             F.col("key").alias("canonical_id"),
         ).where(F.col("requested_id").isNotNull())
 

@@ -14,7 +14,17 @@ One declarative job per batch:
                3xx redirect chains followed by per-hop equi-joins)
              → extract (M3) → error taxonomy (F10 / 404 / status incl. 504
                timeout / Content-Type whitelist F2 / byte-sniff fallback)
-             → hits ∪ fetched (U1) → MERGE INTO store (S9) → results
+             → MERGE INTO store (S9) of the FETCHED rows only → hits ∪
+               fetched (U1) → results
+
+Hits bypass the MERGE, as in the reference (StorageBackedFetcher saves only
+after a miss is fetched, internal/scrape.go:86-93): a hit row is returned
+with its stored fetch_time and payload but never rewritten, so a commit's
+bytes — and the delta generations it adds — scale with the rows the batch
+fetched, and ``export --since-snapshot`` never re-emits an unchanged page.
+The id_map aliases of fetched rows take the request key computed in
+request prep (carried past finalize as REQUESTED_KEY) instead of re-hashing
+``parsed_url`` in a second Python pass.
 
 Scale notes: the cache-split join is key-equi on `key long` (never URL
 strings, O1); the pages join prunes to (url, html, ctype, status,
@@ -40,7 +50,7 @@ from scrape_spark.functions.textfns import (
 )
 from scrape_spark.functions.urlkeys import clean_url, hostname_col, url_key
 from scrape_spark.operators.extract import extract_pages
-from scrape_spark.operators.store import UrlStore
+from scrape_spark.operators.store import REQUESTED_KEY, UrlStore
 from scrape_spark.schemas import (
     FETCH_METHOD_DIRECT,
     FETCH_METHOD_HEADLESS,
@@ -334,14 +344,26 @@ _EXTRACTED_FIELDS = (
 )
 
 
-def finalize_results(extracted: DataFrame, ttl_seconds: int) -> DataFrame:
+def finalize_results(
+    extracted: DataFrame, ttl_seconds: int, keep_requested_key: bool = False
+) -> DataFrame:
     """Map one extraction pass to RESULT_SCHEMA rows with the full error
     taxonomy, gate order as in the reference fetcher (fetcher.go:52-95):
     invalid-url → 404 absent → HTTP status (<200/≥400, incl. the 504
     timeout class) → Content-Type header whitelist (415) → byte-sniff 415
     fallback when no header is modeled. Error rows carry fetch provenance
     only — the reference never extracts after a gate fires, so extracted
-    metadata is nulled (resource partial-data semantics, fetcher.go:55-72)."""
+    metadata is nulled (resource partial-data semantics, fetcher.go:55-72).
+
+    Built as two projections (gates, then the RESULT_SCHEMA select): a
+    chain of per-column ``withColumn`` calls re-analyses the whole batch
+    plan once per column, analysis time paid on every batch before any job
+    runs.
+
+    ``keep_requested_key`` appends REQUESTED_KEY — the input ``key`` (the
+    request key, ``url_key(parsed_url)``) before it is replaced by the
+    canonical key — so ``UrlStore.merge`` writes id_map aliases without
+    hashing ``parsed_url`` again."""
     found = F.col("__page_url").isNotNull()
     status = F.coalesce(
         F.col("__status"), F.when(found, F.lit(200)).otherwise(F.lit(404))
@@ -367,64 +389,46 @@ def finalize_results(extracted: DataFrame, ttl_seconds: int) -> DataFrame:
             ),
         ).otherwise(F.col("extract_error")),
     )
+    out = extracted.withColumns({"status_code": status, "error": error})
+    ok = F.col("error").isNull()
     # error rows echo the requested URL (reference: RequestedURL, no canonical)
     canonical = F.when(
-        error.isNull(), F.coalesce(F.col("canonical_url"), F.col("parsed_url"))
+        ok, F.coalesce(F.col("canonical_url"), F.col("parsed_url"))
     ).otherwise(F.col("parsed_url"))
-
-    out = (
-        extracted.withColumn("status_code", status)
-        .withColumn("error", error)
-        .withColumn("url", canonical)
-        .withColumn("key", F.when(error.isNull(), url_key(canonical)).otherwise(F.col("key")))
-        .withColumn("hostname", hostname_col(F.col("url")))
-        .withColumn("fetch_time", stamp_fetch_time())
-        .withColumn(
-            "fetch_method",
-            (
-                F.coalesce(F.col("__fetch_method"), F.lit(FETCH_METHOD_DIRECT))
-                if "__fetch_method" in extracted.columns
-                else F.lit(FETCH_METHOD_DIRECT)
-            ),
-        )
-        .withColumn(
-            "user_agent",
+    fetch_time = stamp_fetch_time()
+    cols = {c: F.when(ok, F.col(c)) for c in _EXTRACTED_FIELDS}
+    cols.update(
+        key=F.when(ok, url_key(canonical)).otherwise(F.col("key")),
+        url=canonical,
+        hostname=hostname_col(canonical),
+        fetch_time=fetch_time,
+        fetch_method=(
+            F.coalesce(F.col("__fetch_method"), F.lit(FETCH_METHOD_DIRECT))
+            if "__fetch_method" in extracted.columns
+            else F.lit(FETCH_METHOD_DIRECT)
+        ),
+        user_agent=(
             F.col("__user_agent")
             if "__user_agent" in extracted.columns
-            else F.lit(None).cast("string"),
-        )
-        .withColumn(
-            "headers",
+            else F.lit(None).cast("string")
+        ),
+        headers=(
             F.col("__headers")
             if "__headers" in extracted.columns
-            else F.lit(None).cast("map<string,string>"),
-        )
-        .withColumn("expires", expires_at("fetch_time", ttl_seconds))
-        .withColumn("authors", author_split("author"))
-    )
-    for c in _EXTRACTED_FIELDS:
-        out = out.withColumn(c, F.when(F.col("error").isNull(), F.col(c)))
-    # text/plain is whitelisted but carries no markup — the content IS the
-    # body (trafilatura extracts it verbatim; fetcher_test.go:203-207)
-    out = out.withColumn(
-        "content_text",
-        F.coalesce(
-            F.col("content_text"),
-            F.when(F.col("error").isNull(), F.col("__plain_text")),
+            else F.lit(None).cast("map<string,string>")
+        ),
+        expires=expires_at(fetch_time, ttl_seconds),
+        authors=F.when(ok, author_split("author")),
+        # text/plain is whitelisted but carries no markup — the content IS
+        # the body (trafilatura extracts it verbatim; fetcher_test.go:203-207)
+        content_text=F.when(
+            ok, F.coalesce(F.col("content_text"), F.col("__plain_text"))
         ),
     )
-    return _as_result(out)
-
-
-def fetch_and_extract(
-    misses: DataFrame,
-    pages: DataFrame,
-    ttl_seconds: int,
-    probe_rows_hint: int | None = None,
-) -> DataFrame:
-    return finalize_results(
-        fetch_join(misses, pages, probe_rows_hint=probe_rows_hint), ttl_seconds
-    )
+    projection = [cols.get(c, F.col(c)).alias(c) for c in RESULT_COLS]
+    if keep_requested_key:
+        projection.append(F.col("key").alias(REQUESTED_KEY))
+    return out.select(*projection)
 
 
 def _live_pages(misses: DataFrame, live) -> DataFrame:
@@ -463,8 +467,10 @@ def batch_extract(
     live=None,
 ) -> DataFrame:
     """Full batch pipeline. With a store: memoized (hits skip the fetch stage
-    and keep their stored fetch_time — parity with internal/scrape_test.go's
-    cache-hit stability assertion); without: straight fetch+extract.
+    and the MERGE, and keep their stored fetch_time — parity with
+    internal/scrape_test.go's cache-hit stability assertion); without:
+    straight fetch+extract. With ``save`` the returned frame is the one
+    cache the call leaves behind: ``unpersist()`` it when done.
 
     Fetch-client routing (S3): ``fetch_method`` is the batch-level client —
     FETCH_METHOD_HEADLESS reproduces the reference's /extract/headless
@@ -519,8 +525,7 @@ def batch_extract(
     if store is None:
         if pages is None:
             pages = _live_pages(req, live)
-        results = fetch_and_extract(req, pages, ttl_seconds=30 * 24 * 3600)
-        return results
+        return finalize_results(fetch_join(req, pages), ttl_seconds=30 * 24 * 3600)
 
     req = req.cache()  # consumed by the bucket-prune pass, hits, and misses
     # Bucket-pruned cache probe: the store is hash-bucketed by key, so a batch
@@ -579,18 +584,28 @@ def batch_extract(
     if pages is None:
         # live path: fetch ONLY the misses
         own_pages = pages = _live_pages(misses, live)
-    fetched = fetch_and_extract(misses, pages, store.ttl_seconds)
+    fetched = finalize_results(
+        fetch_join(misses, pages), store.ttl_seconds, keep_requested_key=save
+    )
+    if not save:
+        return hit_results.unionByName(fetched)
 
-    results = hit_results.unionByName(fetched)
-    if save:
-        results = results.cache()
-        store.merge(results)  # materializes the results cache
-        # the returned frame now reads its own cache — the upstream probe
-        # caches are dead weight (leaking one per batch degrades long
-        # sessions / crawl loops)
-        req.unpersist()
-        if own_pages is not None:
-            own_pages.unpersist()
+    # Commit only what this batch fetched (StorageBackedFetcher saves after
+    # a miss, internal/scrape.go:86-93): hits are already stored as-is, so
+    # re-merging them would write ~the whole hit payload again and add a
+    # delta generation to every bucket for nothing.
+    fetched = fetched.cache()
+    store.merge(fetched)  # materializes the fetched cache
+    results = hit_results.unionByName(_as_result(fetched)).cache()
+    results.count()
+    # the returned frame now reads its own cache — the upstream caches are
+    # dead weight (leaking one per batch degrades long sessions / crawl
+    # loops, and a leaked plan would be silently reused by the next
+    # identical batch)
+    fetched.unpersist()
+    req.unpersist()
+    if own_pages is not None:
+        own_pages.unpersist()
     return results
 
 

@@ -50,6 +50,7 @@ def run_stream_extract(
         # exactly-once like the checkpointed input (a bare append would
         # double rows on replay). The store merge is LWW-idempotent anyway.
         results.write.mode("overwrite").parquet(f"{output_dir}/batch={batch_id}")
+        results.unpersist()
 
     q = (
         stream_requests(spark, request_dir)

@@ -296,3 +296,156 @@ def test_auto_probe_strategy_gate(spark, pages, monkeypatch):
         (r["original_url"], r["title"]) for r in df.select("original_url", "title").collect()
     }
     assert shape(out_auto) == shape(out_plain)
+
+
+def _persisted_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_store_call_leaves_no_cache_and_refetches(spark, pages, tmp_path):
+    """A store call's only surviving cache is the frame it returns: once the
+    caller unpersists it the session is back at its pre-call persisted-RDD
+    count. Two identical calls against identical stores each run the fetch
+    stage — a leaked cache with the same plan would be reused silently and
+    hand the second call the first call's rows."""
+    import shutil
+    import time
+
+    pristine = tmp_path / "pristine"
+    hits = [page_url(0, i) for i in range(1, 5)]
+    batch_extract(
+        spark, _req_df(spark, hits), pages, UrlStore(spark, str(pristine), n_buckets=8)
+    ).unpersist()
+    misses = [page_url(1, i) for i in range(1, 5)]
+    req = _req_df(spark, hits + misses)
+    before = _persisted_rdds(spark)
+    miss_times = []
+    for i in range(2):
+        live = tmp_path / f"live{i}"
+        shutil.copytree(pristine, live)
+        out = batch_extract(spark, req, pages, UrlStore(spark, str(live), n_buckets=8))
+        rows = {r.original_url: r for r in out.collect()}
+        out.unpersist()
+        assert _persisted_rdds(spark) == before
+        assert set(rows) == set(hits + misses)
+        miss_times.append({u: rows[u].fetch_time for u in misses})
+        time.sleep(1.1)  # fetch_time has one-second resolution
+    assert all(miss_times[1][u] > miss_times[0][u] for u in misses)
+
+
+def _snapshots(store):
+    return store.urls.current_snapshot(), store.id_map.current_snapshot()
+
+
+def test_all_hit_rerequest_commits_nothing(spark, pages, tmp_path):
+    """Hits bypass the MERGE (the reference saves only after a miss is
+    fetched, internal/scrape.go:86-93): an all-hit batch — direct, utm and
+    alias forms — commits no snapshot to either table and returns the
+    stored fetch_time and content."""
+    store = UrlStore(spark, str(tmp_path / "s"), n_buckets=8)
+    urls = [page_url(0, 1), page_url(2, 11) + "/amp", page_url(3, 5)]
+    first = batch_extract(spark, _req_df(spark, urls), pages, store)
+    stored = {r.original_url: r for r in first.collect()}
+    first.unpersist()
+    snaps = _snapshots(store)
+
+    # requested form → the stored row it must come back as
+    again = {
+        page_url(0, 1) + "?utm_source=x": page_url(0, 1),
+        page_url(2, 11) + "/amp": page_url(2, 11) + "/amp",
+        page_url(2, 11): page_url(2, 11) + "/amp",  # canonical of the alias
+        page_url(3, 5): page_url(3, 5),
+    }
+    out = batch_extract(spark, _req_df(spark, list(again)), pages, store)
+    rows = {r.original_url: r for r in out.collect()}
+    out.unpersist()
+    assert _snapshots(store) == snaps
+    assert set(rows) == set(again)
+    for u, s in again.items():
+        assert rows[u].fetch_time == stored[s].fetch_time
+        assert rows[u].content_text == stored[s].content_text
+
+
+def test_mixed_batch_delta_holds_only_misses(spark, pages, tmp_path):
+    """A mixed batch's urls delta holds exactly the miss rows, and its
+    id_map delta exactly their aliases."""
+    from scrape_spark.functions.urlkeys import url_key_py
+
+    store = UrlStore(spark, str(tmp_path / "s"), n_buckets=8)
+    hits = [page_url(0, i) for i in range(1, 6)]
+    batch_extract(spark, _req_df(spark, hits), pages, store).unpersist()
+    pre_urls, pre_ids = _snapshots(store)
+
+    misses = [page_url(1, 3), page_url(2, 11) + "/amp"]
+    out = batch_extract(spark, _req_df(spark, hits + misses), pages, store)
+    assert out.count() == len(hits + misses)
+    out.unpersist()
+    delta = store.urls.read_since(pre_urls, assume_monotonic=True)
+    assert {r.parsed_url for r in delta.select("parsed_url").collect()} == set(misses)
+    aliases = store.id_map.read_since(pre_ids, assume_monotonic=True)
+    assert {(r.requested_id, r.canonical_id) for r in aliases.collect()} == {
+        (url_key_py(page_url(1, 3)), url_key_py(page_url(1, 3))),
+        (url_key_py(page_url(2, 11) + "/amp"), url_key_py(page_url(2, 11))),
+    }
+
+
+def test_carried_and_derived_request_keys_write_identical_id_map(spark, pages, tmp_path):
+    """merge takes the alias's requested key from REQUESTED_KEY when the
+    results carry it, else derives url_key(parsed_url): both must write the
+    same id_map rows (utm variants, /amp aliases, self-aliases, errors)."""
+    from scrape_spark.operators.store import REQUESTED_KEY
+    from scrape_spark.plans.batch_extract import (
+        fetch_join,
+        finalize_results,
+        prepare_requests,
+    )
+
+    urls = [
+        page_url(0, 1), page_url(0, 2) + "?utm_source=feed",
+        page_url(2, 11) + "/amp", page_url(3, 5) + "#frag",
+        "https://missing.test/nope", "not a url",
+    ]
+    req = prepare_requests(_req_df(spark, urls))
+    results = finalize_results(
+        fetch_join(req, pages), 3600, keep_requested_key=True
+    ).cache()
+    carried = UrlStore(spark, str(tmp_path / "carried"), n_buckets=8)
+    derived = UrlStore(spark, str(tmp_path / "derived"), n_buckets=8)
+    carried.merge(results)
+    derived.merge(results.drop(REQUESTED_KEY))
+    results.unpersist()
+
+    def id_map(store):
+        return sorted(tuple(r) for r in store.id_map.read().collect())
+
+    assert id_map(carried) == id_map(derived)
+    assert len(id_map(carried)) == 4
+
+
+def _plan_node_names(plan) -> list[str]:
+    """Physical operator names of a plan tree. InMemoryTableScan is a leaf
+    here: the plan that built a cache is not re-run by its readers."""
+    names = [plan.nodeName()]
+    children = plan.children()
+    for i in range(children.size()):
+        names += _plan_node_names(children.apply(i))
+    return names
+
+
+def test_id_map_write_runs_no_python_udf(spark, pages, tmp_path):
+    """The id_map delta write from batch_extract takes the request key from
+    request prep: no ArrowEvalPython/BatchEvalPython pass in its plan."""
+    store = UrlStore(spark, str(tmp_path / "s"), n_buckets=8)
+    plans = []
+    append = store.id_map.append_buckets
+
+    def spy(df, *args, **kwargs):
+        plans.append(_plan_node_names(df._jdf.queryExecution().sparkPlan()))
+        return append(df, *args, **kwargs)
+
+    store.id_map.append_buckets = spy
+    urls = [page_url(0, 1), page_url(2, 11) + "/amp", page_url(1, 4) + "?utm_source=x"]
+    batch_extract(spark, _req_df(spark, urls), pages, store).unpersist()
+    assert len(plans) == 1
+    assert "InMemoryTableScan" in plans[0]
+    assert not {"ArrowEvalPython", "BatchEvalPython"} & set(plans[0]), plans[0]

@@ -339,7 +339,8 @@ def test_crawl_empty_sitemaps_seed_fails_loudly(spark, corpus_path, capsys, tmp_
 
 def test_export_incremental_since_snapshot(spark, corpus_path, capsys, tmp_path):
     """`export --since-snapshot`: the second export sees only pages stored
-    after the first run's reported snapshot."""
+    after the first run's reported snapshot — a fresh page requested again
+    is a cache hit, not rewritten, so it is not re-emitted."""
     store = str(tmp_path / "store")
     assert main(["extract", "--pages", corpus_path, "--store", store,
                  page_url(0, 0), page_url(0, 1)]) == 0
@@ -350,7 +351,7 @@ def test_export_incremental_since_snapshot(spark, corpus_path, capsys, tmp_path)
     assert s1["rows"] == 2 and isinstance(s1["snapshot"], int)
 
     assert main(["extract", "--pages", corpus_path, "--store", store,
-                 page_url(1, 0)]) == 0
+                 page_url(1, 0), page_url(0, 1)]) == 0
     capsys.readouterr()
     out2 = str(tmp_path / "c2")
     assert main(["export", "--store", store, "--out", out2, "--notext",

@@ -125,3 +125,35 @@ def test_spark_udfs_match_python(spark):
         assert r.cleaned == clean_url_py(r.url), r.url
         assert r.key == url_key_py(r.url), r.url
         assert r.host == hostname_py(r.url), r.url
+
+
+def test_large_string_input_keys_match_scalar():
+    """A large_string column (int64 offsets) must pack the same bytes as a
+    string one: reading its offsets as int32 gave wrong lengths and wrong
+    keys with no error."""
+    import pyarrow as pa
+
+    from scrape_spark.functions.urlkeys import _pack_bytes
+
+    urls = ["https://a.test/x123456789ab", "https://b.test/xy123456789ab"]
+    arr = pa.array(urls, type=pa.large_string())
+    assert list(_pack_bytes(arr)[1]) == [len(u) for u in urls]
+    assert list(_pack_bytes(arr.slice(1))[1]) == [len(urls[1])]
+    series = pd.Series(urls, dtype=pd.ArrowDtype(pa.large_string()))
+    assert list(url_key_np(series)) == [url_key_py(u) for u in urls]
+
+
+def test_kernels_accept_non_string_values():
+    """clean_url_np cleans a non-string value as its string form (as the
+    regex path did) and url_key_np degrades it to the empty-URL key,
+    instead of either raising ArrowTypeError."""
+    from scrape_spark.functions.urlkeys import clean_url_np
+
+    mixed = pd.Series(["https://a.test/?b=1&a=2", 5, None, "https://x.test/p#f"])
+    got = clean_url_np(mixed)
+    assert got[0] == "https://a.test/?a=2&b=1"
+    assert got[1] == "5"
+    assert pd.isna(got[2])
+    assert got[3] == "https://x.test/p"
+    keys = url_key_np(pd.Series(["https://a.test/x", 5, None]))
+    assert list(keys) == [url_key_py("https://a.test/x"), url_key_py(""), url_key_py("")]
