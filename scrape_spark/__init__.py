@@ -7,9 +7,10 @@ cache hit/miss splits and error-rows-as-data — re-expressed as DataFrame /
 Spark-SQL operators over columnar Parquet tables, plus the net-new
 web-scale pieces the reference lacks: a partitioned URL frontier with
 per-host politeness (RFC 9309-style robots rules + crawl-delay quotas),
-a partitioned Bloom seen-set, epoch-synchronous BFS crawl ordering with
-checkpoint/resume, and training-data operators (dedup families, similarity
-search, text quality analytics).
+an exact seen-set (with a partitioned cuckoo pre-filter as the scale
+mode), epoch-synchronous BFS crawl ordering with checkpoint/resume, and
+training-data operators (dedup families, similarity search, text quality
+analytics).
 
 Design notes:
 - DataFrame-first: every relational operator is declarative so Catalyst
@@ -18,7 +19,8 @@ Design notes:
   pandas UDFs — no row-at-a-time Python anywhere.
 - Scale-first: stores are hash-bucketed for merge pruning; frontier is
   salted-host partitioned against hot-domain skew; joins against dims are
-  broadcast; the seen-set probe is a Bloom pre-filter + exact anti-join.
+  broadcast; the seen-set probe is an exact anti-join, or a cuckoo
+  pre-filter + bucket-pruned exact confirm at scale.
 """
 
 __version__ = "0.1.0"

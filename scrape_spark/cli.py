@@ -690,8 +690,9 @@ def build_parser() -> argparse.ArgumentParser:
     cr.add_argument("--epoch-seconds", type=float, default=10.0)
     cr.add_argument("--max-depth", type=int, default=6)
     cr.add_argument(
-        "--seen-filter", default="", choices=["", "bloom", "cuckoo", "none"],
-        help="seen-set pre-filter (default bloom)",
+        "--seen-filter", default="none", choices=["none", "cuckoo"],
+        help="seen-set probe: none = exact anti-join (default), "
+        "cuckoo = incremental pre-filter for very large crawls",
     )
     cr.add_argument(
         "--keep-snapshots", action="store_true",

@@ -1,10 +1,12 @@
 """Partitioned cuckoo-filter seen-set (north-rule: "Bloom/cuckoo-filter
 URL-seen set keyed by canonicalized URL hash").
 
-The Bloom sibling (`bloom.py`) is rebuilt from the TTL-pruned store every
-epoch — O(store) work per epoch, which a 10^10-URL frontier cannot afford.
-The cuckoo filter is the *incremental* alternative: it supports DELETE, so
-the crawl can maintain one persistent filter with per-epoch cost ∝ delta:
+The crawl's default seen-set probe (frontier.py, ``seen_filter="none"``) is
+an exact anti-join against the full fresh key set, re-read from the
+TTL-pruned store every epoch — O(store) work per epoch, which a 10^10-URL
+frontier cannot afford. The cuckoo filter is the *incremental* scale mode:
+it supports DELETE, so the crawl can maintain one persistent filter with
+per-epoch cost ∝ delta:
 
 - insert the keys merged/attempted this epoch,
 - delete the keys whose TTL expired this epoch (expiry ⇒ miss ⇒ refetch,
@@ -12,10 +14,10 @@ the crawl can maintain one persistent filter with per-epoch cost ∝ delta:
 - never rebuild unless a bucket overflows (rare by sizing; flagged, and
   only the flagged bucket is rebuilt from its own keys).
 
-Like the Bloom, it is a *pre-filter*: "definitely unseen" is exact (a key
-that was inserted and not deleted always probes positive — no false
-negatives), "maybe seen" goes through the exact anti-join confirm. A missed
-*delete* is therefore harmless (the exact confirm resolves it); a missed
+It is a *pre-filter*: "definitely unseen" is exact (a key that was inserted
+and not deleted always probes positive — no false negatives), "maybe seen"
+goes through the exact (bucket-pruned) confirm. A missed *delete* is
+therefore harmless (the exact confirm resolves it); a missed
 *insert* would be a correctness bug, so the crawl inserts every key it
 commits, unconditionally. Corollary: the filter is SINGLE-WRITER — it
 models only keys the owning crawl committed. The crawl's loader detects
@@ -35,8 +37,8 @@ filters only via the false-positive path — here deletes come exclusively
 from the store's own expired rows, which were all inserted.
 
 All per-bucket kernels are numpy over Arrow batches (applyInPandas /
-cogroup), mirroring bloom.py: no row ever pairs with a foreign bucket's
-table, so probe/update shuffle only by the same pmod the store itself uses.
+cogroup): no row ever pairs with a foreign bucket's table, so probe/update
+shuffle only by the same pmod the store itself uses.
 
 Sizing at 10^10 keys: table bytes ≈ keys × 8 B/slot-pair ÷ load. At the
 default 0.5 target load that is ~16 B/key ⇒ 160 GB total — so `n_buckets`
@@ -54,8 +56,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from scrape_spark.operators.bloom import _mix
 
 CUCKOO_SCHEMA = T.StructType(
     [
@@ -75,19 +75,28 @@ CUCKOO_SCHEMA = T.StructType(
 CUCKOO_FORMAT_VERSION = 2
 
 SLOTS_PER_BUCKET = 4
-_FPH = np.uint64(0xBF58476D1CE4E5B9)  # same mixing constant family as bloom
+_C1 = np.uint64(0xBF58476D1CE4E5B9)
+_C2 = np.uint64(0x94D049BB133111EB)
+_FPH = _C1
 _MAX_KICKS = 500
+
+
+def _mix(keys: np.ndarray) -> np.ndarray:
+    """One 64-bit hash per key (the splitmix64 finalizer)."""
+    x = keys.astype(np.uint64)
+    x = (x ^ (x >> np.uint64(30))) * _C1
+    x = (x ^ (x >> np.uint64(27))) * _C2
+    return x ^ (x >> np.uint64(31))
 
 
 def _fingerprints(keys: np.ndarray, n_slots: int):
     """fp (nonzero uint16), i1, i2 (int64 in [0, n_slots)) per key.
 
-    i1 comes from h1's LOW bits (independent of fp, which takes h1's top 16
-    bits). It must NOT come from h2: bloom._mix forces h2 odd (a
-    double-hashing step requirement there), so ``h2 & mask`` would always be
-    odd — odd rows carrying ~2x load, silently doubling the table to
-    converge and hitting the eviction wall far below the target load."""
-    h1, h2 = _mix(keys)
+    i1 comes from h1's LOW bits, independent of fp, which takes h1's top 16
+    bits. A biased i1 puts ~2x load on some rows, silently doubling the
+    table to converge and hitting the eviction wall far below the target
+    load."""
+    h1 = _mix(keys)
     fp = (h1 >> np.uint64(48)).astype(np.uint16)
     fp[fp == 0] = np.uint16(0x5BD1)  # 0 marks an empty slot
     mask = np.uint64(n_slots - 1)
@@ -229,9 +238,9 @@ def probe_cuckoo(
     flag_col: str = "maybe_seen",
 ) -> DataFrame:
     """Append `flag_col`: False ⇒ definitely not in the filter (exact, given
-    every seen key was inserted). Cogrouped per bucket like probe_bloom. A
-    bucket flagged needs_rebuild degrades to all-maybe (exact confirm takes
-    over) — conservative, never wrong."""
+    every seen key was inserted). Cogrouped per bucket, so each task touches
+    one table. A bucket flagged needs_rebuild degrades to all-maybe (exact
+    confirm takes over) — conservative, never wrong."""
     out_schema = T.StructType(
         candidates.schema.fields + [T.StructField(flag_col, T.BooleanType(), False)]
     )

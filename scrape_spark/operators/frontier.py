@@ -15,17 +15,17 @@ public-spec semantics:
   No dependence on partition iteration order anywhere.
 - **Seen-set**: fresh store keys (TTL-expired rows re-enter the frontier —
   the reference's expired⇒miss⇒refetch semantics) plus an `attempted`
-  table for error URLs so failures don't loop. Probed via a partitioned
-  pre-filter + exact confirm (exact result, scale-safe). Two pre-filters
-  (north rule: "Bloom/cuckoo"): the Bloom is rebuilt from the TTL-pruned
-  store every epoch (O(store)/epoch build, documented small/medium mode);
-  the cuckoo filter is the scale mode — maintained *incrementally*
-  (per-epoch inserts of the keys committed this epoch; exactly-once
-  watermark-window expiry deletes found via manifest file-stat pruning)
-  AND confirmed *bucket-pruned* (the exact confirm reads only the
-  store/id_map buckets the maybe-keys hash to), so the whole per-epoch
-  seen-set cost is ∝ delta + candidates + touched buckets — no O(store)
-  term anywhere in the loop. Alias copies are never deleted (conservative
+  table for error URLs so failures don't loop. Two exact probes
+  (``CrawlConfig.seen_filter``): the default ``"none"`` anti-joins the
+  frontier against the full fresh key set, re-read from the TTL-pruned
+  store every epoch (the reference's primary-key lookup; an O(store)/epoch
+  term); ``"cuckoo"`` is the scale mode — a cuckoo pre-filter maintained
+  *incrementally* (per-epoch inserts of the keys committed this epoch;
+  exactly-once watermark-window expiry deletes found via manifest
+  file-stat pruning) AND confirmed *bucket-pruned* (the exact confirm
+  reads only the store/id_map buckets the maybe-keys hash to), so that
+  mode's per-epoch seen-set cost is ∝ delta + candidates + touched
+  buckets — no O(store) term anywhere in the loop. Alias copies are never deleted (conservative
   false positives resolved by the exact confirm); an overflowing bucket is
   flagged and rebuilt alone. The persistent filter models only rows THIS
   crawl commits: foreign store writers (CLI extract --store, external
@@ -58,7 +58,6 @@ from scrape_spark.functions.urlkeys import (
     salted_host_hash,
     url_key,
 )
-from scrape_spark.operators.bloom import build_bloom, probe_bloom
 from scrape_spark.operators.cuckoo import (
     CUCKOO_FORMAT_VERSION,
     CUCKOO_SCHEMA,
@@ -101,13 +100,14 @@ ROBOTS_HOST_RULES_BYTES = 2048
 # incrementally (its one-sidedness only models rows the crawl committed)
 _CRAWL_STORE_OPS = {"crawl_merge", "crawl_compact"}
 
+SEEN_FILTERS = ("none", "cuckoo")
+
 
 @dataclass
 class CrawlConfig:
     epoch_seconds: float = 10.0
     max_depth: int = 6
     n_buckets: int = 16
-    use_bloom: bool = True
     # auto-compaction cadence: when any store bucket accumulates this many
     # delta generations, run_epoch compacts after its merge (0 disables).
     # Bounds read-side LWW resolution on long crawls — the reference analog
@@ -133,12 +133,18 @@ class CrawlConfig:
     # hosts/epoch: a host's sitemaps are processed exactly once, and epochs
     # with no new hosts skip the stage entirely (no corpus scan).
     discover_sitemaps: bool = False
-    # "" derives from use_bloom; explicit values: "bloom" | "cuckoo" | "none"
-    seen_filter: str = ""
-    bloom_bits_per_key: int = 10
+    # seen-set probe: "none" = exact anti-join against the full fresh key
+    # set; "cuckoo" = persistent cuckoo pre-filter + bucket-pruned confirm
+    seen_filter: str = "none"
     shuffle_partitions: int | None = None
     salt: int = 0x5CA1E
     extra: dict = field(default_factory=dict)
+
+    def __post_init__(self):
+        if self.seen_filter not in SEEN_FILTERS:
+            raise ValueError(
+                f"seen_filter must be one of {SEEN_FILTERS}, got {self.seen_filter!r}"
+            )
 
     def budget_expr(self):
         d = F.coalesce(F.col("crawl_delay"), F.lit(DEFAULT_CRAWL_DELAY))
@@ -255,22 +261,18 @@ class Crawl:
             json.dump(marker, f)
 
     # ---- seen-set probe ----------------------------------------------------
-    def _filter_kind(self) -> str:
-        return self.cfg.seen_filter or ("bloom" if self.cfg.use_bloom else "none")
-
     def _unseen(self, frontier: DataFrame, pre_filter: DataFrame | None, confirm) -> DataFrame:
-        """EXACT seen-set filtering: an optional Bloom/cuckoo pre-filter lets
-        'definitely unseen' rows skip the exact confirm entirely (both
-        filters are one-sided: no false negatives); the 'maybe seen' minority
-        goes through ``confirm`` (a callable maybe→still-unseen — the
-        full-key-set anti-join for bloom/none, the bucket-pruned probe for
-        cuckoo). ``probed`` is cached: both union arms and the eager
+        """EXACT seen-set filtering. Without a pre-filter every row goes
+        through ``confirm`` (a callable maybe→still-unseen: the full-key-set
+        anti-join, or the bucket-pruned probe in cuckoo mode). With the
+        cuckoo pre-filter (one-sided: no false negatives) 'definitely
+        unseen' rows skip the confirm and only the 'maybe seen' minority
+        goes through it. ``probed`` is cached: both union arms and the eager
         bucket-discovery collect read it once instead of re-running the
         cogrouped probe per consumer (the union-arm recompute trap)."""
         if pre_filter is None:
             return confirm(frontier)
-        probe = probe_bloom if self._filter_kind() == "bloom" else probe_cuckoo
-        probed = probe(frontier, pre_filter, "key", self.cfg.n_buckets).cache()
+        probed = probe_cuckoo(frontier, pre_filter, "key", self.cfg.n_buckets).cache()
         self._epoch_caches.append(probed)
         definitely_new = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
         maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
@@ -676,37 +678,15 @@ class Crawl:
             if committed
             else self.store.id_map.current_snapshot()
         )
-        fresh_store = self.store.urls.read(snapshot=store_snap)
-        fresh_keys = fresh_store.filter(
-            F.col("expires") > F.current_timestamp()
-        ).select("key")
-        # alias requested-keys count as seen only while their canonical row
-        # is fresh (reference: alias resolve → store probe → expired ⇒ miss)
-        id_map = self.store.id_map.read(snapshot=idmap_snap)
-        alias_seen = (
-            id_map.join(fresh_keys, id_map["canonical_id"] == fresh_keys["key"])
-            .select(F.col("requested_id").alias("key"))
-        )
-        # NO distinct: every consumer is duplicate-insensitive (Bloom bit-OR
-        # is idempotent, left_anti ignores dupes, the sizing count only grows)
-        # and the distinct was a full key-set shuffle every epoch — the one
-        # O(store)-shuffle stage in the loop.
-        seen_keys = (
-            fresh_keys.unionByName(alias_seen)
-            .unionByName(attempted.select("key"))
-            .cache()
-        )
-        # pre-filter: Bloom is rebuilt per epoch from the TTL-pruned store
-        # (expiry removes membership via the rebuild); cuckoo is persistent
-        # and advanced incrementally (expiry removes membership via
-        # watermarked deletes — O(delta)/epoch instead of O(store)/epoch)
-        filt_kind = self._filter_kind()
-        wm_now = time.time()
-        if filt_kind == "bloom":
-            pre_filter = build_bloom(
-                seen_keys, "key", cfg.n_buckets, cfg.bloom_bits_per_key
-            ).cache()
-        elif filt_kind == "cuckoo":
+        # seen-set probe. "none": anti-join against the full fresh key set,
+        # re-read from the TTL-pruned store each epoch (expiry removes
+        # membership by itself). "cuckoo": a persistent filter advanced
+        # incrementally (expiry removes membership via watermarked deletes —
+        # O(delta)/epoch instead of O(store)/epoch) whose exact confirm reads
+        # ONLY the buckets the maybe-keys hash to (∝ candidates + touched
+        # buckets), so that mode never builds the full key set.
+        if cfg.seen_filter == "cuckoo":
+            wm_now = time.time()
             # the filter's insert multiset and its expiry-delete windows must
             # cut the timeline at the SAME clock — the committed watermark.
             # Cutting builds/rebuilds at current_timestamp() (query-execution
@@ -714,7 +694,7 @@ class Crawl:
             # execution into a later delete window without ever inserting
             # them: deleting a never-inserted key can strip a colliding live
             # key's copy (false negative — the one property the crawl needs).
-            # RAW (unresolved) row versions, not the resolved fresh_store:
+            # RAW (unresolved) row versions, not the resolved store view:
             # the filter's delete side scans raw generations (one expiry
             # delete per committed generation, _load_cuckoo), so rebuilds
             # must contribute one store copy PER GENERATION too. Building
@@ -730,20 +710,37 @@ class Crawl:
             pre_filter = self._load_cuckoo(
                 prev, committed, wm_now, cuckoo_fresh, attempted, store_snap
             ).cache()
-        else:
-            pre_filter = None
-        bloom = pre_filter
-        # exact-confirm strategy: the cuckoo path confirms against ONLY the
-        # buckets the maybe-keys hash to (per-epoch exact work ∝ candidates +
-        # touched buckets); bloom/none confirm against the full cached key
-        # set (the Bloom is rebuilt from it each epoch anyway — that mode's
-        # documented O(store)/epoch term).
-        if filt_kind == "cuckoo":
+            self._epoch_caches.append(pre_filter)
+
             def confirm(maybe):
                 return self._confirm_unseen_pruned(
                     maybe, store_snap, idmap_snap, attempted
                 )
         else:
+            fresh_keys = (
+                self.store.urls.read(snapshot=store_snap)
+                .filter(F.col("expires") > F.current_timestamp())
+                .select("key")
+            )
+            # alias requested-keys count as seen only while their canonical
+            # row is fresh (reference: alias resolve → store probe → expired
+            # ⇒ miss)
+            id_map = self.store.id_map.read(snapshot=idmap_snap)
+            alias_seen = (
+                id_map.join(fresh_keys, id_map["canonical_id"] == fresh_keys["key"])
+                .select(F.col("requested_id").alias("key"))
+            )
+            # NO distinct: the only consumer is a left_anti, which ignores
+            # duplicates, so a distinct would only add a full key-set
+            # shuffle every epoch.
+            seen_keys = (
+                fresh_keys.unionByName(alias_seen)
+                .unionByName(attempted.select("key"))
+                .cache()
+            )
+            self._epoch_caches.append(seen_keys)
+            pre_filter = None
+
             def confirm(maybe):
                 return maybe.join(seen_keys, "key", "left_anti")
 
@@ -802,12 +799,12 @@ class Crawl:
 
         # 2. seen-set anti-join (pre-filter + exact confirm)
         candidates = self._unseen(
-            allowed.select(*FRONTIER_SCHEMA.fieldNames(), "crawl_delay"), bloom, confirm
+            allowed.select(*FRONTIER_SCHEMA.fieldNames(), "crawl_delay"), pre_filter, confirm
         )
 
         # 3. politeness quota + deterministic per-host ranking. `ranked` is
         # cached ONCE and feeds selected, deferred, and the epoch stats — the
-        # Bloom-probe/anti-join pipeline executes a single time per epoch
+        # seen-set probe/anti-join pipeline executes a single time per epoch
         # (it used to recompute for deferred and again for stats).
         w = W.partitionBy("host").orderBy("priority", "depth", "key")
         ranked = (
@@ -910,7 +907,7 @@ class Crawl:
         # no distinct — consumed by a left_anti only (dup-insensitive)
         in_flight = selected.select("key").unionByName(deferred.select("key"))
         fresh_links = (
-            self._unseen(links.join(in_flight, "key", "left_anti"), bloom, confirm)
+            self._unseen(links.join(in_flight, "key", "left_anti"), pre_filter, confirm)
             .select(*FRONTIER_SCHEMA.fieldNames())
         )
         next_frontier = (
@@ -953,7 +950,7 @@ class Crawl:
             robots_df.write.mode("overwrite").parquet(
                 os.path.join(nxt, "robots_state.parquet")
             )
-        if filt_kind == "cuckoo":
+        if cfg.seen_filter == "cuckoo":
             # insert this epoch's committed keys: one store-copy per merged
             # row, one alias-copy per non-self redirect, one attempted-copy
             # per new error — mirrors _cuckoo_multiset's source structure
@@ -1006,7 +1003,7 @@ class Crawl:
             "store_parent_snapshot": store_snap,
             "idmap_parent_snapshot": idmap_snap,
         }
-        if filt_kind == "cuckoo":
+        if cfg.seen_filter == "cuckoo":
             stats["seen_filter_wm"] = wm_now
             stats["seen_filter_format"] = CUCKOO_FORMAT_VERSION
         tmp = os.path.join(edir, "_COMMIT.json.tmp")
@@ -1015,11 +1012,9 @@ class Crawl:
         os.replace(tmp, os.path.join(edir, "_COMMIT.json"))
         if self.cfg.expire_snapshots:
             self._expire_store_snapshots(stats)
-        for df in (results, extracted, ranked, seen_keys, *self._epoch_caches):
+        for df in (results, extracted, ranked, *self._epoch_caches):
             df.unpersist()
         self._epoch_caches = []
-        if bloom is not None:
-            bloom.unpersist()
         return stats
 
     def _expire_store_snapshots(self, stats: dict) -> None:

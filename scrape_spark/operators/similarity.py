@@ -74,22 +74,6 @@ def ann_topk(
     )
 
 
-def hyperplane_signature(
-    vec_col: Column, dim: int, n_planes: int = 16, seed: int = 7
-) -> Column:
-    """Sign-bit bucket id from deterministic random hyperplanes (seeded
-    numpy, materialized as literal arrays → pure JVM evaluation)."""
-    rng = np.random.RandomState(seed)
-    planes = rng.standard_normal((n_planes, dim))
-    vd = F.transform(vec_col, lambda x: x.cast("double"))
-    bucket = F.lit(0).cast("long")
-    for p in range(n_planes):
-        plane = F.array(*[F.lit(float(v)) for v in planes[p]])
-        d = _dot(vd, plane)
-        bucket = bucket + F.when(d > 0, F.shiftleft(F.lit(1).cast("long"), p)).otherwise(F.lit(0).cast("long"))
-    return bucket
-
-
 def ann_topk_lsh(
     corpus: DataFrame,
     queries: DataFrame,

@@ -2,7 +2,7 @@
 single-threaded reference model's per-epoch selected sets, per-host ranks,
 and final seen/store key sets under the same seeds + politeness budget;
 robots disallows are honored; resume from checkpoint is identical; the
-Bloom pre-filter path equals the exact path."""
+cuckoo pre-filter path equals the exact (default) path."""
 
 from __future__ import annotations
 
@@ -47,7 +47,7 @@ def model():
     )
 
 
-def _mk_crawl(spark, tmpdir, pages, use_bloom=True, seen_filter=""):
+def _mk_crawl(spark, tmpdir, pages, seen_filter="none"):
     store = UrlStore(spark, f"{tmpdir}/store", n_buckets=8)
     return Crawl(
         spark,
@@ -57,7 +57,7 @@ def _mk_crawl(spark, tmpdir, pages, use_bloom=True, seen_filter=""):
         robots_table(spark, N_HOSTS),
         CrawlConfig(
             epoch_seconds=EPOCH_SECONDS, max_depth=6, n_buckets=8,
-            use_bloom=use_bloom, seen_filter=seen_filter, shuffle_partitions=4,
+            seen_filter=seen_filter, shuffle_partitions=4,
         ),
     )
 
@@ -121,17 +121,10 @@ def test_error_urls_attempted_once(spark, crawl_run):
     assert (pdf["error"].str.len() > 0).all()
 
 
-def test_bloom_path_equals_exact_path(spark, tmp_path_factory, pages, model):
-    tmpdir = str(tmp_path_factory.mktemp("crawl_exact"))
-    crawl = _mk_crawl(spark, tmpdir, pages, use_bloom=False)
-    crawl.run(N_EPOCHS, seeds=seed_urls(N_HOSTS))
-    got = {r.key for r in crawl.store.urls.read().select("key").collect()}
-    assert got == model.store_keys
-    for epoch in range(N_EPOCHS):
-        assert _selected_tuples(spark, crawl, epoch) == [
-            tuple(t) for t in model.selected_per_epoch[epoch]
-        ]
-    shutil.rmtree(tmpdir, ignore_errors=True)
+@pytest.mark.parametrize("seen_filter", ["bloom", "", "cukoo"])
+def test_unknown_seen_filter_rejected(seen_filter):
+    with pytest.raises(ValueError, match="seen_filter"):
+        CrawlConfig(seen_filter=seen_filter)
 
 
 def test_cuckoo_path_equals_exact_path(spark, tmp_path_factory, pages, model):
@@ -180,7 +173,7 @@ def test_resume_from_checkpoint(spark, tmp_path_factory, pages, model, crawl_run
 def test_epoch_stats_do_not_recompute_pipelines(spark, tmp_path_factory, pages):
     """Round-3 ratchet: the selected/deferred stats must come from the ONE
     cached ranked pipeline (computed before the fetch, doubling as the
-    fetch-join probe-size hint) — not from re-running the Bloom-probe /
+    fetch-join probe-size hint) — not from re-running the seen-set
     anti-join plan. Pinned via total Spark job count per epoch: the
     recompute shape measured ~97 jobs/epoch on this exact workload, the
     single-pass shape ~63. Bound set between with headroom for AQE noise."""
@@ -335,8 +328,8 @@ def test_external_store_writer_triggers_filter_rebuild(spark, tmp_path_factory, 
         return orig_build(*a, **kw)
 
     def run_with_injection(seen_filter, count_builds=False):
-        tmpdir = str(tmp_path_factory.mktemp(f"ext_{seen_filter or 'exact'}"))
-        crawl = _mk_crawl(spark, tmpdir, pages, use_bloom=False, seen_filter=seen_filter)
+        tmpdir = str(tmp_path_factory.mktemp(f"ext_{seen_filter}"))
+        crawl = _mk_crawl(spark, tmpdir, pages, seen_filter=seen_filter)
         crawl.seed(seed_urls(N_HOSTS))
         sel = []
         for epoch in range(N_EPOCHS):
@@ -381,7 +374,7 @@ def test_cuckoo_format_version_mismatch_forces_rebuild(
     import scrape_spark.operators.frontier as fr
 
     tmpdir = str(tmp_path_factory.mktemp("crawl_fmt"))
-    crawl = _mk_crawl(spark, tmpdir, pages, use_bloom=False, seen_filter="cuckoo")
+    crawl = _mk_crawl(spark, tmpdir, pages, seen_filter="cuckoo")
     crawl.seed(seed_urls(N_HOSTS))
     crawl.run_epoch(0)
     crawl.run_epoch(1)
@@ -456,7 +449,7 @@ def test_cuckoo_build_counts_store_copies_per_generation(
         robots_table(spark, N_HOSTS),
         CrawlConfig(
             epoch_seconds=EPOCH_SECONDS, max_depth=6, n_buckets=8,
-            use_bloom=False, seen_filter="cuckoo", shuffle_partitions=4,
+            seen_filter="cuckoo", shuffle_partitions=4,
         ),
     )
     crawl.seed(seed_urls(1))

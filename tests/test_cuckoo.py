@@ -93,10 +93,10 @@ def test_duplicate_copies_then_single_delete():
 
 def test_primary_index_uniform():
     """Regression (round-4 ADVICE): i1 must be drawn from unbiased hash bits.
-    The old ``h2 & mask`` derivation was always ODD (bloom's h2 is forced odd
-    for double hashing), so odd rows carried ~2x load: the builder silently
-    doubled n_slots to converge and incremental inserts hit the eviction wall
-    far below the documented 0.5 target load."""
+    The old ``h2 & mask`` derivation was always ODD (that h2 was a
+    double-hashing step, forced odd), so odd rows carried ~2x load: the
+    builder silently doubled n_slots to converge and incremental inserts hit
+    the eviction wall far below the documented 0.5 target load."""
     k = _keys(100_000)
     n_slots = 1 << 14
     _, i1, i2 = _fingerprints(k, n_slots)

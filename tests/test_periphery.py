@@ -1,4 +1,4 @@
-"""Periphery: multimodal media plumbing, feed source, JSON sink, CSV ingest."""
+"""Periphery: feed source, JSON sink, CSV ingest."""
 
 from __future__ import annotations
 
@@ -11,11 +11,6 @@ from scrape_spark.operators.json_sink import (
     metadata_json_col,
     parse_metadata_json,
     result_json,
-)
-from scrape_spark.operators.media import (
-    extract_media_features,
-    frame_sample,
-    synth_media,
 )
 from scrape_spark.sources.feed import feed_to_requests, parse_feeds
 
@@ -111,126 +106,6 @@ def test_feed_atom_rel_preference(spark):
     links = [i.link for i in row.items]
     # alternate beats self; rel-less IS alternate; lone self is the fallback
     assert links == ["https://ex.test/d1", "https://ex.test/d2", "https://ex.test/self3"]
-
-
-def test_media_features(spark):
-    media = synth_media(spark, 30).cache()
-    feats = extract_media_features(media)
-    rows = {r.media_id: r for r in feats.collect()}
-    assert len(rows) == 30
-    img = rows[0]
-    assert img.format == "png" and img.width and img.height and img.decode_error is None
-    aud = rows[1]
-    assert aud.format == "wav" and aud.sample_rate in {8000 * k for k in range(1, 7)}
-    vid = rows[2]
-    assert vid.format == "fvid" and vid.n_frames >= 2
-    # payload dropped post-extraction, metadata map passes through
-    assert "payload" not in feats.columns
-    assert rows[0].meta["source"].startswith("cam")
-
-
-def test_media_determinism(spark):
-    a = extract_media_features(synth_media(spark, 20, partitions=2)).collect()
-    b = extract_media_features(synth_media(spark, 20, partitions=5)).collect()
-    assert sorted(map(str, a)) == sorted(map(str, b))
-
-
-def test_frame_sampling(spark):
-    media = synth_media(spark, 30)
-    frames = frame_sample(media, every_k=2)
-    pdf = frames.toPandas()
-    assert (pdf.frame_idx % 2 == 0).all()
-    assert (pdf.frame_bytes.str.len() == 32).all()
-
-
-def test_real_decode_uncompressed_formats(spark):
-    """decode_backend='real' fully decodes the uncompressed formats with
-    pure numpy — BMP/PPM pixel means, WAV PCM16 duration + RMS (a 0.5-FS
-    sine ⇒ RMS = 0.5/√2), raw-frame video — while compressed codecs (PNG)
-    degrade to decode_error rows, never exceptions."""
-    rows = {
-        r.media_id: r
-        for r in extract_media_features(
-            synth_media(spark, 36), decode_backend="real"
-        ).collect()
-    }
-    bmp = rows[3]
-    assert bmp.format == "bmp" and bmp.width == 8 + (3 % 5) * 4
-    assert 90 < bmp.pixel_mean < 165          # uniform random bytes ⇒ ~127.5
-    ppm = rows[4]
-    assert ppm.format == "ppm" and 90 < ppm.pixel_mean < 165
-    wav = rows[1]
-    assert wav.format == "wav"
-    assert abs(wav.duration_s - 0.1) < 1e-9   # sr//10 samples at sr Hz
-    assert abs(wav.sample_rms - 0.5 / 2**0.5) < 1e-3
-    vid = rows[2]
-    assert vid.format == "fvid" and vid.pixel_mean is not None
-    # PNG: REAL deflate decode via stdlib zlib + row unfilter — pixel_mean
-    # pinned against the generator's own pixel array (seed 0, mixed filters)
-    png = rows[0]
-    assert png.format == "png" and png.decode_error is None
-    import numpy as np
-
-    rng = np.random.RandomState(0)
-    want_px = rng.randint(0, 256, size=(6, 8, 3), dtype=np.int64).astype(np.uint8)
-    assert abs(png.pixel_mean - float(want_px.astype(np.float64).mean())) < 1e-12
-    # header backend: same rows, no deep stats, no errors on known formats
-    hdr = {
-        r.media_id: r
-        for r in extract_media_features(synth_media(spark, 36)).collect()
-    }
-    assert hdr[3].pixel_mean is None and hdr[1].sample_rms is None
-    assert hdr[0].decode_error is None
-
-
-def test_png_decode_roundtrip_and_unsupported_variants():
-    """The zlib PNG path: (a) every row filter 0-4 reconstructs the exact
-    source pixels; (b) variants outside the common case (interlaced,
-    16-bit) degrade to 'codec not available', never exceptions; (c) a
-    corrupt IDAT is a decode-error row."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    from scrape_spark.operators.media import (
-        PNG_SIG,
-        _decode_one,
-        _png_real,
-    )
-
-    b = _png_real(11, 9, seed=42)  # odd sizes: exercises lane remainders
-    rng = np.random.RandomState(42)
-    want = rng.randint(0, 256, size=(9, 11, 3), dtype=np.int64).astype(np.uint8)
-    got = _decode_one(b, deep=True)
-    assert got.get("decode_error") is None
-    assert got["width"] == 11 and got["height"] == 9
-    assert got["pixel_mean"] == float(want.astype(np.float64).mean())
-
-    def chunk(typ, data):
-        return (
-            struct.pack(">I", len(data)) + typ + data
-            + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF)
-        )
-
-    # interlaced (Adam7) and 16-bit: header parses, deep decode declines
-    for depth, inter in ((8, 1), (16, 0)):
-        ihdr = struct.pack(">IIBBBBB", 4, 4, depth, 2, 0, 0, inter)
-        pb = PNG_SIG + chunk(b"IHDR", ihdr) + chunk(b"IDAT", b"xx") + chunk(b"IEND", b"")
-        r = _decode_one(pb, deep=True)
-        assert r["width"] == 4 and "codec not available" in r["decode_error"]
-        assert _decode_one(pb, deep=False).get("decode_error") is None
-    # corrupt IDAT
-    ihdr = struct.pack(">IIBBBBB", 4, 4, 8, 2, 0, 0, 0)
-    pb = PNG_SIG + chunk(b"IHDR", ihdr) + chunk(b"IDAT", b"not-deflate") + chunk(b"IEND", b"")
-    r = _decode_one(pb, deep=True)
-    assert "decode error" in r["decode_error"]
-
-
-def test_real_decode_is_deterministic(spark):
-    a = extract_media_features(synth_media(spark, 24, partitions=2), decode_backend="real").collect()
-    b = extract_media_features(synth_media(spark, 24, partitions=5), decode_backend="real").collect()
-    assert sorted(map(str, a)) == sorted(map(str, b))
 
 
 def test_json_sink_omitempty_and_notext(spark):
