@@ -9,7 +9,7 @@ import json
 
 import pytest
 
-from scrape_spark.cli import main
+from scrape_spark.cli import build_parser, main
 from scrape_spark.sources.pages import page_url, synth_pages
 
 
@@ -466,3 +466,23 @@ def test_robots_ttl_argument_bounds(capsys):
     assert main(["crawl", "--pages", "x", "--state", "s", "--store", "t",
                  "--robots-ttl-epochs", "0", "u"]) == 2
     assert ">= 1" in capsys.readouterr().err
+
+
+_CRAWL_ARGS = ["crawl", "--pages", "x", "--state", "s", "--store", "t"]
+
+
+def test_crawl_seen_filter_defaults_to_exact():
+    assert build_parser().parse_args(_CRAWL_ARGS + ["u"]).seen_filter == "none"
+
+
+@pytest.mark.parametrize("seen_filter", ["none", "cuckoo"])
+def test_crawl_seen_filter_choices(seen_filter):
+    args = build_parser().parse_args(_CRAWL_ARGS + ["--seen-filter", seen_filter, "u"])
+    assert args.seen_filter == seen_filter
+
+
+def test_crawl_seen_filter_rejects_bloom(capsys):
+    with pytest.raises(SystemExit) as exc:
+        main(_CRAWL_ARGS + ["--seen-filter", "bloom", "u"])
+    assert exc.value.code == 2
+    assert "invalid choice: 'bloom'" in capsys.readouterr().err

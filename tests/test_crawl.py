@@ -127,6 +127,11 @@ def test_unknown_seen_filter_rejected(seen_filter):
         CrawlConfig(seen_filter=seen_filter)
 
 
+@pytest.mark.parametrize("seen_filter", ["none", "cuckoo"])
+def test_known_seen_filter_accepted(seen_filter):
+    assert CrawlConfig(seen_filter=seen_filter).seen_filter == seen_filter
+
+
 def test_cuckoo_path_equals_exact_path(spark, tmp_path_factory, pages, model):
     """The incrementally-maintained cuckoo pre-filter must reproduce the
     exact path's crawl bit-for-bit: same per-epoch selected tuples, same

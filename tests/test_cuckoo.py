@@ -109,6 +109,19 @@ def test_primary_index_uniform():
         assert counts.max() < 1.1 * counts.mean(), counts.max()
 
 
+def test_fingerprints_pinned_for_format_version():
+    """Persisted filters are only reused while CUCKOO_FORMAT_VERSION matches,
+    so (fp, i1, i2) per key must not drift without a version bump. Pinned
+    values for format 2 include key 0, whose hashed fp is 0 and takes the
+    nonzero substitute, and negative keys."""
+    assert CUCKOO_FORMAT_VERSION == 2
+    keys = np.array([0, 1, 42, -1, 2**62 + 12345, -(2**40) - 7], dtype=np.int64)
+    fp, i1, i2 = _fingerprints(keys, 1 << 10)
+    assert fp.tolist() == [23505, 22162, 42841, 46288, 51203, 11542]
+    assert i1.tolist() == [0, 485, 546, 379, 516, 102]
+    assert i2.tolist() == [345, 522, 234, 387, 734, 274]
+
+
 def test_build_converges_at_sized_slots():
     """With unbiased i1 the builder must converge at the documented sizing
     (no silent table doubling = the ~16 B/key docstring claim holds)."""
