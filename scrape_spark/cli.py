@@ -341,58 +341,13 @@ def cmd_crawl(args) -> int:
     )
     seeds = list(args.seeds) or None
     if args.sitemaps and crawl.last_committed_epoch() is None:
-        # sitemap-derived seeding (sources/sitemap.py): entries stay a
-        # DataFrame end-to-end — a 10^8-URL sitemap seed never transits
-        # the driver. Explicit positional seeds may add on top.
-        from scrape_spark.sources.sitemap import (
-            corpus_fetcher,
-            expand_sitemap_entries,
-            parse_sitemaps,
-            seed_frontier_entries,
-        )
-
-        from pyspark.sql import functions as _F
-
-        def _uh(df):  # (url, html<binary>) — string html casts to UTF-8 bytes
-            return df.select("url", _F.col("html").cast("binary").alias("html"))
-
-        sm_pages = _uh(spark.read.parquet(args.sitemaps))
-        entries = parse_sitemaps(sm_pages)
-        # <sitemapindex> recursion: nested sitemaps resolve from the given
-        # parquet + the pages corpus, or over the network in --live mode
-        if pages is not None:
-            fetch_fn = corpus_fetcher(sm_pages.unionByName(_uh(pages)))
-        else:
-            from scrape_spark.sources.live import fetch_pages
-
-            fetch_fn = lambda u: fetch_pages(u, live)  # noqa: E731
-        sm_caches: list = []
-        entries = expand_sitemap_entries(entries, fetch_fn, caches=sm_caches)
-        frontier = seed_frontier_entries(entries)
-        if seeds:
-            from scrape_spark.functions.urlkeys import clean_url, hostname_col, url_key
-            from pyspark.sql import functions as F
-
-            extra = (
-                spark.createDataFrame([(u,) for u in seeds], ["raw"])
-                .select(clean_url("raw").alias("url"))
-                .withColumn("key", url_key("url"))
-                .withColumn("host", hostname_col(F.col("url")))
-                .withColumn("depth", F.lit(0))
-                .withColumn("priority", F.lit(0).cast("long"))
-                .withColumn("discovered_epoch", F.lit(0))
-            )
-            frontier = frontier.unionByName(
-                extra.select(*frontier.columns)
-            ).dropDuplicates(["key"])
-        crawl.seed_df(frontier)
-        for df in sm_caches:
-            df.unpersist()
-        if not crawl.seeded_frontier_nonempty():
-            # a sitemaps parquet that yields zero url entries (wrong/empty
-            # XML, unresolvable index refs) must fail loudly, not "finish"
-            # a 0-page crawl successfully
-            print("--sitemaps produced no seed URLs", file=sys.stderr)
+        # sitemap XML pages seed epoch 0, positional seeds on top; a
+        # sitemaps parquet with no page entries fails loudly instead of
+        # "finishing" a 0-page crawl
+        try:
+            crawl.seed(seeds or [], sitemaps=spark.read.parquet(args.sitemaps))
+        except ValueError as e:
+            print(f"--sitemaps: {e}", file=sys.stderr)
             return 2
         seeds = None
     for stats in crawl.run(args.epochs, seeds=seeds):
@@ -677,7 +632,11 @@ def build_parser() -> argparse.ArgumentParser:
                     help="live connections per task")
     cr.add_argument("--state", required=True, help="crawl state/checkpoint dir")
     cr.add_argument("--store", required=True, help="url store dir")
-    cr.add_argument("--robots", default=None, help="rules parquet (host, disallow, crawl_delay)")
+    cr.add_argument(
+        "--robots", default=None,
+        help="rules parquet: plain path prefixes (host, disallow array<string>, "
+        "crawl_delay) or parsed rules (host, disallow, allow, crawl_delay)",
+    )
     cr.add_argument(
         "--robots-txt", default=None, help="raw robots parquet (host, robots_txt) — RFC 9309 parsed"
     )

@@ -5,8 +5,16 @@ The reference processes batches in input order with no pacing (rate limiting
 is an acknowledged TODO, internal/scrape.go:143). This engine adds, with
 public-spec semantics:
 
-- **Robots exclusion** (RFC 9309 shape): per-host disallow path-prefixes;
-  denied URLs are dropped permanently and counted in metrics.
+- **Robots exclusion** (RFC 9309 shape): per-host allow/disallow rules in
+  one table shape (``sources.robots.ROBOTS_RULES_SCHEMA``) and one matcher
+  (``denied_expr``); a supplied plain-prefix table is converted once, at
+  construction. The robots join carries no broadcast hint: Spark sizes it
+  (``spark.sql.autoBroadcastJoinThreshold``) from the table's real size —
+  discovered rules are written to the epoch checkpoint before the join.
+  Denied URLs are dropped permanently and counted in metrics.
+- **Frontier rows**: seeds, sitemap entries and outlinks all become
+  frontier rows through :func:`frontier_rows`, which keeps the row with
+  the lowest (depth, priority, discovered_epoch) per key.
 - **Crawl-delay token budget**: per epoch of `epoch_seconds`, a host with
   crawl_delay d gets ⌊epoch_seconds / d⌋ slots (min 1). Enforced as a
   rank-per-host window — stateless per epoch, state lives in the frontier.
@@ -45,7 +53,7 @@ from __future__ import annotations
 import json
 import os
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -53,10 +61,9 @@ from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
 from scrape_spark.functions.urlkeys import (
-    clean_url,
+    clean_and_key,
     hostname_col,
     salted_host_hash,
-    url_key,
 )
 from scrape_spark.operators.cuckoo import (
     CUCKOO_FORMAT_VERSION,
@@ -67,13 +74,21 @@ from scrape_spark.operators.cuckoo import (
     update_cuckoo,
 )
 from scrape_spark.operators.store import REQUESTED_KEY, UrlStore
-from scrape_spark.plans.batch_extract import (
-    IMPLAUSIBLE_SIZE_BYTES,
-    _plan_size_bytes,
-    fetch_join,
-    finalize_results,
-)
+from scrape_spark.plans.batch_extract import fetch_join, finalize_results
 from scrape_spark.schemas import FRONTIER_SCHEMA
+from scrape_spark.sources.robots import (
+    ROBOTS_RULES_SCHEMA,
+    as_rules,
+    denied_expr,
+    parse_robots,
+)
+from scrape_spark.sources.sitemap import (
+    corpus_fetcher,
+    expand_sitemap_entries,
+    hint_priority_rows,
+    parse_sitemaps,
+    sitemap_urls_from_robots,
+)
 
 ATTEMPTED_SCHEMA = T.StructType(
     [
@@ -86,14 +101,6 @@ ATTEMPTED_SCHEMA = T.StructType(
 
 DEFAULT_CRAWL_DELAY = 1.0
 
-# conservative per-row byte estimates for the robots-discovery broadcast
-# gates: a probe row is (host, __rurl) strings; a parsed rules row is host +
-# allow/disallow struct arrays (robots.txt bodies run to hundreds of rules).
-# Both deliberately overestimate — the failure mode of a low estimate is a
-# driver/executor OOM, of a high one a plain AQE equi-join.
-ROBOTS_PROBE_ROW_BYTES = 128
-ROBOTS_HOST_RULES_BYTES = 2048
-
 # store-commit ops this crawl itself authors; anything else in the manifest
 # parent chain between two epoch pins means a foreign writer touched the
 # store and the persistent seen-filter can no longer be advanced
@@ -101,6 +108,26 @@ ROBOTS_HOST_RULES_BYTES = 2048
 _CRAWL_STORE_OPS = {"crawl_merge", "crawl_compact"}
 
 SEEN_FILTERS = ("none", "cuckoo")
+
+
+def frontier_rows(raw: DataFrame) -> DataFrame:
+    """(raw, depth, priority, discovered_epoch) rows → FRONTIER_SCHEMA: each
+    URL is cleaned, keyed and hosted, and each key keeps exactly one row —
+    the lowest (depth, priority, discovered_epoch), with the cleaned URL as
+    the last tie-break, so the result never depends on partition order."""
+    best = F.min(F.struct("depth", "priority", "discovered_epoch", "url"))
+    return (
+        raw.withColumn("__ck", clean_and_key("raw"))
+        .select(
+            F.col("__ck.key").alias("key"), F.col("__ck.parsed_url").alias("url"),
+            "depth", "priority", "discovered_epoch",
+        )
+        .groupBy("key")
+        .agg(best.alias("__b"))
+        .select("key", "__b.*")
+        .withColumn("host", hostname_col(F.col("url")))
+        .select(*FRONTIER_SCHEMA.fieldNames())
+    )
 
 
 @dataclass
@@ -137,8 +164,6 @@ class CrawlConfig:
     # set; "cuckoo" = persistent cuckoo pre-filter + bucket-pruned confirm
     seen_filter: str = "none"
     shuffle_partitions: int | None = None
-    salt: int = 0x5CA1E
-    extra: dict = field(default_factory=dict)
 
     def __post_init__(self):
         if self.seen_filter not in SEEN_FILTERS:
@@ -167,7 +192,8 @@ class Crawl:
         live=None,
     ):
         """``robots`` may be a pre-supplied rules table (parsed RFC 9309
-        rules or legacy disallow-prefix arrays), or None — then the crawl
+        rules, or plain disallow-prefix arrays — converted once here to the
+        parsed shape by ``sources.robots.as_rules``), or None — then the crawl
         DISCOVERS robots.txt from the corpus itself: each epoch it fetches
         ``https://<host>/robots.txt`` for hosts newly seen in the frontier
         (through the same corpus equi-join every fetch uses), parses them
@@ -189,7 +215,7 @@ class Crawl:
         self.store = store
         self.pages = pages
         self.live = live
-        self.robots = robots.cache() if robots is not None else None
+        self.robots = as_rules(robots).cache() if robots is not None else None
         self.cfg = config or CrawlConfig()
         self._epoch_caches: list[DataFrame] = []
         self._robots_delta_hosts = 0  # set per-epoch by _robots_for_epoch
@@ -215,50 +241,69 @@ class Crawl:
             return json.load(f)
 
     # ---- seeding -----------------------------------------------------------
-    def seed(self, urls: list[str]) -> None:
-        """Write epoch 0's frontier from a seed list (depth 0, priority 0)."""
-        df = self.spark.createDataFrame([(u,) for u in urls], ["raw"])
-        frontier = (
-            df.select(clean_url("raw").alias("url"))
-            .withColumn("key", url_key("url"))
-            .withColumn("host", hostname_col(F.col("url")))
-            .withColumn("depth", F.lit(0))
-            .withColumn("priority", F.lit(0).cast("long"))
-            .withColumn("discovered_epoch", F.lit(0))
-            .dropDuplicates(["key"])
-            .select(*FRONTIER_SCHEMA.fieldNames())
+    def seed(self, urls: list[str], sitemaps: DataFrame | None = None) -> None:
+        """Write epoch 0's frontier: each seed URL at depth 0, priority 0,
+        plus — given ``sitemaps``, a (url, html) frame of sitemap XML pages —
+        every sitemap page entry at depth 0 with its hint priority
+        (``<sitemapindex>`` references resolve through :meth:`_fetcher`;
+        in corpus mode the given pages count as fetched). Entries stay a
+        DataFrame end to end, so a 10^8-URL sitemap seed never transits the
+        driver. A URL listed twice keeps its lowest (depth, priority) row.
+        Raises ValueError when the sitemaps yield no seed URL."""
+        raw = self.spark.createDataFrame(
+            [(u, 0, 0, 0) for u in urls],
+            "raw string, depth int, priority long, discovered_epoch int",
         )
-        self._write_seed(frontier, {"n_seeds": len(urls)})
-
-    def seed_df(self, frontier: DataFrame) -> None:
-        """Write epoch 0's frontier from FRONTIER_SCHEMA rows — the scale
-        path for seed sets too big to pass through the driver as a list
-        (e.g. sitemap-derived seeds: sources/sitemap.py::
-        seed_frontier_entries). Rows must already be keyed/deduped; the
-        epoch loop's own dedupe still guards."""
-        self._write_seed(
-            frontier.select(*FRONTIER_SCHEMA.fieldNames()), {"n_seeds": "df"}
-        )
-
-    def seeded_frontier_nonempty(self) -> bool:
-        """True when the written epoch-0 frontier holds at least one row —
-        a DataFrame seeding path (seed_df) can legitimately produce zero
-        rows and callers should fail loudly rather than run a 0-page crawl.
-        One cheap Spark job (a one-row limit scan), run once at startup."""
-        path = os.path.join(self._edir(0), "frontier.parquet")
-        return (
-            os.path.isdir(path)
-            and self.spark.read.parquet(path).limit(1).count() > 0
-        )
-
-    def _write_seed(self, frontier: DataFrame, marker: dict) -> None:
         edir = self._edir(0)
-        frontier.write.mode("overwrite").parquet(os.path.join(edir, "frontier.parquet"))
+        caches: list[DataFrame] = []
+        try:
+            if sitemaps is not None:
+                sm_pages = sitemaps.select(
+                    "url", F.col("html").cast("binary").alias("html")
+                )
+                sm_rows = self._sitemap_rows(
+                    sm_pages, self._fetcher(extra=sm_pages),
+                    depth=0, discovered_epoch=0, max_levels=5, caches=caches,
+                )
+                if sm_rows.limit(1).count() == 0:
+                    raise ValueError("sitemaps produced no seed URLs")
+                raw = raw.unionByName(sm_rows)
+            frontier_rows(raw).write.mode("overwrite").parquet(
+                os.path.join(edir, "frontier.parquet")
+            )
+        finally:
+            for df in caches:
+                df.unpersist()
         self.spark.createDataFrame([], ATTEMPTED_SCHEMA).write.mode("overwrite").parquet(
             os.path.join(edir, "attempted.parquet")
         )
         with open(os.path.join(edir, "_SEED.json"), "w") as f:
-            json.dump(marker, f)
+            json.dump({"n_seeds": len(urls), "sitemaps": sitemaps is not None}, f)
+
+    def _fetcher(self, extra: DataFrame | None = None):
+        """``urls_df -> (url, html)`` for sitemap pages: the executors' HTTP
+        fetch in live mode, else a join against the pages corpus (plus the
+        ``extra`` (url, html) pages, when given)."""
+        if self.live is not None:
+            from scrape_spark.sources.live import fetch_pages
+
+            return lambda urls: fetch_pages(urls, self.live).select("url", "html")
+        pages = self.pages.select("url", F.col("html").cast("binary").alias("html"))
+        return corpus_fetcher(pages if extra is None else extra.unionByName(pages))
+
+    def _sitemap_rows(
+        self, sm_pages: DataFrame, fetch, depth: int, discovered_epoch: int,
+        max_levels: int, caches: list,
+    ) -> DataFrame:
+        """Sitemap XML pages → frontier input rows for every page entry,
+        following ``<sitemapindex>`` references through ``fetch``. The
+        initial parse is persisted: it feeds three subtrees of the
+        expansion and, in live mode, recomputing it would re-fetch every
+        sitemap over the network. Persisted frames go to ``caches``."""
+        base = parse_sitemaps(sm_pages).persist()
+        caches.append(base)
+        entries = expand_sitemap_entries(base, fetch, max_levels=max_levels, caches=caches)
+        return hint_priority_rows(entries, depth, discovered_epoch)
 
     # ---- seen-set probe ----------------------------------------------------
     def _unseen(self, frontier: DataFrame, pre_filter: DataFrame | None, confirm) -> DataFrame:
@@ -423,19 +468,6 @@ class Crawl:
         )
 
     # ---- corpus-discovered robots ------------------------------------------
-    def _robots_state_bytes(self, epoch: int) -> int:
-        """On-disk bytes of the accumulated robots state — the part of the
-        discovered-robots table that grows across epochs (this epoch's delta
-        is bounded by the new-host probe). Feeds the broadcast size gate."""
-        path = os.path.join(self._edir(epoch), "robots_state.parquet")
-        if not os.path.isdir(path):
-            return 0
-        return sum(
-            os.path.getsize(os.path.join(path, f))
-            for f in os.listdir(path)
-            if not f.startswith(("_", "."))
-        )
-
     def _robots_for_epoch(self, epoch: int, frontier: DataFrame) -> DataFrame:
         """Robots discovery (robots=None mode): fetch /robots.txt for hosts
         newly seen in the frontier from the pages corpus, parse (RFC 9309,
@@ -443,17 +475,13 @@ class Crawl:
         host in the epoch checkpoint. Per-epoch cost ∝ NEW hosts: the
         accumulated state is a host-dimension table; the fetch streams the
         corpus against the missing-host probe (the same zero-corpus-shuffle
-        decomposition the fetch join uses). The probe is counted (one
-        host-dimension aggregate) and that count does double duty: it gates
-        the probe's own broadcast (a frontier explosion can add millions of
-        new hosts in one epoch — then the probe side must not broadcast
-        either; AQE picks the strategy), and it bounds THIS epoch's rules
-        delta for run_epoch's robots broadcast gate (the on-disk state bytes
-        alone are stale by exactly one epoch's delta — epoch 0 has no state
-        file at all, which used to read as 0 bytes ⇒ broadcast
-        unconditionally on the largest discovery epoch). A host with no
-        robots.txt page gets an allow-all row once and (TTL aside) is never
-        refetched.
+        decomposition the fetch join uses). The probe is cached and counted
+        (one host-dimension aggregate); the count lets the sitemap harvest
+        skip epochs with no new host. No join here carries a broadcast hint:
+        Spark plans the cached probe's join from its real size, so a
+        frontier that adds millions of new hosts in one epoch simply gets a
+        shuffle join. A host with no robots.txt page gets an allow-all row
+        once and (TTL aside) is never refetched.
 
         ``cfg.robots_ttl_epochs`` (RFC 9309 §2.4 allows caching, commonly
         bounded to ~24h): when set, rules older than that many epochs are
@@ -462,8 +490,6 @@ class Crawl:
         cost ∝ expired-and-active hosts, still never O(corpus). Expired
         hosts absent from the frontier simply leave the state. Rows from a
         pre-TTL checkpoint have a NULL robots_epoch and refetch once."""
-        from scrape_spark.sources.robots import ROBOTS_RULES_SCHEMA, parse_robots
-
         state_schema = T.StructType(
             list(ROBOTS_RULES_SCHEMA.fields)
             + [T.StructField("robots_epoch", T.IntegerType(), True)]
@@ -510,8 +536,6 @@ class Crawl:
         )
         self._epoch_caches.append(missing)
         self._robots_delta_hosts = missing.count()
-        probe_cap = max(1, self.store.broadcast_threshold_bytes // ROBOTS_PROBE_ROW_BYTES)
-        probe = F.broadcast(missing) if self._robots_delta_hosts <= probe_cap else missing
         if self.live is not None:
             # Live mode: fetch /robots.txt for the new hosts over the real
             # network (cost ∝ new hosts by construction — the request set IS
@@ -546,13 +570,13 @@ class Crawl:
             else F.col("html").cast("string")
         )
         corpus = self.pages.select(F.col("url").alias("__rurl"), body.alias("robots_txt"))
-        # hosts WITH a robots.txt page: inner probe join — broadcast when the
-        # probe count allows, so the corpus streams in place with zero corpus
+        # hosts WITH a robots.txt page: inner probe join — a small probe
+        # broadcasts, so the corpus streams in place with zero corpus
         # shuffle. Cached because both union arms below reference it (the
         # absent-host derivation must not trigger a second corpus scan);
         # host-dimension rows, bounded by the probe.
         found = (
-            corpus.join(probe, "__rurl", "inner")
+            corpus.join(missing, "__rurl", "inner")
             .select("host", "robots_txt")
             .cache()
         )
@@ -578,19 +602,12 @@ class Crawl:
         processed exactly once, the epoch their robots.txt is first
         fetched), fetch + parse the advertised sitemaps (index recursion
         capped at one nested level, per the protocol), and return their
-        page URLs as frontier rows at depth 1. Returns None when the stage
-        has nothing to do — zero new hosts, or no Sitemap lines — WITHOUT
-        touching the corpus (the two probes are host-dimension counts)."""
+        page URLs as frontier input rows at depth 1. Returns None when the
+        stage has nothing to do — zero new hosts, or no Sitemap lines —
+        WITHOUT touching the corpus (the two probes are host-dimension
+        counts)."""
         if self._robots_raw_delta is None or self._robots_delta_hosts == 0:
             return None
-        from scrape_spark.sources.sitemap import (
-            corpus_fetcher,
-            expand_sitemap_entries,
-            parse_sitemaps,
-            seed_frontier_entries,
-            sitemap_urls_from_robots,
-        )
-
         # genuinely-new hosts only: a robots TTL refetch puts known hosts
         # back in the raw delta, but their sitemaps were already harvested
         # the epoch they first appeared
@@ -608,30 +625,10 @@ class Crawl:
         self._epoch_caches.append(sm_urls)
         if sm_urls.limit(1).count() == 0:
             return None
-        if self.live is not None:
-            from scrape_spark.sources.live import fetch_pages
-
-            def fetch_fn(u):
-                return fetch_pages(u, self.live).select("url", "html")
-        else:
-            fetch_fn = corpus_fetcher(
-                self.pages.select(
-                    "url", F.col("html").cast("binary").alias("html")
-                )
-            )
-        # persist the initial parse too: the entries frame feeds three
-        # subtrees inside the expansion (out/visited/pending) and, in live
-        # mode, recomputing it would re-fetch every sitemap over the network
-        base = parse_sitemaps(fetch_fn(sm_urls)).persist()
-        self._epoch_caches.append(base)
-        entries = expand_sitemap_entries(
-            base, fetch_fn, max_levels=2, caches=self._epoch_caches
-        )
-        return (
-            seed_frontier_entries(entries)
-            .withColumn("depth", F.lit(1))
-            .withColumn("discovered_epoch", F.lit(epoch + 1))
-            .select(*FRONTIER_SCHEMA.fieldNames())
+        fetch = self._fetcher()
+        return self._sitemap_rows(
+            fetch(sm_urls), fetch, depth=1, discovered_epoch=epoch + 1,
+            max_levels=2, caches=self._epoch_caches,
         )
 
     def _live_epoch_pages(self, epoch: int, to_fetch: DataFrame) -> DataFrame:
@@ -744,57 +741,25 @@ class Crawl:
             def confirm(maybe):
                 return maybe.join(seen_keys, "key", "left_anti")
 
-        # 1. robots exclusion. Three sources: a pre-supplied parsed-rules
-        # table (array<struct<plen,like>> from sources.robots.parse_robots —
-        # full allow/disallow longest-match precedence + wildcards), a legacy
-        # plain disallow-prefix table, or — robots=None — rules DISCOVERED
-        # from the corpus's own /robots.txt pages and accumulated in the
-        # checkpoint (cost ∝ new hosts/epoch).
+        # 1. robots exclusion: one rules shape, one matcher. A supplied
+        # table was converted at construction; with robots=None the rules
+        # are DISCOVERED from the corpus's own /robots.txt pages (cost ∝ new
+        # hosts/epoch) and written to the next epoch's checkpoint BEFORE the
+        # join — resume replays the identical rules table, and the join
+        # reads a file whose real size lets Spark pick the strategy. No
+        # broadcast hint: the rules table grows with discovered hosts.
         if self.robots is None:
-            robots_df = self._robots_for_epoch(epoch, frontier).cache()
-            self._epoch_caches.append(robots_df)
-            # the discovered table is last epoch's on-disk state PLUS this
-            # epoch's delta. The state bytes alone are stale by one epoch
-            # (and 0 on epoch 0, when the delta — every seed host — is the
-            # whole table), so add a conservative per-host bound on the
-            # delta, counted inside _robots_for_epoch.
-            robots_bytes = (
-                self._robots_state_bytes(epoch)
-                + self._robots_delta_hosts * ROBOTS_HOST_RULES_BYTES
+            robots_path = os.path.join(self._edir(epoch + 1), "robots_state.parquet")
+            self._robots_for_epoch(epoch, frontier).write.mode("overwrite").parquet(
+                robots_path
             )
+            robots_df = self.spark.read.parquet(robots_path)
         else:
             robots_df = self.robots
-            robots_bytes = _plan_size_bytes(robots_df)
-            if robots_bytes is not None and robots_bytes >= IMPLAUSIBLE_SIZE_BYTES:
-                robots_bytes = None  # stat-less plan ⇒ unknown, not huge
-        # Size-gated broadcast — same discipline as resolve_keys' id_map
-        # (store.py): the robots table is host-dimension state that GROWS
-        # with discovered hosts; at 10^7-10^8 hosts × rule arrays an
-        # unconditional broadcast is a driver/executor OOM. Broadcast only
-        # when provably small (None = unknown ⇒ don't); otherwise a plain
-        # equi-join on host and AQE picks the physical strategy.
-        robots_join_side = robots_df
-        if (
-            robots_bytes is not None
-            and robots_bytes <= self.store.broadcast_threshold_bytes
-        ):
-            robots_join_side = F.broadcast(robots_df)
-        fr = frontier.join(robots_join_side, "host", "left")
         path = F.regexp_replace(F.col("url"), r"^https?://[^/]*", "")
-        fields = {f.name: f.dataType for f in robots_df.schema.fields}
-        dis_t = fields.get("disallow")
-        if isinstance(dis_t, T.ArrayType) and isinstance(dis_t.elementType, T.StructType):
-            from scrape_spark.sources.robots import denied_expr
-
-            allow = F.col("allow") if "allow" in fields else F.lit(None).cast(dis_t)
-            denied = denied_expr(path, F.col("disallow"), allow)
-        else:
-            denied = F.exists(
-                F.coalesce(F.col("disallow"), F.array()),
-                lambda p: path.startswith(p),
-            )
-        fr = fr.withColumn("__denied", denied)
-        robots_denied = fr.filter(F.col("__denied"))
+        fr = frontier.join(robots_df, "host", "left").withColumn(
+            "__denied", denied_expr(path, F.col("disallow"), F.col("allow"))
+        )
         allowed = fr.filter(~F.col("__denied")).drop("__denied")
 
         # 2. seen-set anti-join (pre-filter + exact confirm)
@@ -837,7 +802,7 @@ class Crawl:
             selected.withColumn("request_error", F.lit(None).cast("string"))
             .withColumn("original_url", F.col("url"))
             .withColumn("parsed_url", F.col("url"))
-            .repartition(n_part, salted_host_hash("host", cfg.salt))
+            .repartition(n_part, salted_host_hash("host"))
         )
         if self.live is not None:
             # Live mode: THIS epoch's selected URLs fetched over the real
@@ -866,16 +831,19 @@ class Crawl:
         # discovered-robots mode, sitemap-advertised URLs for this epoch's
         # NEW hosts (host-curated discovery; their hint-derived priorities
         # are negative, so they rank ahead of depth-priority outlinks)
-        links = self._shape_links(
+        raw_links = (
             extracted.filter(F.col("extract_error").isNull())
             .filter(F.col("__page_url").isNotNull())
-            .select("depth", "links"),
-            epoch,
+            .select(F.explode("links").alias("raw"), (F.col("depth") + 1).alias("depth"))
+            .where(F.col("raw").isNotNull())
+            .withColumn("priority", F.col("depth").cast("long"))
+            .withColumn("discovered_epoch", F.lit(epoch + 1))
         )
         if cfg.discover_sitemaps and self.robots is None:
             sm_rows = self._sitemap_links_for_epoch(epoch)
             if sm_rows is not None:
-                links = links.unionByName(sm_rows)
+                raw_links = raw_links.unionByName(sm_rows)
+        links = frontier_rows(raw_links)
 
         # 6. merges + next frontier (dedupe by key, min depth wins). The
         # crawl marks its own store commits so the seen-filter loader can
@@ -944,12 +912,6 @@ class Crawl:
         nxt = self._edir(epoch + 1)
         next_frontier.write.mode("overwrite").parquet(os.path.join(nxt, "frontier.parquet"))
         new_attempted.write.mode("overwrite").parquet(os.path.join(nxt, "attempted.parquet"))
-        if self.robots is None:
-            # discovered-robots state rides the checkpoint like frontier/
-            # attempted: resume replays the identical rules table
-            robots_df.write.mode("overwrite").parquet(
-                os.path.join(nxt, "robots_state.parquet")
-            )
         if cfg.seen_filter == "cuckoo":
             # insert this epoch's committed keys: one store-copy per merged
             # row, one alias-copy per non-self redirect, one attempted-copy
@@ -1037,25 +999,6 @@ class Crawl:
             keep = len([s for s in table.snapshots() if s >= floor])
             table.expire_snapshots(keep_last=keep)
 
-    def _shape_links(self, ext: DataFrame, epoch: int) -> DataFrame:
-        """Shape harvested hrefs as frontier rows at depth+1:
-        canonicalize → key → host → dedupe by key."""
-        out = (
-            ext.select("depth", F.explode_outer("links").alias("raw"))
-            .where(F.col("raw").isNotNull())
-            .select(clean_url("raw").alias("url"), (F.col("depth") + 1).alias("depth"))
-            .withColumn("key", url_key("url"))
-            .withColumn("host", hostname_col(F.col("url")))
-            # same key ⇒ same cleaned URL; dedupe keeps the MIN depth so the
-            # BFS frontier is deterministic regardless of partition order
-            .groupBy("key", "url", "host")
-            .agg(F.min("depth").cast("int").alias("depth"))
-            .withColumn("priority", F.col("depth").cast("long"))
-            .withColumn("discovered_epoch", F.lit(epoch + 1))
-            .select(*FRONTIER_SCHEMA.fieldNames())
-        )
-        return out
-
     # ---- driver loop ----------------------------------------------------------
     def run(self, n_epochs: int, seeds: list[str] | None = None) -> list[dict]:
         """Run/resume the crawl. With seeds given and no committed state,
@@ -1064,7 +1007,7 @@ class Crawl:
         if last is None:
             seeded = os.path.exists(os.path.join(self._edir(0), "_SEED.json"))
             if seeds is None and not seeded:
-                raise ValueError("fresh crawl needs seeds (or a prior seed_df)")
+                raise ValueError("fresh crawl needs seeds (or a prior seed())")
             if seeds is not None and not seeded:
                 self.seed(seeds)
             start = 0

@@ -293,8 +293,7 @@ class ManifestTable:
     def _scan_filesets(self, by_seq: dict[int, list[str]], needs_resolve: bool) -> DataFrame:
         """Scan a seq→paths file selection: plain pruned parquet scan when no
         selected bucket spans generations (full filter pushdown), else the
-        per-seq union + (order_col, seq) resolution. Shared by read() and
-        read_since()."""
+        per-seq union + (order_col, seq) resolution."""
         if not by_seq:
             return self.spark.createDataFrame([], self.schema)
         if not needs_resolve:
@@ -311,31 +310,20 @@ class ManifestTable:
             df = df.unionByName(g)
         return self._resolve(df)
 
-    def read_since(
-        self,
-        older: int | None,
-        snapshot: int | None = None,
-        assume_monotonic: bool = False,
-    ) -> DataFrame:
+    def read_since(self, older: int | None, snapshot: int | None = None) -> DataFrame:
         """Incremental read: the resolved latest version of every key whose
         newest row arrived in a commit AFTER snapshot ``older`` (exclusive),
         up to ``snapshot`` (default: the current snapshot, pinned ONCE —
         every manifest access below uses that pin, so a concurrent commit
         cannot widen the window past the validated chain).
 
-        Default path: scan the files added since ``older`` for the touched
-        KEYS, then resolve those keys against the full (order_col, seq)
-        view of just the touched BUCKETS — cost ∝ touched buckets + delta
+        Scan the files added since ``older`` for the touched KEYS, then
+        resolve those keys against the full (order_col, seq) view of just
+        the touched BUCKETS — cost ∝ touched buckets + delta
         keys, never O(store buckets). This is exactly ``read()``'s answer
         restricted to touched keys, even when a post-snapshot commit
         carries an OLDER order_col than an existing row (a backfill): the
         superseded payload loses, same as a full read.
-
-        ``assume_monotonic=True`` skips the bucket resolution and returns
-        the delta files' own resolution — cost ∝ files added only. Sound
-        iff the writer never commits a row whose order_col is older than
-        an existing row for the same key (true for the crawl/extract
-        pipeline, whose order_col is the merge-time fetch_time).
 
         Keys untouched since ``older`` do not appear. A compaction in the
         window rewrites rows into new files, so they (correctly, if
@@ -356,22 +344,22 @@ class ManifestTable:
         except (OSError, ValueError):
             return self.read(snapshot=cur)
         man = self._load_manifest(cur)
-        by_seq: dict[int, list[str]] = {}
-        needs_resolve = False
+        new_files: list[str] = []
         touched: list[int] = []
         for b, fl in man["files"].items():
-            new = [e for e in fl if e["path"] not in old_paths]
-            if not new:
-                continue
-            touched.append(int(b))
-            if len({e["seq"] for e in new}) > 1:
-                needs_resolve = True
-            for e in new:
-                by_seq.setdefault(e["seq"], []).append(e["path"])
-        delta = self._scan_filesets(by_seq, needs_resolve)
-        if assume_monotonic or not by_seq:
-            return delta
-        delta_keys = delta.select(self.key_col).distinct()
+            new = [e["path"] for e in fl if e["path"] not in old_paths]
+            if new:
+                touched.append(int(b))
+                new_files.extend(new)
+        if not new_files:
+            return self.spark.createDataFrame([], self.schema)
+        # only the delta's KEYS matter; their rows come from the resolved read
+        delta_keys = (
+            self.spark.read.schema(self.schema)
+            .parquet(*new_files)
+            .select(self.key_col)
+            .distinct()
+        )
         return self.read(snapshot=cur, buckets=touched).join(
             delta_keys, self.key_col, "left_semi"
         )
@@ -552,13 +540,6 @@ class ManifestTable:
         for b, fl in new_files.items():
             files[b] = fl
         return self._commit(files, meta or {}, snap)
-
-    def overwrite(self, df: DataFrame, meta: dict[str, Any] | None = None) -> int:
-        snap = self._next_snap()
-        new_files = self._write_files(
-            df.withColumn(BUCKET_COL, bucket_expr(self.key_col, self.n_buckets)), snap
-        )
-        return self._commit(new_files, meta or {}, snap)
 
     def truncate(self, meta: dict[str, Any] | None = None) -> int:
         return self._commit({}, meta or {"op": "truncate"}, self._next_snap())
@@ -770,7 +751,7 @@ class UrlStore:
         self.spark = spark
         self.ttl_seconds = ttl_seconds
         # Pruned id_map slices at or under this many on-disk parquet bytes are
-        # broadcast in resolve_keys; larger slices shuffle (AQE decides).
+        # broadcast in resolve_keys_pruned; larger slices shuffle (AQE decides).
         self.broadcast_threshold_bytes = broadcast_threshold_bytes
         self.urls = ManifestTable(
             spark,
@@ -869,9 +850,12 @@ class UrlStore:
         return table.append_buckets(deduped, meta=meta, pre_bucketed=True)
 
     # -- read (S6 + J1 + F3) ---------------------------------------------------
-    def resolve_keys(self, requested: DataFrame, key_col: str = "key") -> DataFrame:
-        """J1 alias-resolution join: requested key → canonical key, falling
-        back to the requested key on mapping miss.
+    def resolve_keys_pruned(
+        self, requested: DataFrame, key_col: str = "key"
+    ) -> tuple[DataFrame, list[int]]:
+        """J1 alias-resolution join — requested key → ``canonical_key``,
+        falling back to the requested key on mapping miss — plus the
+        url-store bucket set a probe of those canonical keys must open.
 
         Scale posture: id_map has one row per stored URL — at a 10^10-URL
         frontier it is store-sized, NOT dim-sized, so it must never be
@@ -879,14 +863,7 @@ class UrlStore:
         hash-bucketed by requested_id, the join key, so only the buckets the
         batch's keys hash to are even opened), then broadcast ONLY when the
         pruned slice is provably small by manifest file size; otherwise it is
-        a plain equi-join and AQE picks the physical strategy."""
-        resolved, _ = self.resolve_keys_pruned(requested, key_col, probe_buckets=False)
-        return resolved
-
-    def resolve_keys_pruned(
-        self, requested: DataFrame, key_col: str = "key", probe_buckets: bool = True
-    ) -> tuple[DataFrame, list[int] | None]:
-        """resolve_keys + the url-store probe bucket set in one batch pass.
+        a plain equi-join and AQE picks the physical strategy.
 
         The batch's distinct buckets are computed ONCE and serve both
         tables (urls and id_map share n_buckets, so pmod(key, n) is the
@@ -902,17 +879,13 @@ class UrlStore:
             requested.select(F.col(key_col).alias(self.id_map.key_col))
         )
         id_map = self.id_map.read(buckets=req_buckets)
-        probe: list[int] | None = None
-        if probe_buckets:
-            canon = (
-                id_map.select(
-                    bucket_expr("canonical_id", self.urls.n_buckets).alias("b")
-                )
-                .where(F.col("b").isNotNull())
-                .distinct()
-                .collect()
-            )
-            probe = sorted(set(req_buckets) | {r.b for r in canon})
+        canon = (
+            id_map.select(bucket_expr("canonical_id", self.urls.n_buckets).alias("b"))
+            .where(F.col("b").isNotNull())
+            .distinct()
+            .collect()
+        )
+        probe = sorted(set(req_buckets) | {r.b for r in canon})
         if self.id_map.bytes_in_buckets(req_buckets) <= self.broadcast_threshold_bytes:
             id_map = F.broadcast(id_map)
         resolved = (
@@ -933,22 +906,14 @@ class UrlStore:
         req = req.withColumn("parsed_url", clean_url("original_url")).withColumn(
             "key", url_key("parsed_url")
         )
-        resolved = self.resolve_keys(req).cache()
-        buckets = sorted(
-            r.b
-            for r in resolved.select(
-                bucket_expr("canonical_key", self.urls.n_buckets).alias("b")
-            ).distinct().collect()
-        )
+        resolved, buckets = self.resolve_keys_pruned(req)
         store = self.urls.read(buckets=buckets).filter(is_fresh("expires"))
         # keep only original_url + canonical_key on the probe side — the store
         # row carries parsed_url, and a duplicate name breaks downstream selects
         probe = resolved.select("original_url", "canonical_key")
-        out = probe.join(
+        return probe.join(
             store, probe["canonical_key"] == store["key"], "inner"
         ).drop("canonical_key")
-        resolved.unpersist()
-        return out
 
     # -- delete (S10): canonical key only; aliases survive ---------------------
     def delete(self, urls: list[str]) -> int:

@@ -73,6 +73,30 @@ def _to_like(pattern: str) -> str:
     return "".join(out)
 
 
+def as_rules(robots: DataFrame) -> DataFrame:
+    """Either robots table shape → ROBOTS_RULES_SCHEMA, so the crawl has one
+    matcher (:func:`denied_expr`). Parsed rules pass through. A plain-prefix
+    table (``schemas.ROBOTS_SCHEMA``: ``disallow`` is array<string>) becomes
+    literal-prefix rules: each prefix p is ``{plen: length(p), like: p with
+    %, _ and \\ escaped, then %}`` and ``allow`` is null. A null prefix
+    compiles to a null pattern, which matches no path."""
+    if not isinstance(robots.schema["disallow"].dataType.elementType, T.StringType):
+        return robots
+    rules = F.transform(
+        "disallow",
+        lambda p: F.struct(
+            F.length(p).alias("plen"),
+            F.concat(F.regexp_replace(p, r"([%_\\])", r"\\$1"), F.lit("%")).alias("like"),
+        ),
+    )
+    return robots.select(
+        "host",
+        rules.alias("disallow"),
+        F.lit(None).cast(T.ArrayType(_RULE)).alias("allow"),
+        "crawl_delay",
+    )
+
+
 def parse_robots_text(txt: str, user_agent: str) -> tuple[list[str], list[str], float | None]:
     """One robots.txt → (disallow_patterns, allow_patterns, crawl_delay)
     for `user_agent`, RFC 9309 group selection applied. Patterns are raw
@@ -178,7 +202,8 @@ def _best_len(path: Column, rules: Column) -> Column:
 
 def denied_expr(path: Column, disallow: Column, allow: Column) -> Column:
     """RFC 9309 precedence: most-octets rule wins, Allow wins ties; no
-    matching rule ⇒ allowed. Null rule arrays ⇒ allowed."""
+    matching rule ⇒ allowed. Null rule arrays ⇒ allowed; a rule with a
+    null pattern never matches."""
     dis = _best_len(path, F.coalesce(disallow, F.array().cast(T.ArrayType(_RULE))))
     al = _best_len(path, F.coalesce(allow, F.array().cast(T.ArrayType(_RULE))))
     return dis > al

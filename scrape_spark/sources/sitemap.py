@@ -18,7 +18,7 @@ Pipeline shape (everything is a DataFrame; nothing round-trips the driver):
                  ┌─────────────────────────────────────────────────────┘
                  ├─ kind='sitemap' rows → fetch again (index recursion,
                  │                        driver loops on COUNTS only)
-                 └─ kind='url' rows → seed_frontier_entries → Crawl.seed_df
+                 └─ kind='url' rows → hint_priority_rows → frontier_rows
 
 Parsing is the same vectorized discipline as feed.py/extract.py: one
 ``.str.findall`` pass splits entry blocks, flattened positionally
@@ -235,31 +235,17 @@ def expand_sitemap_entries(
     return out
 
 
-def seed_frontier_entries(entries: DataFrame) -> DataFrame:
-    """``kind='url'`` sitemap entries → FRONTIER_SCHEMA rows (depth 0;
-    priority orders by sitemap hints: higher <priority> first, then fresher
-    lastmod — the frontier ranks ascending, so both are negated)."""
-    from scrape_spark.functions.urlkeys import clean_url, hostname_col, url_key
-    from scrape_spark.schemas import FRONTIER_SCHEMA
-
-    return (
-        entries.where(F.col("kind") == "url")
-        .select(
-            clean_url("loc").alias("url"),
-            # hint rank: priority (default 0.5 per spec) scaled to integer
-            # steps; fresher lastmod breaks ties within a priority band
-            (-F.round(F.coalesce(F.col("priority"), F.lit(0.5)) * 10).cast("long"))
-            .alias("__p"),
-            F.coalesce(
-                -F.unix_timestamp(F.col("lastmod")), F.lit(0)
-            ).alias("__t"),
-        )
-        .withColumn("key", url_key("url"))
-        .withColumn("host", hostname_col(F.col("url")))
-        .withColumn("depth", F.lit(0))
-        .withColumn("priority", (F.col("__p") * 10_000_000_000 + F.col("__t")).cast("long"))
-        .withColumn("discovered_epoch", F.lit(0))
-        .groupBy("key", "url", "host", "depth", "discovered_epoch")
-        .agg(F.min("priority").alias("priority"))
-        .select(*FRONTIER_SCHEMA.fieldNames())
+def hint_priority_rows(entries: DataFrame, depth: int, discovered_epoch: int) -> DataFrame:
+    """``kind='url'`` sitemap entries → frontier input rows (raw, depth,
+    priority, discovered_epoch) for ``operators.frontier.frontier_rows``.
+    The priority orders by sitemap hints: higher <priority> first (default
+    0.5 per spec, scaled to integer steps), then fresher lastmod within a
+    band — the frontier ranks ascending, so both are negated."""
+    hint = -F.round(F.coalesce(F.col("priority"), F.lit(0.5)) * 10).cast("long")
+    fresh = F.coalesce(-F.unix_timestamp(F.col("lastmod")), F.lit(0))
+    return entries.where(F.col("kind") == "url").select(
+        F.col("loc").alias("raw"),
+        F.lit(depth).alias("depth"),
+        (hint * 10_000_000_000 + fresh).cast("long").alias("priority"),
+        F.lit(discovered_epoch).alias("discovered_epoch"),
     )

@@ -380,9 +380,9 @@ def test_mixed_batch_delta_holds_only_misses(spark, pages, tmp_path):
     out = batch_extract(spark, _req_df(spark, hits + misses), pages, store)
     assert out.count() == len(hits + misses)
     out.unpersist()
-    delta = store.urls.read_since(pre_urls, assume_monotonic=True)
+    delta = store.urls.read_since(pre_urls)
     assert {r.parsed_url for r in delta.select("parsed_url").collect()} == set(misses)
-    aliases = store.id_map.read_since(pre_ids, assume_monotonic=True)
+    aliases = store.id_map.read_since(pre_ids)
     assert {(r.requested_id, r.canonical_id) for r in aliases.collect()} == {
         (url_key_py(page_url(1, 3)), url_key_py(page_url(1, 3))),
         (url_key_py(page_url(2, 11) + "/amp"), url_key_py(page_url(2, 11))),

@@ -268,6 +268,29 @@ def test_crawl_sitemap_seeding(spark, corpus_path, capsys, tmp_path):
     assert {page_url(0, i) for i in range(3)} | {page_url(1, 0)} <= fetched
 
 
+def test_crawl_sitemap_entry_and_seed_keep_one_row(spark, corpus_path, capsys, tmp_path):
+    """A positional seed that the sitemap also lists becomes exactly one
+    epoch-0 frontier row, carrying the sitemap's lower hint priority —
+    never a partition-order pick between the two."""
+    url = page_url(0, 1)
+    sm = f"<urlset><url><loc>{url}</loc><priority>0.9</priority></url></urlset>"
+    sm_pq = str(tmp_path / "sitemaps")
+    spark.createDataFrame(
+        [("https://s.test/sm.xml", bytearray(sm.encode()))], "url string, html binary"
+    ).write.mode("overwrite").parquet(sm_pq)
+    state = str(tmp_path / "state")
+    assert main([
+        "crawl", "--pages", corpus_path, "--state", state,
+        "--store", str(tmp_path / "store"), "--allow-all", "--epochs", "0",
+        "--sitemaps", sm_pq, url, page_url(1, 0),
+    ]) == 0
+    rows = spark.read.parquet(f"{state}/epochs/e00000/frontier.parquet").collect()
+    assert sorted(r.url for r in rows) == sorted([url, page_url(1, 0)])
+    by_url = {r.url: r for r in rows}
+    assert by_url[url].priority == -9 * 10_000_000_000  # hint 0.9, no lastmod
+    assert by_url[page_url(1, 0)].priority == 0
+
+
 def test_export_subcommand(spark, corpus_path, capsys, tmp_path):
     """`export`: crawl/extract store → deduplicated annotated corpus
     parquet, one JSON stats line on stdout."""

@@ -506,57 +506,90 @@ def test_robots_discovery_no_corpus_antijoin(spark, tmp_path_factory, pages):
     shutil.rmtree(tmpdir, ignore_errors=True)
 
 
-def test_robots_broadcast_is_size_gated(spark, tmp_path_factory, pages, model):
-    """Round-4 VERDICT finding 2: the robots rules table grows with
-    discovered hosts, so its broadcast must be size-gated like the id_map
-    join. With the gate forced shut (threshold 0) no robots-shaped frame
-    may be broadcast, and the crawl must still match the model exactly
-    (plain equi-join on host, AQE strategy)."""
-    import scrape_spark.operators.frontier as fr_mod
+def _record_robots_joins(spark, monkeypatch):
+    """Record every F.broadcast argument's columns and every join whose
+    right side is a robots rules table (it carries ``disallow``)."""
+    DataFrame = type(spark.range(0))  # the session's concrete frame class
+    broadcasts: list = []
+    joins: list = []
+    orig_broadcast, orig_join = F.broadcast, DataFrame.join
 
-    tmpdir = str(tmp_path_factory.mktemp("robots_gate"))
-    crawl = _mk_crawl(spark, tmpdir, pages)
-    crawl.store.broadcast_threshold_bytes = 0  # force "too big to broadcast"
-    robots_cols = set(crawl.robots.columns)
-    calls: list = []
-    orig = fr_mod.F.broadcast
+    def broadcast(df):
+        broadcasts.append(set(df.columns))
+        return orig_broadcast(df)
 
-    def recording(df):
-        calls.append(set(df.columns))
-        return orig(df)
+    def join(self, other, *args, **kwargs):
+        out = orig_join(self, other, *args, **kwargs)
+        if "disallow" in other.columns:
+            joins.append(out)
+        return out
 
-    fr_mod.F.broadcast = recording
+    monkeypatch.setattr(F, "broadcast", broadcast)
+    monkeypatch.setattr(DataFrame, "join", join)
+    return broadcasts, joins
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_robots_join_is_sized_by_spark(
+    spark, tmp_path_factory, pages, model, crawl_run, monkeypatch
+):
+    """The robots rules table grows with discovered hosts, so the crawl
+    never forces it into a broadcast: Spark sizes the join under
+    spark.sql.autoBroadcastJoinThreshold. With the threshold at -1, neither
+    a supplied-table crawl nor a discovered-mode epoch 0 hands a
+    robots-shaped frame to F.broadcast or plans a BroadcastHashJoin for the
+    robots join, and both still match the model. Positive control: at the
+    default threshold the tier-1 robots join IS a BroadcastHashJoin."""
+    from scrape_spark.schemas import FRONTIER_SCHEMA
+
+    def robots_shaped(cols):
+        return {"host", "disallow"} <= cols
+
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        crawl.run(N_EPOCHS, seeds=seed_urls(N_HOSTS))
-        gated_calls = list(calls)
-        # positive control: a small robots table under the default threshold
-        # IS broadcast (the gate, not the recorder, is what changed). Uses
-        # the discovery path, whose gate keys on the on-disk state size; an
-        # in-memory prepared table is stat-less (Long.MaxValue = unknown)
-        # and correctly falls to the plain join + AQE.
-        calls.clear()
-        ctl_dir = str(tmp_path_factory.mktemp("robots_gate_ctl"))
-        ctl_store = UrlStore(spark, f"{ctl_dir}/store", n_buckets=8)
-        ctl = Crawl(
-            spark, f"{ctl_dir}/state", ctl_store, pages, None,
+        broadcasts, joins = _record_robots_joins(spark, monkeypatch)
+        supplied_dir = str(tmp_path_factory.mktemp("robots_nobc"))
+        supplied = _mk_crawl(spark, supplied_dir, pages)
+        supplied.run(N_EPOCHS, seeds=seed_urls(N_HOSTS))
+        discovered_dir = str(tmp_path_factory.mktemp("robots_nobc_e0"))
+        discovered = Crawl(
+            spark, f"{discovered_dir}/state",
+            UrlStore(spark, f"{discovered_dir}/store", n_buckets=8), pages, None,
             CrawlConfig(epoch_seconds=EPOCH_SECONDS, max_depth=6, n_buckets=8,
                         shuffle_partitions=4),
         )
-        ctl.seed(seed_urls(N_HOSTS))
-        ctl.run_epoch(0)
-        control_calls = list(calls)
+        discovered.seed(seed_urls(N_HOSTS))
+        discovered.run_epoch(0)
+        assert len(joins) == N_EPOCHS + 1, len(joins)
+        plans = [_plan(j) for j in joins]
+        monkeypatch.undo()
     finally:
-        fr_mod.F.broadcast = orig
-    assert any(robots_cols <= c for c in control_calls), control_calls
-    assert not any(robots_cols <= c for c in gated_calls), gated_calls
-    shutil.rmtree(ctl_dir, ignore_errors=True)
-    got = {r.key for r in crawl.store.urls.read().select("key").collect()}
-    assert got == model.store_keys
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert not any(robots_shaped(c) for c in broadcasts), broadcasts
+    for plan in plans:
+        assert "BroadcastHashJoin" not in plan, plan
     for epoch in range(N_EPOCHS):
-        assert _selected_tuples(spark, crawl, epoch) == [
+        assert _selected_tuples(spark, supplied, epoch) == [
             tuple(t) for t in model.selected_per_epoch[epoch]
         ]
-    shutil.rmtree(tmpdir, ignore_errors=True)
+    got = {r.key for r in supplied.store.urls.read().select("key").collect()}
+    assert got == model.store_keys
+    assert _selected_tuples(spark, discovered, 0) == [
+        tuple(t) for t in model.selected_per_epoch[0]
+    ]
+
+    # positive control: the same join shape over the tier-1 crawl's rules
+    crawl, _ = crawl_run
+    frontier = spark.read.schema(FRONTIER_SCHEMA).parquet(
+        f"{crawl.state_dir}/epochs/e00000/frontier.parquet"
+    )
+    assert "BroadcastHashJoin" in _plan(frontier.join(crawl.robots, "host", "left"))
+    shutil.rmtree(supplied_dir, ignore_errors=True)
+    shutil.rmtree(discovered_dir, ignore_errors=True)
 
 
 def test_robots_discovered_from_corpus_matches_model(spark, tmp_path_factory, pages, model):
@@ -711,7 +744,7 @@ def test_hot_host_fetch_stage_is_budget_bounded_and_balanced(spark):
 
     n_part = 16
     sizes = (
-        selected.repartition(n_part, salted_host_hash("host", cfg.salt))
+        selected.repartition(n_part, salted_host_hash("host"))
         .withColumn("pid", F.spark_partition_id())
         .groupBy("pid").count()
         .collect()
@@ -722,41 +755,6 @@ def test_hot_host_fetch_stage_is_budget_bounded_and_balanced(spark):
     # are one host among ~125 per bucket — invisible in the load profile
     assert max(counts) <= 1.25 * ideal, counts
     assert len(counts) == n_part  # no empty fetch partitions at 2000 hosts
-
-
-def test_robots_discovery_gate_counts_epoch0_delta(spark, tmp_path_factory, pages, model):
-    """The discovery-mode broadcast gate must account for THIS epoch's
-    rules delta, not just last epoch's on-disk state: epoch 0 has no state
-    file (0 bytes), yet its delta — every seed host's rules — is the whole
-    table. With a threshold below the per-host delta bound, epoch 0 must
-    NOT broadcast the robots-shaped frame, and the crawl still matches the
-    model (plain equi-join + AQE)."""
-    import scrape_spark.operators.frontier as fr_mod
-
-    tmpdir = str(tmp_path_factory.mktemp("robots_gate_e0"))
-    crawl = _mk_crawl(spark, tmpdir, pages)
-    robots_cols = set(crawl.robots.columns)
-    crawl.robots = None  # discovery mode
-    # below one host's conservative rules bound: any nonzero delta shuts the
-    # gate even though _robots_state_bytes(0) == 0
-    crawl.store.broadcast_threshold_bytes = fr_mod.ROBOTS_HOST_RULES_BYTES - 1
-    calls: list = []
-    orig = fr_mod.F.broadcast
-
-    def recording(df):
-        calls.append(set(df.columns))
-        return orig(df)
-
-    fr_mod.F.broadcast = recording
-    try:
-        crawl.seed(seed_urls(N_HOSTS))
-        crawl.run_epoch(0)
-    finally:
-        fr_mod.F.broadcast = orig
-    assert not any(robots_cols <= c for c in calls), calls
-    sel = _selected_tuples(spark, crawl, 0)
-    assert sel == [tuple(t) for t in model.selected_per_epoch[0]]
-    shutil.rmtree(tmpdir, ignore_errors=True)
 
 
 def test_snapshot_expiration_bounds_history_and_resumes(

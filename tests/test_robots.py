@@ -8,9 +8,11 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from scrape_spark.schemas import ROBOTS_SCHEMA
 from scrape_spark.sources.robots import (
     ROBOTS_RULES_SCHEMA,
     _to_like,
+    as_rules,
     denied_expr,
     parse_robots,
     parse_robots_text,
@@ -143,6 +145,68 @@ def test_crawl_delay_and_null_txt(spark, rules_df):
         "x",
     ).collect()[0]
     assert df.disallow == [] and df.allow == []
+
+
+# ---- plain-prefix tables ------------------------------------------------------
+
+
+def test_plain_prefixes_convert_to_literal_rules(spark):
+    """as_rules turns each plain prefix into a literal-prefix rule: LIKE
+    metacharacters (%, _, \\) are escaped, robots wildcards (*, $) stay
+    literal, "" matches every path, and a null prefix matches nothing — so
+    denied_expr agrees with str.startswith on every path."""
+    prefixes = {
+        "pct": ["/100%"], "und": ["/a_b"], "bsl": ["/back\\slash"],
+        "star": ["/star*"], "dollar": ["/end$"], "empty": [""],
+        "null": [None, "/private/"], "none": None,
+    }
+    paths = [
+        "/private/x", "/privatex", "/100%off", "/100x", "/a_b/c", "/aXb",
+        "/back\\slash/1", "/backXslash", "/star*/x", "/starx", "/end$", "/end", "/",
+    ]
+    table = spark.createDataFrame(
+        [(h, p, None) for h, p in prefixes.items()], schema=ROBOTS_SCHEMA
+    )
+    rules = as_rules(table)
+    assert rules.columns == ROBOTS_RULES_SCHEMA.fieldNames()
+    got = {
+        (r.host, r.path): r.d
+        for r in spark.createDataFrame([(p,) for p in paths], ["path"])
+        .crossJoin(rules)
+        .select("host", "path", denied_expr(F.col("path"), F.col("disallow"),
+                                            F.col("allow")).alias("d"))
+        .collect()
+    }
+    for host, prefs in prefixes.items():
+        for path in paths:
+            want = any(p is not None and path.startswith(p) for p in prefs or [])
+            assert got[(host, path)] is want, (host, path)
+
+
+def test_null_rule_in_supplied_table_is_skipped(spark, tmp_path):
+    """A null element in a supplied plain-prefix table is skipped: the
+    host's URLs are still selected. (Under three-valued logic it used to
+    make every URL of that host neither allowed nor denied — never
+    fetched, deferred or counted.)"""
+    from scrape_spark.operators.frontier import Crawl, CrawlConfig
+    from scrape_spark.operators.store import UrlStore
+    from scrape_spark.sources.pages import host_name, seed_urls, synth_pages
+
+    robots = spark.createDataFrame(
+        [(host_name(0), [None, "/private/"], 0.1), (host_name(1), ["/private/"], 0.5)],
+        schema=ROBOTS_SCHEMA,
+    )
+    crawl = Crawl(
+        spark, str(tmp_path / "state"),
+        UrlStore(spark, str(tmp_path / "store"), n_buckets=8),
+        synth_pages(spark, 2, 10), robots,
+        CrawlConfig(epoch_seconds=4.0, n_buckets=8, shuffle_partitions=4),
+    )
+    crawl.seed(seed_urls(2))
+    stats = crawl.run_epoch(0)
+    selected = spark.read.parquet(f"{crawl.state_dir}/epochs/e00000/selected.parquet")
+    assert {r.host for r in selected.collect()} == {host_name(0), host_name(1)}
+    assert stats["selected"] == 2 and stats["robots_denied"] == 0
 
 
 # ---- parsed-rules crawl equals the reference model --------------------------

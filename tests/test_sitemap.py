@@ -8,9 +8,10 @@ import gzip
 
 from pyspark.sql import functions as F
 
+from scrape_spark.operators.frontier import frontier_rows
 from scrape_spark.sources.sitemap import (
+    hint_priority_rows,
     parse_sitemaps,
-    seed_frontier_entries,
     sitemap_urls_from_robots,
 )
 
@@ -78,7 +79,7 @@ def test_sitemap_urls_from_robots(spark):
     }
 
 
-def test_seed_frontier_entries_ranks_by_hints(spark):
+def test_sitemap_frontier_rows_rank_by_hints(spark):
     df = spark.createDataFrame(
         [
             ("s", "url", "https://sm.test/low", None, None, 0.1),
@@ -89,17 +90,17 @@ def test_seed_frontier_entries_ranks_by_hints(spark):
         "sitemap_url string, kind string, loc string, lastmod timestamp, "
         "changefreq string, priority double",
     )
-    seeds = seed_frontier_entries(df)
+    seeds = frontier_rows(hint_priority_rows(df, depth=0, discovered_epoch=0))
     rows = {r.url: r for r in seeds.collect()}
     assert set(rows) == {"https://sm.test/low", "https://sm.test/high"}  # no 'sitemap' rows
     assert rows["https://sm.test/high"].priority < rows["https://sm.test/low"].priority
     assert all(r.depth == 0 for r in rows.values())
 
 
-def test_seed_df_drives_a_crawl_epoch(spark, tmp_path):
-    """Sitemap-seeded crawl: seed_df writes epoch 0's frontier from the
-    entries DataFrame, and run_epoch fetches exactly those pages (robots
-    still applies)."""
+def test_sitemap_seed_drives_a_crawl_epoch(spark, tmp_path):
+    """Sitemap-seeded crawl: seed(sitemaps=...) writes epoch 0's frontier
+    from the sitemap pages, and run_epoch fetches exactly those pages
+    (robots still applies)."""
     from scrape_spark.operators.frontier import Crawl, CrawlConfig
     from scrape_spark.operators.store import UrlStore
     from scrape_spark.sources.pages import page_url, robots_table, synth_pages
@@ -108,8 +109,8 @@ def test_seed_df_drives_a_crawl_epoch(spark, tmp_path):
     sm = "<urlset>" + "".join(
         f"<url><loc>{page_url(h, i)}</loc></url>" for h in range(2) for i in range(3)
     ) + "</urlset>"
-    entries = parse_sitemaps(
-        spark.createDataFrame([("https://s.test/sm.xml", sm.encode())], ["url", "html"])
+    sitemaps = spark.createDataFrame(
+        [("https://s.test/sm.xml", sm.encode())], ["url", "html"]
     )
     crawl = Crawl(
         spark,
@@ -119,7 +120,7 @@ def test_seed_df_drives_a_crawl_epoch(spark, tmp_path):
         robots_table(spark, 2),
         CrawlConfig(epoch_seconds=4.0, n_buckets=8, shuffle_partitions=4),
     )
-    crawl.seed_df(seed_frontier_entries(entries))
+    crawl.seed([], sitemaps=sitemaps)
     stats = crawl.run_epoch(0)
     assert stats["selected"] > 0
     fetched = {r.parsed_url for r in crawl.store.urls.read().collect()}

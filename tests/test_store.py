@@ -155,8 +155,8 @@ def test_snapshot_time_travel(spark, store):
 
 
 def test_resolve_keys_does_not_broadcast_big_id_map(spark, store, tmp_path):
-    """id_map is store-sized at frontier scale — resolve_keys must not force
-    a broadcast when the pruned slice exceeds the size gate."""
+    """id_map is store-sized at frontier scale — resolve_keys_pruned must not
+    force a broadcast when the pruned slice exceeds the size gate."""
     urls = [f"https://example.com/b{i}" for i in range(60)]
     _merge(spark, store, [_result_row(u, expires=dt.datetime(2099, 1, 1)) for u in urls])
 
@@ -168,17 +168,21 @@ def test_resolve_keys_does_not_broadcast_big_id_map(spark, store, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         # gate closed (threshold 0) → no broadcast hint → shuffle join
         store.broadcast_threshold_bytes = 0
-        plan = store.resolve_keys(probe)._jdf.queryExecution().executedPlan().toString()
+        resolved, _ = store.resolve_keys_pruned(probe)
+        plan = resolved._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" not in plan
         # gate open → broadcast hint honored even with auto-broadcast off
         store.broadcast_threshold_bytes = 32 << 20
-        plan = store.resolve_keys(probe)._jdf.queryExecution().executedPlan().toString()
+        resolved, _ = store.resolve_keys_pruned(probe)
+        plan = resolved._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" in plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     # semantics unchanged either way
     store.broadcast_threshold_bytes = 0
-    resolved = {r.key: r.canonical_key for r in store.resolve_keys(probe).collect()}
+    resolved = {
+        r.key: r.canonical_key for r in store.resolve_keys_pruned(probe)[0].collect()
+    }
     assert all(k == v for k, v in resolved.items()) and len(resolved) == 60
 
 
@@ -571,10 +575,9 @@ def test_maintain_with_expire_keep(spark, store):
 
 def test_read_since_returns_only_delta_rows(spark, store):
     """Incremental read: keys merged/updated after the pinned snapshot, at
-    their latest payload; untouched keys absent. Cost assertions: the
-    monotonic fast path reads no pinned file at all; the default (backfill-
-    safe) path reads only TOUCHED buckets (files of untouched buckets stay
-    out of the plan)."""
+    their latest payload; untouched keys absent. Cost assertion: the read
+    opens only TOUCHED buckets (files of untouched buckets stay out of the
+    plan)."""
     _merge(spark, store, [_result_row("https://example.com/s1", title="v1")])
     _merge(spark, store, [_result_row("https://example.com/s2")])
     pin = store.urls.current_snapshot()
@@ -586,16 +589,10 @@ def test_read_since_returns_only_delta_rows(spark, store):
         _result_row("https://example.com/s3"),
         _result_row("https://example.com/s1", title="v2"),  # update
     ])
-    for kwargs in ({}, {"assume_monotonic": True}):
-        got = {r.parsed_url: r
-               for r in store.urls.read_since(pin, **kwargs).collect()}
-        assert set(got) == {"https://example.com/s1", "https://example.com/s3"}
-        assert got["https://example.com/s1"].title == "v2"
-    # monotonic fast path: no pinned file in the plan
-    fast = store.urls.read_since(pin, assume_monotonic=True)
-    plan = fast._jdf.queryExecution().executedPlan().toString()
-    assert not any(p.split("/")[-1] in plan for p in pin_files)
-    # default path: bucket-pruned — pinned files of UNtouched buckets absent
+    got = {r.parsed_url: r for r in store.urls.read_since(pin).collect()}
+    assert set(got) == {"https://example.com/s1", "https://example.com/s3"}
+    assert got["https://example.com/s1"].title == "v2"
+    # bucket-pruned — pinned files of UNtouched buckets absent
     man_new = store.urls._load_manifest()
     touched = {
         b for b, fl in man_new["files"].items()
@@ -627,10 +624,6 @@ def test_read_since_resolves_backfilled_older_rows(spark, store):
     assert got["https://example.com/bf"].title == "newer"  # matches read()
     full = {r.parsed_url: r for r in store.urls.read().collect()}
     assert full["https://example.com/bf"].title == "newer"
-    # the documented monotonic shortcut knowingly returns the delta's view
-    mono = {r.parsed_url: r
-            for r in store.urls.read_since(pin, assume_monotonic=True).collect()}
-    assert mono["https://example.com/bf"].title == "backfill"
 
 
 def test_read_since_none_and_broken_history_fall_back_to_full(spark, store):
