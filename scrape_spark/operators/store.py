@@ -24,9 +24,10 @@ sandbox has no Iceberg jars; on a real cluster ``ManifestTable`` is replaced
 - **Snapshots**: every commit writes an immutable manifest (bucket → file
   entries ``{path, bytes, seq}``) and atomically swings a CURRENT pointer.
   Readers pin a snapshot → crash-consistent checkpoint/resume and time
-  travel for free (north rule). File sizes are recorded at commit time, so
-  size-gating decisions (broadcast thresholds) are manifest-only — no
-  per-file stat calls on the read path.
+  travel for free (north rule). File sizes are recorded at commit time
+  (commit-size accounting reads them). Join strategies are Spark's choice:
+  the planner sizes a pruned read from its file listing, so the table layer
+  keeps no broadcast gate of its own.
 - **Pruning**: point/batch lookups read only the buckets their keys hash to.
 - **IO seam**: all manifest/filesystem metadata ops go through ``FileIO``
   (default ``LocalFileIO``); an object-store deployment swaps in an
@@ -208,14 +209,7 @@ class ManifestTable:
                 f"snapshot {snap} of {self.root} is not available "
                 f"(expired by expire_snapshots, or never committed)"
             ) from e
-        man = json.loads(text)
-        # normalize legacy entries (bare path strings) to sized+sequenced dicts
-        for b, fl in man["files"].items():
-            man["files"][b] = [
-                e if isinstance(e, dict) else {"path": e, "bytes": None, "seq": man["snapshot"]}
-                for e in fl
-            ]
-        return man
+        return json.loads(text)
 
     def commit_metas_between(
         self, newer: int | None, older: int | None
@@ -277,26 +271,14 @@ class ManifestTable:
         by_seq: dict[int, list[str]] = {}
         needs_resolve = False
         for _b, fl in items:
-            seqs = {e["seq"] for e in fl}
-            if len(seqs) > 1:
-                needs_resolve = True
+            needs_resolve |= len({e["seq"] for e in fl}) > 1
             for e in fl:
                 by_seq.setdefault(e["seq"], []).append(e["path"])
-        if not resolve:
-            # raw row versions: plain union of all files, no resolution
-            if not by_seq:
-                return self.spark.createDataFrame([], self.schema)
-            files = [p for fl in by_seq.values() for p in fl]
-            return self.spark.read.schema(self.schema).parquet(*files)
-        return self._scan_filesets(by_seq, needs_resolve)
-
-    def _scan_filesets(self, by_seq: dict[int, list[str]], needs_resolve: bool) -> DataFrame:
-        """Scan a seq→paths file selection: plain pruned parquet scan when no
-        selected bucket spans generations (full filter pushdown), else the
-        per-seq union + (order_col, seq) resolution."""
         if not by_seq:
             return self.spark.createDataFrame([], self.schema)
-        if not needs_resolve:
+        if not resolve or not needs_resolve:
+            # raw row versions, or no selected bucket spans generations: a
+            # plain union of all files (full filter pushdown)
             files = [p for fl in by_seq.values() for p in fl]
             return self.spark.read.schema(self.schema).parquet(*files)
         gens = [
@@ -563,16 +545,11 @@ class ManifestTable:
         resolved = self.read(buckets=candidates)
         return self.replace_buckets(resolved, candidates, meta=meta or {"op": "compact"})
 
-    def delta_generations(self, bucket: int | None = None) -> int:
-        """Max distinct file generations on any (or the given) bucket —
-        observability for compaction cadence + test assertions."""
+    def delta_generations(self) -> int:
+        """Max distinct file generations on any bucket — observability for
+        compaction cadence + test assertions."""
         man = self._load_manifest()
-        worst = 0
-        for b, fl in man["files"].items():
-            if bucket is not None and int(b) != bucket:
-                continue
-            worst = max(worst, len({e["seq"] for e in fl}))
-        return worst
+        return max((len({e["seq"] for e in fl}) for fl in man["files"].values()), default=0)
 
     def expire_snapshots(self, keep_last: int = 2) -> dict[str, int]:
         """Iceberg-style snapshot expiration + orphan-file removal (Iceberg's
@@ -657,8 +634,9 @@ class ManifestTable:
     ) -> list[dict]:
         """Manifest entries whose recorded [min, max] for ``col`` intersects
         the half-open window (lo, hi] — lo/hi None ⇒ unbounded. Entries
-        without stats (legacy manifests, unreadable footers) are always
-        included: pruning is an optimization, never a correctness gate."""
+        without stats (tables with no ``stats_cols``, unreadable footers) are
+        always included: pruning is an optimization, never a correctness
+        gate."""
         man = self._load_manifest(snapshot)
         out = []
         for _b, fl in man["files"].items():
@@ -691,26 +669,6 @@ class ManifestTable:
         if not paths:
             return self.spark.createDataFrame([], self.schema)
         return self.spark.read.schema(self.schema).parquet(*paths)
-
-    def bytes_in_buckets(self, buckets: list[int] | None = None) -> int:
-        """On-disk parquet bytes of the given buckets in the current snapshot
-        (all buckets when None) — answered purely from manifest metadata
-        (sizes are recorded at commit time), zero fs calls. Used to
-        size-gate broadcast decisions."""
-        man = self._load_manifest()
-        total = 0
-        for b, fl in man["files"].items():
-            if buckets is not None and int(b) not in buckets:
-                continue
-            for e in fl:
-                if e["bytes"] is not None:
-                    total += e["bytes"]
-                else:  # legacy manifest without sizes: stat once
-                    try:
-                        total += self.io.size(e["path"])
-                    except OSError:
-                        pass
-        return total
 
 
 def merge_delta_plan(
@@ -746,13 +704,9 @@ class UrlStore:
         root: str,
         n_buckets: int = 16,
         ttl_seconds: int = DEFAULT_TTL_SECONDS,
-        broadcast_threshold_bytes: int = 32 << 20,
     ):
         self.spark = spark
         self.ttl_seconds = ttl_seconds
-        # Pruned id_map slices at or under this many on-disk parquet bytes are
-        # broadcast in resolve_keys_pruned; larger slices shuffle (AQE decides).
-        self.broadcast_threshold_bytes = broadcast_threshold_bytes
         self.urls = ManifestTable(
             spark,
             os.path.join(root, "urls"),
@@ -861,9 +815,10 @@ class UrlStore:
         frontier it is store-sized, NOT dim-sized, so it must never be
         unconditionally broadcast. The join is bucket-pruned first (id_map is
         hash-bucketed by requested_id, the join key, so only the buckets the
-        batch's keys hash to are even opened), then broadcast ONLY when the
-        pruned slice is provably small by manifest file size; otherwise it is
-        a plain equi-join and AQE picks the physical strategy.
+        batch's keys hash to are even opened), then planned as a plain
+        equi-join: ``spark.sql.autoBroadcastJoinThreshold`` broadcasts the
+        pruned slice when Catalyst's estimate of it (its parquet file bytes)
+        is small, and a larger slice shuffles.
 
         The batch's distinct buckets are computed ONCE and serve both
         tables (urls and id_map share n_buckets, so pmod(key, n) is the
@@ -886,8 +841,6 @@ class UrlStore:
             .collect()
         )
         probe = sorted(set(req_buckets) | {r.b for r in canon})
-        if self.id_map.bytes_in_buckets(req_buckets) <= self.broadcast_threshold_bytes:
-            id_map = F.broadcast(id_map)
         resolved = (
             requested.join(
                 id_map,

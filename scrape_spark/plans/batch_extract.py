@@ -61,6 +61,10 @@ _VALID_URL = r"^https?://[^/?#]+"
 
 RESULT_COLS = RESULT_SCHEMA.fieldNames()
 
+# 3xx hops followed per request before the redirect surfaces as an error
+# (the Go http.Client follows up to 10; fetcher_test.go:68-111).
+MAX_REDIRECT_HOPS = 4
+
 # ---- automatic fetch-join strategy gate --------------------------------------
 # Above this estimated corpus size, a plain left join's corpus shuffle is no
 # longer page-cache-local — it crosses a network on any real cluster — so the
@@ -209,8 +213,6 @@ def _probe_corpus(requests: DataFrame, corpus: DataFrame, url_col: str) -> DataF
 def fetch_join(
     misses: DataFrame,
     pages: DataFrame,
-    max_redirect_hops: int = 4,
-    broadcast_probe: bool | None = None,
     probe_rows_hint: int | None = None,
 ) -> DataFrame:
     """The 'network' stage: equi-join against the pages corpus (absent ⇒
@@ -222,12 +224,16 @@ def fetch_join(
     `status`, and `redirect_to` columns (PAGES_FETCH_SCHEMA); a bare
     5-column pages table degrades to header-unknown / 200-if-present /
     no-redirect. 3xx rows with a redirect target are followed transparently
-    up to ``max_redirect_hops`` (the Go http.Client follows up to 10;
-    fetcher_test.go:68-111) — each hop is one more equi-join over only the
-    still-redirecting subset, so the common no-redirect case pays a single
-    join. Rows still redirecting after the hop budget surface the redirect
-    status as an HTTP error (parity: Go returns 'stopped after 10 redirects'
-    as an error)."""
+    up to ``MAX_REDIRECT_HOPS`` — each hop is one more equi-join over only
+    the still-redirecting subset, so the common no-redirect case pays a
+    single join. Rows still redirecting after the hop budget surface the
+    redirect status as an HTTP error (parity: Go returns 'stopped after 10
+    redirects' as an error).
+
+    The join arm is ``choose_probe_strategy``'s: the hint comes from the
+    caller when it knows the batch size for free (the crawl epoch's
+    politeness-capped selected count); the probe-side size estimate comes
+    from Catalyst — never a count() job here."""
     cols = set(pages.columns)
     corpus = pages.select(
         F.col("url").alias("__page_url"),
@@ -238,15 +244,9 @@ def fetch_join(
             "__redirect_to"
         ),
     )
-    if broadcast_probe is None:
-        # Automatic strategy: no flag the user must know about. The hint
-        # comes from the caller when it knows the batch size for free (the
-        # crawl epoch's politeness-capped selected count); the probe-side
-        # size estimate comes from Catalyst — never a count() job here.
-        broadcast_probe = choose_probe_strategy(
-            _plan_size_bytes(pages), probe_rows_hint, _plan_size_bytes(misses)
-        )
-    if broadcast_probe:
+    if choose_probe_strategy(
+        _plan_size_bytes(pages), probe_rows_hint, _plan_size_bytes(misses)
+    ):
         joined = _probe_corpus(misses, corpus, "parsed_url")
     else:
         joined = misses.join(
@@ -281,15 +281,8 @@ def fetch_join(
         col = _plain_text_col(df) if traits["plain"] else F.lit(None).cast("string")
         return df.withColumn("__plain_text", col)
 
-    def _tag(df: DataFrame) -> DataFrame:
-        try:
-            df._scrape_probe_strategy = "decomposed" if broadcast_probe else "plain"
-        except AttributeError:  # pragma: no cover
-            pass
-        return df
-
     if not traits["redirects"]:
-        return _tag(extract_pages(_with_plain(joined), html_col="html"))
+        return extract_pages(_with_plain(joined), html_col="html")
     # never-null predicate: False when redirect_to is null (False AND NULL ≡
     # False), defined when it isn't (coalesce guards a null status)
     is_redirect = F.col("__redirect_to").isNotNull() & F.coalesce(
@@ -298,7 +291,7 @@ def fetch_join(
     done = joined.filter(~is_redirect)
     pending = joined.filter(is_redirect)
     req_cols = [c for c in misses.columns]
-    for _hop in range(max_redirect_hops):
+    for _hop in range(MAX_REDIRECT_HOPS):
         # follow one hop: re-probe the corpus with the redirect target; the
         # requested columns ride along unchanged (parsed_url stays the
         # requested URL — the reference echoes RequestedURL on redirects)
@@ -315,11 +308,11 @@ def fetch_join(
         "request_error",
         F.coalesce(
             F.col("request_error"),
-            F.lit(f"stopped after {max_redirect_hops} redirects"),
+            F.lit(f"stopped after {MAX_REDIRECT_HOPS} redirects"),
         ),
     )
     done = done.unionByName(exhausted)
-    return _tag(extract_pages(_with_plain(done), html_col="html"))
+    return extract_pages(_with_plain(done), html_col="html")
 
 
 def _plain_text_col(df: DataFrame):
@@ -541,39 +534,20 @@ def batch_extract(
     # miss branch's s_key-null filter prunes the store side to a
     # (key, expires) column scan — materializing the full hit payload to
     # block storage cost more than the second pruned scan at every
-    # measured size (req stays cached, the id_map side is a broadcast).
+    # measured size (req stays cached; Spark broadcasts the pruned id_map
+    # side when its estimate is under autoBroadcastJoinThreshold).
     joined = resolved.join(
         fresh, resolved["canonical_key"] == fresh["s_key"], "left"
     )
 
     hits = joined.filter(F.col("s_key").isNotNull())
-    hit_results = _as_result(
-        hits.select(
-            F.col("s_key").alias("key"),
-            F.col("s_url").alias("url"),
-            F.col("s_parsed_url").alias("parsed_url"),
-            F.col("original_url"),
-            F.col("s_fetch_time").alias("fetch_time"),
-            F.col("s_fetch_method").alias("fetch_method"),
-            F.col("s_user_agent").alias("user_agent"),
-            F.col("s_headers").alias("headers"),
-            F.col("s_expires").alias("expires"),
-            F.col("s_status_code").alias("status_code"),
-            F.col("s_error").alias("error"),
-            F.col("s_hostname").alias("hostname"),
-            F.col("s_title").alias("title"),
-            F.col("s_description").alias("description"),
-            F.col("s_sitename").alias("sitename"),
-            F.col("s_authors").alias("authors"),
-            F.col("s_date").alias("date"),
-            F.col("s_categories").alias("categories"),
-            F.col("s_tags").alias("tags"),
-            F.col("s_language").alias("language"),
-            F.col("s_image").alias("image"),
-            F.col("s_page_type").alias("page_type"),
-            F.col("s_license").alias("license"),
-            F.col("s_content_text").alias("content_text"),
-        )
+    # URL_STORE_SCHEMA is RESULT_SCHEMA minus original_url: every other
+    # result column comes from its s_-prefixed store column
+    hit_results = hits.select(
+        *[
+            F.col(c) if c == "original_url" else F.col(f"s_{c}").alias(c)
+            for c in RESULT_COLS
+        ]
     )
 
     misses = joined.filter(F.col("s_key").isNull()).select(

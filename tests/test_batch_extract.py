@@ -23,6 +23,17 @@ def _req_df(spark, urls):
     return spark.createDataFrame([(u,) for u in urls], ["url"])
 
 
+def _probe_arm(df) -> str:
+    """The fetch-join arm a plan took, read from its physical plan: only the
+    plain arm has a left-outer join (the decomposed arm is an inner join
+    plus a left-anti, and the redirect-hop probes use the same shape)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    if "LeftOuter" in plan:
+        return "plain"
+    assert "LeftAnti" in plan
+    return "decomposed"
+
+
 def test_batch_end_to_end(spark, pages, tmp_path):
     store = UrlStore(spark, str(tmp_path / "s"), n_buckets=8)
     urls = [
@@ -134,9 +145,10 @@ def test_cache_split_is_bucket_pruned(spark, pages, tmp_path):
     assert None not in seen_buckets  # no unpruned full read anywhere
 
 
-def test_broadcast_probe_join_is_equivalent(spark, pages):
+def test_broadcast_probe_join_is_equivalent(spark, pages, monkeypatch):
     """The no-corpus-shuffle probe decomposition (inner BHJ + left-anti)
     must return exactly what the plain left join returns, misses included."""
+    import scrape_spark.plans.batch_extract as bx
     from scrape_spark.plans.batch_extract import fetch_join, prepare_requests
 
     req = prepare_requests(
@@ -146,9 +158,14 @@ def test_broadcast_probe_join_is_equivalent(spark, pages):
         (r["original_url"], r["__page_url"], r["title"]) for r in
         df.select("original_url", "__page_url", "title").collect()
     }
-    assert shape(fetch_join(req, pages, broadcast_probe=True)) == shape(
-        fetch_join(req, pages, broadcast_probe=False)
-    )
+
+    def forced(decomposed: bool):
+        monkeypatch.setattr(bx, "choose_probe_strategy", lambda *a: decomposed)
+        out = fetch_join(req, pages)
+        assert _probe_arm(out) == ("decomposed" if decomposed else "plain")
+        return shape(out)
+
+    assert forced(True) == forced(False)
 
 
 def test_fetch_client_routing(spark, pages, tmp_path):
@@ -230,7 +247,7 @@ def test_unordered_union_has_all_columns(spark, pages, tmp_path):
 
 
 def test_auto_probe_strategy_gate(spark, pages, monkeypatch):
-    """broadcast_probe=None picks the plan automatically: plain join on a
+    """fetch_join picks the plan automatically: plain join on a
     small/single-box corpus (the measured-faster default), the decomposed
     zero-corpus-shuffle plan when the corpus size estimate crosses the
     network-shuffle threshold and the batch is verifiably bounded."""
@@ -264,7 +281,7 @@ def test_auto_probe_strategy_gate(spark, pages, monkeypatch):
     # a createDataFrame request frame is RDD-backed — Catalyst reports
     # Long.MaxValue, which must read as UNKNOWN probe size → plain join
     out_plain = bx.fetch_join(req, pages, probe_rows_hint=2)
-    assert out_plain._scrape_probe_strategy == "plain"
+    assert _probe_arm(out_plain) == "plain"
 
     # a parquet-backed request frame carries a real (tiny) size estimate →
     # the probe-side-small arm picks the decomposed plan at any corpus size
@@ -278,19 +295,17 @@ def test_auto_probe_strategy_gate(spark, pages, monkeypatch):
             "__fetch_method", F.lit(1)
         )
         out_small = bx.fetch_join(req_pq, pages, probe_rows_hint=2)
-        assert out_small._scrape_probe_strategy == "decomposed"
+        assert _probe_arm(out_small) == "decomposed"
         # probe-side arm disabled → back to the mid-size default (plain)
         monkeypatch.setattr(bx, "PROBE_BROADCAST_BYTES", -1)
         out_mid = bx.fetch_join(req_pq, pages, probe_rows_hint=2)
-        assert out_mid._scrape_probe_strategy == "plain"
+        assert _probe_arm(out_mid) == "plain"
 
     # corpus "large" (threshold forced down): decomposed plan chosen,
     # visible in the physical plan as the left-anti arm of the union
     monkeypatch.setattr(bx, "CORPUS_SHUFFLE_BYTES", 1)
     out_auto = bx.fetch_join(req, pages, probe_rows_hint=2)
-    assert out_auto._scrape_probe_strategy == "decomposed"
-    plan = out_auto._jdf.queryExecution().executedPlan().toString()
-    assert "LeftAnti" in plan
+    assert _probe_arm(out_auto) == "decomposed"
     # and both plans agree on the rows
     shape = lambda df: {  # noqa: E731
         (r["original_url"], r["title"]) for r in df.select("original_url", "title").collect()

@@ -154,36 +154,44 @@ def test_snapshot_time_travel(spark, store):
     assert titles == {"two"}
 
 
-def test_resolve_keys_does_not_broadcast_big_id_map(spark, store, tmp_path):
-    """id_map is store-sized at frontier scale — resolve_keys_pruned must not
-    force a broadcast when the pruned slice exceeds the size gate."""
+def test_alias_join_is_sized_by_spark(spark, store, monkeypatch):
+    """id_map is store-sized at frontier scale — resolve_keys_pruned passes
+    no broadcast hint, so spark.sql.autoBroadcastJoinThreshold alone sizes
+    the alias join: no broadcast when it is off, a broadcast of the small
+    pruned slice at the default."""
+    from scrape_spark.operators import store as store_mod
+
     urls = [f"https://example.com/b{i}" for i in range(60)]
     _merge(spark, store, [_result_row(u, expires=dt.datetime(2099, 1, 1)) for u in urls])
 
     probe = spark.createDataFrame(
         [(url_key_py(clean_url_py(u)),) for u in urls], ["key"]
     )
+    hinted = []
+    real_broadcast = F.broadcast
+    monkeypatch.setattr(
+        store_mod.F, "broadcast", lambda df: hinted.append(df) or real_broadcast(df)
+    )
+
+    def resolve(threshold: str):
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+        resolved, _ = store.resolve_keys_pruned(probe)
+        plan = resolved._jdf.queryExecution().executedPlan().toString()
+        keys = {r.key: r.canonical_key for r in resolved.collect()}
+        return "BroadcastHashJoin" in plan, keys
+
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        # gate closed (threshold 0) → no broadcast hint → shuffle join
-        store.broadcast_threshold_bytes = 0
-        resolved, _ = store.resolve_keys_pruned(probe)
-        plan = resolved._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" not in plan
-        # gate open → broadcast hint honored even with auto-broadcast off
-        store.broadcast_threshold_bytes = 32 << 20
-        resolved, _ = store.resolve_keys_pruned(probe)
-        plan = resolved._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in plan
+        off_bhj, off_keys = resolve("-1")
+        on_bhj, on_keys = resolve(prev)  # the session default, 10 MB
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert hinted == []
+    assert not off_bhj
+    assert on_bhj
     # semantics unchanged either way
-    store.broadcast_threshold_bytes = 0
-    resolved = {
-        r.key: r.canonical_key for r in store.resolve_keys_pruned(probe)[0].collect()
-    }
-    assert all(k == v for k, v in resolved.items()) and len(resolved) == 60
+    assert off_keys == on_keys
+    assert all(k == v for k, v in on_keys.items()) and len(on_keys) == 60
 
 
 def test_fetch_output_has_unambiguous_columns(spark, store):
@@ -222,7 +230,9 @@ def test_merge_commit_is_delta_sized_not_store_sized(spark, store):
     paths_before = {
         e["path"] for fl in man_before["files"].values() for e in fl
     }
-    store_bytes = store.urls.bytes_in_buckets()
+    store_bytes = sum(
+        e["bytes"] for fl in man_before["files"].values() for e in fl
+    )
 
     # small delta: 5 updates
     _merge(spark, store, [
@@ -341,11 +351,6 @@ def test_manifest_table_routes_fs_ops_through_io_seam(spark, tmp_path):
     ops = {c[0] for c in io.calls}
     assert {"makedirs", "write_text_atomic", "read_text", "listdir", "size"} <= ops
 
-    # bytes_in_buckets answers from manifest metadata — ZERO stat calls
-    io.calls.clear()
-    assert t.bytes_in_buckets() > 0
-    assert not any(op == "size" for op, _ in io.calls)
-
 
 # ---- manifest file stats + range pruning (round-4) ---------------------------
 
@@ -393,7 +398,7 @@ def test_files_in_range_prunes_listing(spark, store):
     got = {r.parsed_url for r in store.urls.read_in_range(
         "expires", t_late - 3600, t_late + 3600).select("parsed_url").collect()}
     assert got == {f"https://example.com/late{i}" for i in range(20)}
-    # an entry without stats (legacy manifest) is conservatively included
+    # an entry without stats (unreadable footer) is conservatively included
     man = store.urls._load_manifest()
     victim = next(iter(man["files"].values()))[0]
     victim.pop("stats", None)

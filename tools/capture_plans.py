@@ -53,15 +53,12 @@ def main():
             f.write(text)
         print("wrote", name)
 
-    # flagship fetch+extract over the bench corpus (both strategy arms),
-    # and the store MERGE delta plan
+    # flagship fetch+extract over the bench corpus, and the store MERGE
+    # delta plan
     from pyspark.sql import functions as F
 
-    from scrape_spark.plans.batch_extract import (
-        batch_extract,
-        fetch_join,
-        prepare_requests,
-    )
+    from scrape_spark.operators.store import merge_delta_plan
+    from scrape_spark.plans.batch_extract import batch_extract, prepare_requests
     from scrape_spark.sources.pages import ensure_pages
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -73,40 +70,12 @@ def main():
         f.write(explain_formatted(flagship))
     print("wrote batch_pipeline_sf")
 
-    try:
-        from scrape_spark.operators.store import merge_delta_plan
-
-        delta = prepare_requests(pages.select("url")).select(
-            F.col("key"), F.col("parsed_url"), F.current_timestamp().alias("fetch_time")
-        )
-        with open(os.path.join(out_dir, f"store_merge_delta_{suffix}.txt"), "w") as f:
-            f.write(explain_formatted(merge_delta_plan(delta, "key", "fetch_time", 32)))
-        print("wrote store_merge_delta")
-    except ImportError:
-        # round-start tree: replicate the old merge shape for the before-plan
-        delta = prepare_requests(pages.select("url")).select(
-            F.col("key"), F.col("parsed_url"), F.current_timestamp().alias("fetch_time")
-        )
-        cols = delta.columns
-        deduped = (
-            delta.where(F.col("key").isNotNull())
-            .groupBy("key")
-            .agg(
-                F.max_by(
-                    F.struct(*[F.col(c) for c in cols if c != "key"]),
-                    F.struct(F.col("fetch_time")),
-                ).alias("__row")
-            )
-            .select("key", "__row.*")
-        )
-        from scrape_spark.operators.store import BUCKET_COL, bucket_expr
-
-        shaped = deduped.withColumn(BUCKET_COL, bucket_expr("key", 32)).repartition(
-            BUCKET_COL
-        )
-        with open(os.path.join(out_dir, f"store_merge_delta_{suffix}.txt"), "w") as f:
-            f.write(explain_formatted(shaped))
-        print("wrote store_merge_delta (legacy shape)")
+    delta = prepare_requests(pages.select("url")).select(
+        F.col("key"), F.col("parsed_url"), F.current_timestamp().alias("fetch_time")
+    )
+    with open(os.path.join(out_dir, f"store_merge_delta_{suffix}.txt"), "w") as f:
+        f.write(explain_formatted(merge_delta_plan(delta, "key", "fetch_time", 32)))
+    print("wrote store_merge_delta")
 
 
 if __name__ == "__main__":
