@@ -43,10 +43,12 @@ shuffle only by the same pmod the store itself uses.
 Sizing at 10^10 keys: table bytes ≈ keys × 8 B/slot-pair ÷ load. At the
 default 0.5 target load that is ~16 B/key ⇒ 160 GB total — so `n_buckets`
 must scale with the frontier (e.g. 4096 buckets ⇒ ~40 MB/bucket task,
-comfortably executor-sized); `n_buckets` is a parameter everywhere here
-and in CrawlConfig precisely for that. Per-epoch maintenance shuffles only
-the DELTA keys into those buckets; the tables themselves live in the
-epoch checkpoint and stream through the cogroup one bucket per task.
+comfortably executor-sized). `n_buckets` is a required keyword everywhere
+here: a filter probed with a different count than it was built with gives
+false negatives, so no call may lean on a default; the crawl passes its
+store's recorded count. Per-epoch maintenance shuffles only the DELTA keys
+into those buckets; the tables themselves live in the epoch checkpoint and
+stream through the cogroup one bucket per task.
 """
 
 from __future__ import annotations
@@ -208,7 +210,8 @@ def _build_table(keys_np: np.ndarray, target_load: float = 0.5):
 def build_cuckoo(
     keys: DataFrame,
     key_col: str = "key",
-    n_buckets: int = 16,
+    *,
+    n_buckets: int,
     target_load: float = 0.5,
 ) -> DataFrame:
     """One cuckoo table per key bucket, built distributed (one task per
@@ -234,7 +237,8 @@ def probe_cuckoo(
     candidates: DataFrame,
     cuckoo: DataFrame,
     key_col: str = "key",
-    n_buckets: int = 16,
+    *,
+    n_buckets: int,
     flag_col: str = "maybe_seen",
 ) -> DataFrame:
     """Append `flag_col`: False ⇒ definitely not in the filter (exact, given
@@ -277,7 +281,8 @@ def update_cuckoo(
     inserts: DataFrame | None = None,
     deletes: DataFrame | None = None,
     key_col: str = "key",
-    n_buckets: int = 16,
+    *,
+    n_buckets: int,
 ) -> DataFrame:
     """Incremental maintenance: cost ∝ |inserts| + |deletes|, NOT store size.
     Deletes apply first (freeing slots for this epoch's inserts). A bucket
@@ -347,7 +352,8 @@ def rebuild_flagged(
     cuckoo: DataFrame,
     all_keys: DataFrame,
     key_col: str = "key",
-    n_buckets: int = 16,
+    *,
+    n_buckets: int,
 ) -> DataFrame:
     """Rebuild ONLY the needs_rebuild buckets from the authoritative key set
     (bucket-pruned scan — O(flagged buckets), not O(store))."""
@@ -358,5 +364,5 @@ def rebuild_flagged(
     subset = all_keys.filter(
         F.pmod(F.col(key_col), F.lit(n_buckets)).isin(flagged)
     )
-    rebuilt = build_cuckoo(subset, key_col, n_buckets)
+    rebuilt = build_cuckoo(subset, key_col, n_buckets=n_buckets)
     return keep.unionByName(rebuilt)

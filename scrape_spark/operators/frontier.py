@@ -109,6 +109,12 @@ _CRAWL_STORE_OPS = {"crawl_merge", "crawl_compact"}
 
 SEEN_FILTERS = ("none", "cuckoo")
 
+# auto-compaction cadence: when any bucket of a store table accumulates this
+# many delta generations, run_epoch compacts the table after its merge.
+# Bounds read-side LWW resolution on long crawls — the reference analog is
+# the daily maintenance ticker (database/sqlite/sqlite.go:76-80).
+COMPACT_AFTER_GENERATIONS = 8
+
 
 def frontier_rows(raw: DataFrame) -> DataFrame:
     """(raw, depth, priority, discovered_epoch) rows → FRONTIER_SCHEMA: each
@@ -134,12 +140,6 @@ def frontier_rows(raw: DataFrame) -> DataFrame:
 class CrawlConfig:
     epoch_seconds: float = 10.0
     max_depth: int = 6
-    n_buckets: int = 16
-    # auto-compaction cadence: when any store bucket accumulates this many
-    # delta generations, run_epoch compacts after its merge (0 disables).
-    # Bounds read-side LWW resolution on long crawls — the reference analog
-    # is the daily maintenance ticker (database/sqlite/sqlite.go:76-80).
-    compact_after_generations: int = 8
     # snapshot GC: after each epoch's commit, expire store/id_map snapshots
     # older than this epoch's parent pins (the filter loader's manifest-walk
     # terminus and the resume read point) — disk stays ∝ live store + recent
@@ -317,7 +317,9 @@ class Crawl:
         cogrouped probe per consumer (the union-arm recompute trap)."""
         if pre_filter is None:
             return confirm(frontier)
-        probed = probe_cuckoo(frontier, pre_filter, "key", self.cfg.n_buckets).cache()
+        probed = probe_cuckoo(
+            frontier, pre_filter, "key", n_buckets=self.store.urls.n_buckets
+        ).cache()
         self._epoch_caches.append(probed)
         definitely_new = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
         maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
@@ -411,6 +413,7 @@ class Crawl:
         set and the delete windows have to partition the timeline
         consistently or deletes go unbalanced (see run_epoch)."""
         path = os.path.join(prev_dir, "seenfilter.parquet")
+        n = self.store.urls.n_buckets
         wm_prev = (committed or {}).get("seen_filter_wm")
         # format guard: a filter persisted under a different slot-layout
         # version (or before versions were recorded) would probe/delete at
@@ -418,7 +421,7 @@ class Crawl:
         fmt_ok = (committed or {}).get("seen_filter_format") == CUCKOO_FORMAT_VERSION
         if not os.path.exists(path) or wm_prev is None or not fmt_ok:
             return build_cuckoo(
-                self._cuckoo_multiset(fresh_keys, attempted), "key", self.cfg.n_buckets
+                self._cuckoo_multiset(fresh_keys, attempted), "key", n_buckets=n
             )
         # foreign-writer detection: the persistent filter models ONLY rows
         # this crawl committed. If the manifest parent chain between the
@@ -439,9 +442,7 @@ class Crawl:
             metas = table.commit_metas_between(new_snap, old_snap)
             if metas is None or any(m.get("op") not in _CRAWL_STORE_OPS for m in metas):
                 return build_cuckoo(
-                    self._cuckoo_multiset(fresh_keys, attempted),
-                    "key",
-                    self.cfg.n_buckets,
+                    self._cuckoo_multiset(fresh_keys, attempted), "key", n_buckets=n
                 )
         ck = self.spark.read.schema(CUCKOO_SCHEMA).parquet(path)
         # store row versions whose TTL fell inside (wm_prev, wm_now]: delete
@@ -462,9 +463,9 @@ class Crawl:
             )
             .select("key")
         )
-        ck = update_cuckoo(ck, inserts=None, deletes=expired_delta, n_buckets=self.cfg.n_buckets)
+        ck = update_cuckoo(ck, inserts=None, deletes=expired_delta, n_buckets=n)
         return rebuild_flagged(
-            ck, self._cuckoo_multiset(fresh_keys, attempted), "key", self.cfg.n_buckets
+            ck, self._cuckoo_multiset(fresh_keys, attempted), "key", n_buckets=n
         )
 
     # ---- corpus-discovered robots ------------------------------------------
@@ -853,16 +854,9 @@ class Crawl:
         # below threshold); when any bucket's delta generations reach the
         # limit, fold them so long crawls never accrete unbounded read-side
         # LWW resolution. Runs BEFORE the commit records snapshot ids.
-        if (
-            self.cfg.compact_after_generations
-            and self.store.urls.delta_generations() >= self.cfg.compact_after_generations
-        ):
-            self.store.urls.compact(meta={"op": "crawl_compact"})
-        if (
-            self.cfg.compact_after_generations
-            and self.store.id_map.delta_generations() >= self.cfg.compact_after_generations
-        ):
-            self.store.id_map.compact(meta={"op": "crawl_compact"})
+        for table in (self.store.urls, self.store.id_map):
+            if table.delta_generations() >= COMPACT_AFTER_GENERATIONS:
+                table.compact(meta={"op": "crawl_compact"})
         new_attempted = attempted.unionByName(
             errors.select(
                 "key",
@@ -929,7 +923,7 @@ class Crawl:
                 )
             )
             update_cuckoo(
-                pre_filter, inserts=inserts, n_buckets=cfg.n_buckets
+                pre_filter, inserts=inserts, n_buckets=self.store.urls.n_buckets
             ).write.mode("overwrite").parquet(os.path.join(nxt, "seenfilter.parquet"))
         edir = self._edir(epoch)
         host_metrics.write.mode("overwrite").parquet(os.path.join(edir, "metrics.parquet"))

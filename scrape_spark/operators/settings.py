@@ -14,12 +14,15 @@ Parity behaviors kept:
 
 Storage is a ManifestTable bucketed by xxhash64(domain) — the same
 snapshot-committed layout as url_store, so settings changes are atomic and
-time-travelable. The fetch-time join is a broadcast (dim-sized table).
+time-travelable. Upserts are merge-on-read like url_store's MERGE: each one
+appends a delta generation, and reads keep the row of the newest commit per
+domain; delete rewrites its touched buckets. The fetch-time join is a
+broadcast (dim-sized table).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -68,24 +71,11 @@ class DomainSettingsStore:
         )
 
     def upsert(self, df: DataFrame) -> int:
-        """REPLACE-by-domain; invalid domains are silently dropped (the
+        """REPLACE-by-domain: one appended delta generation; the newest
+        commit's row wins on read. Invalid domains are silently dropped (the
         reference rejects them at the API layer — here validation is the
         same predicate, F5)."""
-        new_rows = self._normalize(df)
-        touched = self.table.touched_buckets(new_rows)
-        if not touched:
-            cur = self.table.current_snapshot()
-            return cur if cur is not None else self.table.truncate({})
-        existing = self.table.read(buckets=touched).withColumn("__prec", F.lit(0))
-        delta = new_rows.withColumn("__prec", F.lit(1))
-        w = Window.partitionBy("dkey").orderBy(F.col("__prec").desc())
-        merged = (
-            existing.unionByName(delta)
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn", "__prec")
-        )
-        return self.table.replace_buckets(merged, touched)
+        return self.table.append_buckets(self._normalize(df))
 
     def read(self) -> DataFrame:
         return self.table.read().drop("dkey")

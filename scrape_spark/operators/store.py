@@ -7,23 +7,30 @@ sandbox has no Iceberg jars; on a real cluster ``ManifestTable`` is replaced
 1:1 by an Iceberg table with ``bucket(key)`` partitioning and MERGE INTO):
 
 - **Buckets**: rows land in ``bucket = pmod(key, n_buckets)``. At 100 TB you
-  raise ``n_buckets`` (2^12-2^16) so each bucket is a few GB.
-- **Merge-on-read deltas**: a MERGE appends per-bucket *delta files* to each
-  touched bucket's manifest list — commit bytes ∝ the delta, never the store
-  (keys hash uniformly, so any non-trivial batch touches every bucket; a
-  copy-on-write MERGE would rewrite approximately the whole store each
-  epoch). Last-write-wins is resolved at READ time: every manifest file
-  entry carries the commit sequence (``seq``), and a multi-generation bucket
-  read takes ``max_by(payload, (order_col, seq))`` per key. Buckets that
-  hold a single generation (freshly compacted, or never delta-merged) skip
-  resolution entirely — the scan plan is identical to a plain parquet read.
-  This is the merge-on-read shape Iceberg v2 uses.
+  raise ``n_buckets`` (2^12-2^16) so each bucket is a few GB. The manifest
+  records the layout: every commit writes the table's ``n_buckets``, an
+  existing table takes its count from there, and the constructor's
+  ``n_buckets`` applies only when a table is created (or when an older
+  manifest predates the field) — as Iceberg keeps the partition spec in
+  table metadata, so reopening a store can never re-bucket its keys.
+- **Merge-on-read deltas**: a MERGE (``append_buckets``, the one write path
+  every keyed upsert takes) dedupes its delta to one row per key and appends
+  it as per-bucket *delta files* to each touched bucket's manifest list —
+  commit bytes ∝ the delta, never the store (keys hash uniformly, so any
+  non-trivial batch touches every bucket; a copy-on-write MERGE would
+  rewrite approximately the whole store each epoch). Last-write-wins is
+  resolved at READ time: every manifest file entry carries the commit
+  sequence (``seq``), and a multi-generation bucket read takes
+  ``max_by(payload, (order_col, seq))`` per key. Buckets that hold a single
+  generation (freshly compacted, or never delta-merged) skip resolution
+  entirely — the scan plan is identical to a plain parquet read. This is
+  the merge-on-read shape Iceberg v2 uses.
 - **Compaction**: ``compact()`` folds a bucket's delta generations back into
   one file set (and ``UrlStore.maintain`` combines it with physical expiry),
   bounding read-side resolution work by the compaction cadence.
-- **Snapshots**: every commit writes an immutable manifest (bucket → file
-  entries ``{path, bytes, seq}``) and atomically swings a CURRENT pointer.
-  Readers pin a snapshot → crash-consistent checkpoint/resume and time
+- **Snapshots**: every commit writes an immutable manifest (``n_buckets``,
+  bucket → file entries ``{path, bytes, seq}``) and atomically swings a
+  CURRENT pointer. Readers pin a snapshot → crash-consistent checkpoint/resume and time
   travel for free (north rule). File sizes are recorded at commit time
   (commit-size accounting reads them). Join strategies are Spark's choice:
   the planner sizes a pruned read from its file listing, so the table layer
@@ -157,6 +164,9 @@ class ManifestTable:
     by ``(order_col, seq)`` — or by ``seq`` alone when None. This matches
     the write-time REPLACE semantics the copy-on-write merge used
     (storage.go:29-30: newest row per key wins, commit order breaks ties).
+
+    ``n_buckets`` is the bucket count for a table this call creates; an
+    existing table keeps the count its manifest records.
     """
 
     def __init__(
@@ -174,7 +184,6 @@ class ManifestTable:
         self.root = root
         self.schema = schema
         self.key_col = key_col
-        self.n_buckets = n_buckets
         self.order_col = order_col
         self.io = io or LocalFileIO()
         # columns whose per-file min/max are recorded in the manifest at
@@ -184,6 +193,7 @@ class ManifestTable:
         self.stats_cols = tuple(stats_cols)
         self.io.makedirs(os.path.join(root, "_manifests"))
         self.io.makedirs(os.path.join(root, "data"))
+        self.n_buckets = int(self._load_manifest().get("n_buckets", n_buckets))
 
     # -- manifest bookkeeping -------------------------------------------------
     def _manifest_path(self, snap: int) -> str:
@@ -261,7 +271,8 @@ class ManifestTable:
         over just the pruned buckets — and on a real cluster the aggregate's
         shuffle is what Iceberg's positional-delete readers pay too).
         ``resolve=False`` returns the raw multi-generation union (all row
-        versions) for inspection/tests."""
+        versions) — what a consumer that counts every committed copy reads
+        (the crawl's cuckoo seen-filter build)."""
         man = self._load_manifest(snapshot)
         items = (
             man["files"].items()
@@ -409,26 +420,23 @@ class ManifestTable:
         except Exception:  # pragma: no cover - footer unreadable ⇒ no stats
             return None
 
-    def _write_files(
-        self, df: DataFrame, seq: int, pre_bucketed: bool = False
-    ) -> dict[str, list[dict]]:
-        """Write df (must carry BUCKET_COL) as one file set; return
+    def _bucketed(self, df: DataFrame) -> DataFrame:
+        """df with BUCKET_COL, hash-partitioned by it. Hash-partitioning
+        n_buckets distinct ids collides some buckets into one write task
+        (balls-in-bins, ~2x straggler at 64 buckets/32 cores) — accepted:
+        co-locating each bucket in ONE task is what keeps the
+        one-file-per-bucket commit layout, and the write stage is
+        delta-sized, not table-sized."""
+        return df.withColumn(
+            BUCKET_COL, bucket_expr(self.key_col, self.n_buckets)
+        ).repartition(BUCKET_COL)
+
+    def _write_files(self, df: DataFrame, seq: int) -> dict[str, list[dict]]:
+        """Write df (from ``_bucketed``) as one file set; return
         bucket → [{path, bytes, seq, stats}] with sizes and column min/max
         recorded NOW (commit-time is the only moment the table layer ever
-        stats a data file or opens a footer).
-
-        ``pre_bucketed=True`` promises the caller already hash-partitioned
-        df by BUCKET_COL (the merge path, whose dedupe aggregation runs on
-        that same partitioning) — the repartition exchange is skipped, so
-        the payload crosses exactly one shuffle on the whole commit."""
+        stats a data file or opens a footer)."""
         out_dir = os.path.join(self.root, "data", uuid.uuid4().hex)
-        # hash-partitioning n_buckets distinct ids collides some buckets into
-        # one write task (balls-in-bins, ~2x straggler at 64 buckets/32
-        # cores) — accepted: co-locating each bucket in ONE task is what
-        # keeps the one-file-per-bucket commit layout, and the write stage
-        # is delta-sized, not table-sized
-        if not pre_bucketed:
-            df = df.repartition(BUCKET_COL)
         if self.stats_cols:
             # order rows within each file by the stats columns (reference
             # analog: the (expires DESC, ...) index, 00001_init.sql:30-33):
@@ -462,7 +470,13 @@ class ManifestTable:
 
     def _commit(self, files: dict[str, list[dict]], meta: dict[str, Any], snap: int) -> int:
         prev = self.current_snapshot()
-        man = {"snapshot": snap, "parent": prev, "files": files, "meta": meta}
+        man = {
+            "snapshot": snap,
+            "parent": prev,
+            "n_buckets": self.n_buckets,
+            "files": files,
+            "meta": meta,
+        }
         self.io.write_text_atomic(self._manifest_path(snap), json.dumps(man))
         self.io.write_text_atomic(
             os.path.join(self.root, "_manifests", "CURRENT"), str(snap)
@@ -473,28 +487,46 @@ class ManifestTable:
         prev = self.current_snapshot()
         return 0 if prev is None else prev + 1
 
-    def append_buckets(
-        self,
-        df: DataFrame,
-        meta: dict[str, Any] | None = None,
-        pre_bucketed: bool = False,
-    ) -> int:
-        """MERGE-ON-READ commit: append df's rows as new delta files on each
-        touched bucket's manifest list. Commit cost (shuffle + write + stat)
-        is ∝ the delta — the existing store is never read or rewritten.
-        df must carry at most one row per key (callers dedupe); conflicts
-        with prior generations resolve at read time via (order_col, seq).
-        An empty delta commits nothing (the write itself reports emptiness —
-        no separate count action). ``pre_bucketed``: df already carries a
-        correct BUCKET_COL and is hash-partitioned by it (see _write_files)."""
-        snap = self._next_snap()
-        if pre_bucketed:
-            new_files = self._write_files(df, snap, pre_bucketed=True)
-        else:
-            new_files = self._write_files(
-                df.withColumn(BUCKET_COL, bucket_expr(self.key_col, self.n_buckets)),
-                snap,
+    def dedupe_delta(self, df: DataFrame) -> DataFrame:
+        """The delta ``append_buckets`` writes: df's rows with a key,
+        deduped to the newest row per key by ``order_col`` (arbitrary among
+        ties, which the read side breaks by commit ``seq``), carrying
+        BUCKET_COL.
+
+        The payload crosses exactly ONE exchange: rows are hash-partitioned
+        by BUCKET_COL up front, and because ``bucket = pmod(key, n)`` is a
+        function of the key, that partitioning already clusters every key —
+        the ``groupBy(bucket, key)`` max_by reuses it (HashPartitioning on a
+        subset of the grouping keys satisfies the aggregate's required
+        distribution) and the bucketed file write needs no second
+        repartition."""
+        df = df.where(F.col(self.key_col).isNotNull())
+        cols = df.columns
+        ord_fields = [F.col(self.order_col)] if self.order_col else [F.lit(0)]
+        return (
+            self._bucketed(df)
+            .groupBy(BUCKET_COL, self.key_col)
+            .agg(
+                F.max_by(
+                    F.struct(*[F.col(c) for c in cols if c != self.key_col]),
+                    F.struct(*ord_fields),
+                ).alias("__row")
             )
+            .select(BUCKET_COL, self.key_col, "__row.*")
+        )
+
+    def append_buckets(self, df: DataFrame, meta: dict[str, Any] | None = None) -> int:
+        """MERGE-ON-READ commit (REPLACE-by-key, storage.go:29-30): dedupe
+        df to one row per key (``dedupe_delta``) and append it as new delta
+        files on each touched bucket's manifest list. Commit cost (one
+        shuffle + write + stat) is ∝ the delta — the existing store is never
+        read or rewritten. Conflicts with prior generations resolve at read
+        time via (order_col, seq). ONE Spark action (the delta write): an
+        empty delta commits nothing, and the write itself reports emptiness
+        — no separate count action. Callers must not pre-dedupe (two
+        shuffles for one invariant)."""
+        snap = self._next_snap()
+        new_files = self._write_files(self.dedupe_delta(df), snap)
         if not new_files:
             cur = self.current_snapshot()
             return cur if cur is not None else self.truncate(meta)
@@ -512,9 +544,7 @@ class ManifestTable:
         Used for deletes/compaction (which must drop rows) — NOT for routine
         merges, which append deltas."""
         snap = self._next_snap()
-        new_files = self._write_files(
-            df.withColumn(BUCKET_COL, bucket_expr(self.key_col, self.n_buckets)), snap
-        )
+        new_files = self._write_files(self._bucketed(df), snap)
         man = self._load_manifest()
         files = dict(man["files"])
         for b in touched:
@@ -671,32 +701,13 @@ class ManifestTable:
         return self.spark.read.schema(self.schema).parquet(*paths)
 
 
-def merge_delta_plan(
-    new_rows: DataFrame, key_col: str, order_col: str | None, n_buckets: int
-) -> DataFrame:
-    """The single-exchange merge delta: bucket → repartition(bucket) →
-    per-(bucket, key) max_by dedupe reusing that partitioning (see
-    UrlStore._merge_table). Exposed for plan assertions in tests."""
-    new_rows = new_rows.where(F.col(key_col).isNotNull())
-    cols = new_rows.columns
-    ord_fields = [F.col(order_col)] if order_col else [F.lit(0)]
-    bucketed = new_rows.withColumn(
-        BUCKET_COL, bucket_expr(key_col, n_buckets)
-    ).repartition(BUCKET_COL)
-    return (
-        bucketed.groupBy(BUCKET_COL, key_col)
-        .agg(
-            F.max_by(
-                F.struct(*[F.col(c) for c in cols if c != key_col]),
-                F.struct(*ord_fields),
-            ).alias("__row")
-        )
-        .select(BUCKET_COL, key_col, "__row.*")
-    )
-
-
 class UrlStore:
-    """The reference's URLDataStore re-expressed over two ManifestTables."""
+    """The reference's URLDataStore re-expressed over two ManifestTables.
+
+    ``n_buckets`` applies when the store is created; reopening takes the
+    count the urls manifest records, and id_map must record the same one
+    (``resolve_keys_pruned`` derives both tables' buckets from one key
+    set), else ValueError."""
 
     def __init__(
         self,
@@ -725,9 +736,14 @@ class UrlStore:
             os.path.join(root, "id_map"),
             ID_MAP_SCHEMA,
             "requested_id",
-            n_buckets,
+            self.urls.n_buckets,
             order_col=None,
         )
+        if self.id_map.n_buckets != self.urls.n_buckets:
+            raise ValueError(
+                f"store {root}: urls has {self.urls.n_buckets} buckets but "
+                f"id_map has {self.id_map.n_buckets}"
+            )
 
     # -- save (S9): REPLACE INTO urls + id_map --------------------------------
     def merge(self, results: DataFrame, meta: dict[str, Any] | None = None) -> int:
@@ -756,7 +772,7 @@ class UrlStore:
         )
 
         # alias rows: requested key → canonical (url) key.
-        # NOT pre-deduped — _merge_table's max_by dedupe is the single
+        # NOT pre-deduped — append_buckets' max_by dedupe is the single
         # per-key pass (a dropDuplicates here was a second full shuffle).
         requested = (
             F.col(REQUESTED_KEY)
@@ -768,40 +784,9 @@ class UrlStore:
             F.col("key").alias("canonical_id"),
         ).where(F.col("requested_id").isNotNull())
 
-        snap = self._merge_table(self.urls, new_urls, "key", order_col="fetch_time", meta=meta)
-        self._merge_table(self.id_map, new_aliases, "requested_id", order_col=None, meta=meta)
+        snap = self.urls.append_buckets(new_urls, meta=meta)
+        self.id_map.append_buckets(new_aliases, meta=meta)
         return snap
-
-    def _merge_table(
-        self,
-        table: ManifestTable,
-        new_rows: DataFrame,
-        key_col: str,
-        order_col: str | None,
-        meta: dict[str, Any] | None,
-    ) -> int:
-        """MERGE = dedupe the delta to one row per key, then APPEND it as
-        per-bucket delta files (merge-on-read). The existing store is never
-        read or rewritten here — commit cost ∝ the delta, matching the
-        reference's O(delta) ``REPLACE INTO`` (storage.go:29-30). Conflicts
-        with earlier generations resolve at read time by (order_col, seq);
-        within this one commit, the max_by below keeps the newest row per
-        key (map-side combinable — no pre-sorted input required, the shape
-        that survives hot-key skew at 100 TB).
-
-        The payload crosses exactly ONE exchange: rows are hash-partitioned
-        by BUCKET_COL up front, and because ``bucket = pmod(key, n)`` is a
-        function of the key, that partitioning already clusters every key —
-        the ``groupBy(bucket, key)`` dedupe reuses it (HashPartitioning on a
-        subset of the grouping keys satisfies the aggregate's required
-        distribution) and the bucketed file write needs no second
-        repartition. The previous shape paid two full-payload shuffles
-        (groupBy(key) + repartition(bucket)) for the same commit. ONE Spark
-        action total (the delta write) — emptiness is detected from the
-        write result, and intra-delta dedupe happens here only (callers
-        must NOT pre-dedupe: two shuffles for one invariant)."""
-        deduped = merge_delta_plan(new_rows, key_col, order_col, table.n_buckets)
-        return table.append_buckets(deduped, meta=meta, pre_bucketed=True)
 
     # -- read (S6 + J1 + F3) ---------------------------------------------------
     def resolve_keys_pruned(
@@ -821,12 +806,13 @@ class UrlStore:
         is small, and a larger slice shuffles.
 
         The batch's distinct buckets are computed ONCE and serve both
-        tables (urls and id_map share n_buckets, so pmod(key, n) is the
-        same bucket either way). The canonical-side buckets come from the
-        already-pruned id_map slice (rows ∝ the batch's aliases), NOT from
-        re-evaluating the resolve join over the whole batch — the previous
-        shape ran the request pipeline + join a second time just to learn
-        which buckets to open (r6; measured ~0.5 s/batch at sf0.1). The
+        tables (urls and id_map share n_buckets — the constructor enforces
+        it — so pmod(key, n) is the same bucket either way). The
+        canonical-side buckets come from the already-pruned id_map slice
+        (rows ∝ the batch's aliases), NOT from re-evaluating the resolve
+        join over the whole batch — the previous shape ran the request
+        pipeline + join a second time just to learn which buckets to open
+        (r6; measured ~0.5 s/batch at sf0.1). The
         returned bucket list is a superset of the exact canonical-key
         buckets (requested ∪ alias-target buckets) — pruning stays an
         optimization, never a correctness gate."""

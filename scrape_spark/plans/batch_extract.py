@@ -253,36 +253,27 @@ def fetch_join(
             corpus, misses["parsed_url"] == corpus["__page_url"], "left"
         )
     # The hop machinery multiplies plan branches (each union arm re-scans the
-    # fetch join), and the text/plain passthrough ships an extra column
-    # through the Arrow boundary — pay for either ONLY when the corpus
-    # actually contains such rows. One combined column-pruned probe scan,
-    # memoized per pages DataFrame; a plain html-only corpus (the common
-    # crawl epoch) keeps the single-join, no-extra-column hot path.
-    traits = getattr(pages, "_scrape_fetch_traits", None)
-    if traits is None:
-        if "redirect_to" in cols or "ctype" in cols:
-            row = pages.agg(
-                F.max(
-                    (F.col("redirect_to").isNotNull() if "redirect_to" in cols else F.lit(False)).cast("int")
-                ).alias("r"),
-                F.max(
-                    ((mime_type(F.col("ctype")) == "text/plain") if "ctype" in cols else F.lit(False)).cast("int")
-                ).alias("p"),
-            ).collect()[0]
-            traits = {"redirects": bool(row.r), "plain": bool(row.p)}
-        else:
-            traits = {"redirects": False, "plain": False}
+    # fetch join) — pay for it ONLY when the corpus actually contains
+    # redirects. One column-pruned probe scan, run only when the corpus has
+    # a redirect_to column and memoized per pages DataFrame; a redirect-free
+    # corpus (the common crawl epoch) keeps the single-join hot path.
+    redirects = getattr(pages, "_scrape_has_redirects", None)
+    if redirects is None:
+        has_target = F.max(F.col("redirect_to").isNotNull().cast("int"))
+        redirects = "redirect_to" in cols and bool(pages.agg(has_target).collect()[0][0])
         try:
-            pages._scrape_fetch_traits = traits
+            pages._scrape_has_redirects = redirects
         except AttributeError:  # pragma: no cover
             pass
 
-    def _with_plain(df: DataFrame) -> DataFrame:
-        col = _plain_text_col(df) if traits["plain"] else F.lit(None).cast("string")
-        return df.withColumn("__plain_text", col)
+    if redirects:
+        joined = _follow_redirects(joined, corpus, misses.columns)
+    joined = joined.withColumn("__plain_text", _plain_text_col(joined))
+    return extract_pages(joined, html_col="html")
 
-    if not traits["redirects"]:
-        return extract_pages(_with_plain(joined), html_col="html")
+
+def _follow_redirects(joined: DataFrame, corpus: DataFrame, req_cols: list[str]) -> DataFrame:
+    """Follow 3xx rows through up to MAX_REDIRECT_HOPS corpus re-probes."""
     # never-null predicate: False when redirect_to is null (False AND NULL ≡
     # False), defined when it isn't (coalesce guards a null status)
     is_redirect = F.col("__redirect_to").isNotNull() & F.coalesce(
@@ -290,18 +281,14 @@ def fetch_join(
     )
     done = joined.filter(~is_redirect)
     pending = joined.filter(is_redirect)
-    req_cols = [c for c in misses.columns]
     for _hop in range(MAX_REDIRECT_HOPS):
         # follow one hop: re-probe the corpus with the redirect target; the
         # requested columns ride along unchanged (parsed_url stays the
         # requested URL — the reference echoes RequestedURL on redirects)
         hop = pending.select(*req_cols, F.col("__redirect_to").alias("__target"))
         hopped = _probe_corpus(hop, corpus, "__target").drop("__target")
-        still = F.col("__redirect_to").isNotNull() & F.coalesce(
-            F.col("__status").between(300, 399), F.lit(True)
-        )
-        done = done.unionByName(hopped.filter(~still))
-        pending = hopped.filter(still)
+        done = done.unionByName(hopped.filter(~is_redirect))
+        pending = hopped.filter(is_redirect)
     # hop budget exhausted: surface as an error row (Go http.Client:
     # "stopped after 10 redirects"); 3xx itself is not an error status
     exhausted = pending.withColumn(
@@ -311,13 +298,13 @@ def fetch_join(
             F.lit(f"stopped after {MAX_REDIRECT_HOPS} redirects"),
         ),
     )
-    done = done.unionByName(exhausted)
-    return extract_pages(_with_plain(done), html_col="html")
+    return done.unionByName(exhausted)
 
 
 def _plain_text_col(df: DataFrame):
     """text/plain bodies ARE the content (no markup to extract) — captured
-    before extract_pages drops the raw bytes. Decode only when html is
+    before extract_pages drops the raw bytes; null on every other row, and
+    on every row of a corpus with no ``ctype``. Decode only when html is
     actually binary: user parquet read via the CLI may carry a string-typed
     html column, where F.decode would fail analysis."""
     from pyspark.sql.types import BinaryType

@@ -381,6 +381,32 @@ def test_all_hit_rerequest_commits_nothing(spark, pages, tmp_path):
         assert rows[u].content_text == stored[s].content_text
 
 
+def test_reopened_store_keeps_its_bucket_count(spark, pages, tmp_path):
+    """The manifest owns the table layout: a store created with 8 buckets
+    and reopened with the constructor default (as every CLI subcommand
+    opens it) still finds every stored URL, fetches nothing on an all-hit
+    batch, and keeps one row per key."""
+    root = str(tmp_path / "s")
+    urls = [page_url(h, i) for h in range(4) for i in range(1, 11)]
+    created = UrlStore(spark, root, n_buckets=8)
+    first = batch_extract(spark, _req_df(spark, urls), pages, created)
+    stored = {r.original_url: r.fetch_time for r in first.collect() if r.error is None}
+    first.unpersist()
+    assert len(stored) == 40
+
+    store = UrlStore(spark, root)
+    assert store.urls.n_buckets == store.id_map.n_buckets == 8
+    assert store.fetch(urls).count() == 40
+    snaps = _snapshots(store)
+    out = batch_extract(spark, _req_df(spark, urls), pages, store)
+    rows = {r.original_url: r.fetch_time for r in out.collect()}
+    out.unpersist()
+    assert _snapshots(store) == snaps
+    assert rows == stored
+    keys = store.urls.read().select("key")
+    assert keys.count() == keys.distinct().count() == 40
+
+
 def test_mixed_batch_delta_holds_only_misses(spark, pages, tmp_path):
     """A mixed batch's urls delta holds exactly the miss rows, and its
     id_map delta exactly their aliases."""

@@ -56,7 +56,7 @@ def _mk_crawl(spark, tmpdir, pages, seen_filter="none"):
         pages,
         robots_table(spark, N_HOSTS),
         CrawlConfig(
-            epoch_seconds=EPOCH_SECONDS, max_depth=6, n_buckets=8,
+            epoch_seconds=EPOCH_SECONDS, max_depth=6,
             seen_filter=seen_filter, shuffle_partitions=4,
         ),
     )
@@ -289,18 +289,20 @@ def test_cuckoo_epoch_job_count_bounded(spark, tmp_path_factory, pages):
     shutil.rmtree(tmpdir, ignore_errors=True)
 
 
-def test_auto_compaction_bounds_delta_generations(spark, tmp_path_factory, pages, model):
-    """run_epoch must compact once any bucket reaches the configured delta-
-    generation limit — a long crawl's read-side LWW resolution stays bounded
-    — without changing crawl semantics."""
+def test_auto_compaction_bounds_delta_generations(
+    spark, tmp_path_factory, pages, model, monkeypatch
+):
+    """run_epoch must compact once any bucket reaches the delta-generation
+    limit — a long crawl's read-side LWW resolution stays bounded — without
+    changing crawl semantics."""
+    import scrape_spark.operators.frontier as fr
+
+    monkeypatch.setattr(fr, "COMPACT_AFTER_GENERATIONS", 2)
     tmpdir = str(tmp_path_factory.mktemp("crawl_compact"))
     store = UrlStore(spark, f"{tmpdir}/store", n_buckets=8)
     crawl = Crawl(
         spark, f"{tmpdir}/state", store, pages, robots_table(spark, N_HOSTS),
-        CrawlConfig(
-            epoch_seconds=EPOCH_SECONDS, max_depth=6, n_buckets=8,
-            shuffle_partitions=4, compact_after_generations=2,
-        ),
+        CrawlConfig(epoch_seconds=EPOCH_SECONDS, max_depth=6, shuffle_partitions=4),
     )
     crawl.run(N_EPOCHS, seeds=seed_urls(N_HOSTS))
     assert store.urls.delta_generations() <= 2
@@ -453,7 +455,7 @@ def test_cuckoo_build_counts_store_copies_per_generation(
         pages,
         robots_table(spark, N_HOSTS),
         CrawlConfig(
-            epoch_seconds=EPOCH_SECONDS, max_depth=6, n_buckets=8,
+            epoch_seconds=EPOCH_SECONDS, max_depth=6,
             seen_filter="cuckoo", shuffle_partitions=4,
         ),
     )
@@ -486,8 +488,7 @@ def test_robots_discovery_no_corpus_antijoin(spark, tmp_path_factory, pages):
     store = UrlStore(spark, f"{tmpdir}/store", n_buckets=8)
     crawl = Crawl(
         spark, f"{tmpdir}/state", store, pages, None,
-        CrawlConfig(epoch_seconds=EPOCH_SECONDS, max_depth=6, n_buckets=8,
-                    shuffle_partitions=4),
+        CrawlConfig(epoch_seconds=EPOCH_SECONDS, max_depth=6, shuffle_partitions=4),
     )
     crawl.seed(seed_urls(N_HOSTS))
     crawl._epoch_caches = []
@@ -559,8 +560,7 @@ def test_robots_join_is_sized_by_spark(
         discovered = Crawl(
             spark, f"{discovered_dir}/state",
             UrlStore(spark, f"{discovered_dir}/store", n_buckets=8), pages, None,
-            CrawlConfig(epoch_seconds=EPOCH_SECONDS, max_depth=6, n_buckets=8,
-                        shuffle_partitions=4),
+            CrawlConfig(epoch_seconds=EPOCH_SECONDS, max_depth=6, shuffle_partitions=4),
         )
         discovered.seed(seed_urls(N_HOSTS))
         discovered.run_epoch(0)
@@ -607,8 +607,7 @@ def test_robots_discovered_from_corpus_matches_model(spark, tmp_path_factory, pa
     crawl = Crawl(
         spark, f"{tmpdir}/state", store, corpus, None,
         CrawlConfig(
-            epoch_seconds=EPOCH_SECONDS, max_depth=6, n_buckets=8,
-            shuffle_partitions=4,
+            epoch_seconds=EPOCH_SECONDS, max_depth=6, shuffle_partitions=4,
         ),
     )
     stats = crawl.run(N_EPOCHS, seeds=seed_urls(N_HOSTS))
@@ -679,8 +678,7 @@ def test_crawl_discovers_relative_links(spark, tmp_path_factory):
         crawl = Crawl(
             spark, f"{tmpdir}/state", UrlStore(spark, f"{tmpdir}/store", n_buckets=8),
             pages_df, spark.createDataFrame([], ROBOTS_SCHEMA),
-            CrawlConfig(epoch_seconds=10.0, max_depth=6, n_buckets=8,
-                        shuffle_partitions=4),
+            CrawlConfig(epoch_seconds=10.0, max_depth=6, shuffle_partitions=4),
         )
         crawl.run(4, seeds=["https://rel0.test/a/p0.html"])
         sel = [
@@ -799,7 +797,7 @@ def test_robots_ttl_expires_and_refetches(spark, tmp_path_factory, pages):
             spark, f"{tmpdir}/state",
             UrlStore(spark, f"{tmpdir}/store", n_buckets=8),
             corpus, None,
-            CrawlConfig(epoch_seconds=EPOCH_SECONDS, max_depth=6, n_buckets=8,
+            CrawlConfig(epoch_seconds=EPOCH_SECONDS, max_depth=6,
                         shuffle_partitions=4, robots_ttl_epochs=ttl),
         )
         crawl.run(3, seeds=seed_urls(N_HOSTS))
@@ -843,7 +841,7 @@ def test_robots_ttl_does_not_reharvest_sitemaps(spark, tmp_path_factory, pages):
         spark, f"{tmpdir}/state",
         UrlStore(spark, f"{tmpdir}/store", n_buckets=8),
         corpus, None,
-        CrawlConfig(epoch_seconds=EPOCH_SECONDS, max_depth=6, n_buckets=8,
+        CrawlConfig(epoch_seconds=EPOCH_SECONDS, max_depth=6,
                     shuffle_partitions=4, robots_ttl_epochs=1,
                     discover_sitemaps=True),
     )

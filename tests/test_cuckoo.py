@@ -272,7 +272,7 @@ def test_watermark_expiry_deletes_exactly_once(spark, tmp_path_factory):
         store,
         synth_pages(spark, 2, 5),
         robots_table(spark, 2),
-        CrawlConfig(n_buckets=4, seen_filter="cuckoo"),
+        CrawlConfig(seen_filter="cuckoo"),
     )
     fresh = results.select("key")
     att = results.select("key").limit(0)

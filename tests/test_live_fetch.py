@@ -569,7 +569,7 @@ class TestFetchPages:
             pages=None,
             robots=None,  # discover /robots.txt over the network
             config=CrawlConfig(
-                epoch_seconds=10.0, max_depth=4, n_buckets=4,
+                epoch_seconds=10.0, max_depth=4,
                 shuffle_partitions=4, user_agent="scrape-spark",
             ),
             live=LiveFetchConfig(timeout=10, n_partitions=2),

@@ -200,7 +200,7 @@ def test_null_rule_in_supplied_table_is_skipped(spark, tmp_path):
         spark, str(tmp_path / "state"),
         UrlStore(spark, str(tmp_path / "store"), n_buckets=8),
         synth_pages(spark, 2, 10), robots,
-        CrawlConfig(epoch_seconds=4.0, n_buckets=8, shuffle_partitions=4),
+        CrawlConfig(epoch_seconds=4.0, shuffle_partitions=4),
     )
     crawl.seed(seed_urls(2))
     stats = crawl.run_epoch(0)
@@ -244,7 +244,7 @@ def test_crawl_with_parsed_robots_matches_model(spark, tmp_path_factory):
         pages,
         robots,
         CrawlConfig(
-            epoch_seconds=epoch_s, max_depth=6, n_buckets=8, shuffle_partitions=4
+            epoch_seconds=epoch_s, max_depth=6, shuffle_partitions=4
         ),
     )
     crawl.run(n_epochs, seeds=seed_urls(n_hosts))

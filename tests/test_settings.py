@@ -52,6 +52,21 @@ def test_replace_upsert(spark, store):
     assert len(r) == 1 and r[0].sitename == "New Name"
 
 
+def test_upsert_appends_a_generation_and_newest_wins(spark, tmp_path):
+    """Upserts are merge-on-read: each one appends a delta generation, and a
+    read resolves to the newer commit's row."""
+    s = DomainSettingsStore(spark, str(tmp_path / "gen"))
+    schema = (
+        "domain string, sitename string, fetch_client string, "
+        "user_agent string, headers map<string,string>"
+    )
+    s.upsert(spark.createDataFrame([("gen.test", "Old", "direct", None, None)], schema))
+    s.upsert(spark.createDataFrame([("GEN.test", "New", None, None, None)], schema))
+    assert s.table.delta_generations() == 2
+    r = s.fetch("gen.test").collect()
+    assert len(r) == 1 and r[0].sitename == "New" and r[0].fetch_client is None
+
+
 def test_wildcard_range(store):
     got = [r.domain for r in store.fetch_range(query="*.example.net").collect()]
     assert got == ["a.example.net", "b.example.net"]

@@ -651,7 +651,7 @@ def test_merge_delta_single_exchange(spark, tmp_path):
     Exchange node, and the dedupe still keeps the newest row per key."""
     from pyspark.sql import functions as F
 
-    from scrape_spark.operators.store import merge_delta_plan
+    from scrape_spark.operators.store import ManifestTable
 
     src = tmp_path / "delta_src"
     spark.range(1000).select(
@@ -660,13 +660,70 @@ def test_merge_delta_single_exchange(spark, tmp_path):
         (F.col("id") * 2).alias("payload"),
     ).write.parquet(str(src))
     rows = spark.read.parquet(str(src))
-    delta = merge_delta_plan(rows, "key", "fetch_time", n_buckets=16)
+    table = ManifestTable(
+        spark, str(tmp_path / "t"), rows.schema, "key", n_buckets=16,
+        order_col="fetch_time",
+    )
+    delta = table.dedupe_delta(rows)
     plan = delta._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1, plan
     got = {r["key"]: (r["fetch_time"], r["payload"]) for r in delta.collect()}
     assert len(got) == 100
     # newest (max fetch_time) row per key survives: key k keeps id 900+k
     assert got[7] == (907, 1814)
+    # and the commit writes exactly that delta
+    table.append_buckets(rows)
+    assert {r["key"]: (r["fetch_time"], r["payload"]) for r in table.read().collect()} == got
+
+
+def test_manifest_records_bucket_count(spark, store, tmp_path):
+    """Every commit records n_buckets; reopening takes the recorded count,
+    whatever the constructor says."""
+    _merge(spark, store, [_result_row("https://example.com/nb",
+                                      expires=dt.datetime(2099, 1, 1))])
+    assert store.urls._load_manifest()["n_buckets"] == 8
+    assert store.id_map._load_manifest()["n_buckets"] == 8
+    root = str(tmp_path / "store")
+    assert UrlStore(spark, root, n_buckets=32).urls.n_buckets == 8
+    store.clear()  # truncate commits record it too
+    assert store.urls._load_manifest()["n_buckets"] == 8
+    assert UrlStore(spark, root).id_map.n_buckets == 8
+
+
+def test_manifest_without_bucket_count_takes_constructor_value(spark, store, tmp_path):
+    """A manifest written before the field existed leaves the count to the
+    constructor; the next commit records it."""
+    import json
+
+    _merge(spark, store, [_result_row("https://example.com/old",
+                                      expires=dt.datetime(2099, 1, 1))])
+    for t in (store.urls, store.id_map):
+        path = t._manifest_path(t.current_snapshot())
+        with open(path) as f:
+            man = json.load(f)
+        del man["n_buckets"]
+        with open(path, "w") as f:
+            f.write(json.dumps(man))
+    reopened = UrlStore(spark, str(tmp_path / "store"), n_buckets=8)
+    assert reopened.urls.n_buckets == reopened.id_map.n_buckets == 8
+    assert reopened.fetch(["https://example.com/old"]).count() == 1
+    reopened.clear()
+    assert reopened.urls._load_manifest()["n_buckets"] == 8
+
+
+def test_mismatched_table_bucket_counts_rejected(spark, tmp_path):
+    """urls and id_map must share one bucket count (resolve_keys_pruned
+    probes both with one bucket set)."""
+    from scrape_spark.operators.store import ManifestTable
+    from scrape_spark.schemas import ID_MAP_SCHEMA
+
+    root = tmp_path / "store"
+    UrlStore(spark, str(root), n_buckets=8).urls.truncate()
+    ManifestTable(
+        spark, str(root / "id_map"), ID_MAP_SCHEMA, "requested_id", n_buckets=4
+    ).truncate()
+    with pytest.raises(ValueError, match="urls has 8 buckets but id_map has 4"):
+        UrlStore(spark, str(root))
 
 
 def test_expired_snapshot_read_raises_clear_error(spark, store):

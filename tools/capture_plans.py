@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -57,7 +58,7 @@ def main():
     # delta plan
     from pyspark.sql import functions as F
 
-    from scrape_spark.operators.store import merge_delta_plan
+    from scrape_spark.operators.store import ManifestTable
     from scrape_spark.plans.batch_extract import batch_extract, prepare_requests
     from scrape_spark.sources.pages import ensure_pages
 
@@ -73,8 +74,12 @@ def main():
     delta = prepare_requests(pages.select("url")).select(
         F.col("key"), F.col("parsed_url"), F.current_timestamp().alias("fetch_time")
     )
+    table = ManifestTable(
+        spark, tempfile.mkdtemp(prefix="plans_store_"), delta.schema, "key",
+        n_buckets=32, order_col="fetch_time",
+    )
     with open(os.path.join(out_dir, f"store_merge_delta_{suffix}.txt"), "w") as f:
-        f.write(explain_formatted(merge_delta_plan(delta, "key", "fetch_time", 32)))
+        f.write(explain_formatted(table.dedupe_delta(delta)))
     print("wrote store_merge_delta")
 
 

@@ -6,6 +6,7 @@ regression re-introduces a known scale-killer:
   - corpus scan must read only the fetch columns, never `text`
   - store reads must push the expiry filter to parquet
   - the in-flight dedupe must be a hash aggregate, not a sort
+  - a store MERGE delta must cross exactly one exchange
   - no CartesianProduct / BroadcastNestedLoopJoin anywhere
   - the flagship must contain WholeStageCodegen spans
 
@@ -91,6 +92,13 @@ def main() -> int:
 
     probe = store.fetch([page_url(0, 1)])
     check("point fetch has no cartesian join", "CartesianProduct" not in plan_of(probe))
+
+    for table in (store.urls, store.id_map):
+        delta = table.dedupe_delta(table.read())
+        delta.collect()
+        n_ex = plan_of(delta).count("Exchange")
+        name = os.path.basename(table.root)
+        check(f"{name} MERGE delta is ONE exchange", n_ex == 1, f"{n_ex} exchanges")
 
     # --- corpus-export plan ----------------------------------------------------
     from scrape_spark.plans.export import export_corpus
