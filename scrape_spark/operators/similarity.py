@@ -299,29 +299,6 @@ def normalized(vec_col: Column) -> Column:
     return F.transform(vd, lambda x: x / n)
 
 
-def embedding_neardup_pairs_naive(
-    df: DataFrame,
-    threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """All pairs (i < j) with cosine > threshold — row-pair crossJoin with a
-    per-pair Catalyst fold. Exact but the fold is not codegen'd, so this is
-    the slow shape; kept ONLY as the test oracle for the blocked version."""
-    base = df.select(
-        F.col(id_col).alias("__id"), normalized(F.col(vec_col)).alias("__vn")
-    ).cache()
-    a = base.select(F.col("__id").alias("i"), F.col("__vn").alias("va"))
-    b = base.select(F.col("__id").alias("j"), F.col("__vn").alias("vb"))
-    return (
-        a.crossJoin(b)
-        .filter(F.col("i") < F.col("j"))
-        .withColumn("sim", _dot(F.col("va"), F.col("vb")))
-        .filter(F.col("sim") > threshold)
-        .select("i", "j", F.round("sim", 6).alias("sim_r"))
-    )
-
-
 def embedding_neardup_pairs(
     df: DataFrame,
     threshold: float = 0.4,

@@ -155,6 +155,29 @@ class LocalFileIO(FileIO):
             pass  # not empty / already gone
 
 
+def _newest_per_key(
+    df: DataFrame, group_cols: list[str], payload: list[str], ord_fields: list
+) -> DataFrame:
+    """Last-write-wins aggregate shared by the read-side resolve and the
+    MERGE dedupe: per group, the payload columns of the row maximal by
+    ``struct(ord_fields)``, as ``group_cols + payload``. ``max_by`` over a
+    struct has no hash-aggregate buffer, so Spark plans it as a
+    ``SortAggregate`` that sorts its input by the group keys. On the read
+    side the partial aggregate sorts and combines before the key exchange
+    and the final one sorts again after it; the MERGE dedupe's bucket
+    repartition comes first, so its partial and final aggregates both run
+    after that one exchange, over one sort."""
+    return (
+        df.groupBy(*group_cols)
+        .agg(
+            F.max_by(
+                F.struct(*[F.col(c) for c in payload]), F.struct(*ord_fields)
+            ).alias("__row")
+        )
+        .select(*group_cols, "__row.*")
+    )
+
+
 class ManifestTable:
     """Snapshot-committed bucketed Parquet table with merge-on-read deltas
     (see module docstring).
@@ -267,9 +290,10 @@ class ManifestTable:
         post-compaction case) take a plain pruned parquet scan — zero
         resolution overhead, full filter pushdown. Only when some requested
         bucket carries multiple delta generations does the plan add the
-        per-key ``max_by`` (a hash aggregate with map-side partial combine
-        over just the pruned buckets — and on a real cluster the aggregate's
-        shuffle is what Iceberg's positional-delete readers pay too).
+        per-key ``max_by`` (``_newest_per_key``: a sort-based aggregate with
+        a map-side partial over just the pruned buckets — and on a real
+        cluster the aggregate's shuffle is what Iceberg's positional-delete
+        readers pay too).
         ``resolve=False`` returns the raw multi-generation union (all row
         versions) — what a consumer that counts every committed copy reads
         (the crawl's cuckoo seen-filter build)."""
@@ -358,22 +382,14 @@ class ManifestTable:
         )
 
     def _resolve(self, df: DataFrame) -> DataFrame:
-        """Last-write-wins over (order_col, __seq): hash aggregate, map-side
-        combinable, no per-key sort (the skew-surviving shape; struct
+        """Last-write-wins over (order_col, __seq) across generations (struct
         comparison puts NULL order_col lowest = desc_nulls_last)."""
         ord_fields = [F.col("__seq")]
         if self.order_col:
             ord_fields = [F.col(self.order_col), F.col("__seq")]
         payload = [c for c in self.schema.fieldNames() if c != self.key_col]
-        return (
-            df.groupBy(self.key_col)
-            .agg(
-                F.max_by(
-                    F.struct(*[F.col(c) for c in payload]), F.struct(*ord_fields)
-                ).alias("__row")
-            )
-            .select(self.key_col, "__row.*")
-            .select(*self.schema.fieldNames())
+        return _newest_per_key(df, [self.key_col], payload, ord_fields).select(
+            *self.schema.fieldNames()
         )
 
     # -- write ----------------------------------------------------------------
@@ -501,18 +517,10 @@ class ManifestTable:
         distribution) and the bucketed file write needs no second
         repartition."""
         df = df.where(F.col(self.key_col).isNotNull())
-        cols = df.columns
+        payload = [c for c in df.columns if c != self.key_col]
         ord_fields = [F.col(self.order_col)] if self.order_col else [F.lit(0)]
-        return (
-            self._bucketed(df)
-            .groupBy(BUCKET_COL, self.key_col)
-            .agg(
-                F.max_by(
-                    F.struct(*[F.col(c) for c in cols if c != self.key_col]),
-                    F.struct(*ord_fields),
-                ).alias("__row")
-            )
-            .select(BUCKET_COL, self.key_col, "__row.*")
+        return _newest_per_key(
+            self._bucketed(df), [BUCKET_COL, self.key_col], payload, ord_fields
         )
 
     def append_buckets(self, df: DataFrame, meta: dict[str, Any] | None = None) -> int:

@@ -15,13 +15,16 @@ due-scan access path, which is exactly the shape `due_feeds` computes:
   the defaults, existing feeds get ``last_request`` bumped;
 - every completed refresh sets ``last_refresh = now``.
 
+No engine path writes the table yet: the request upsert and the refresh
+write exist only as test helpers (``tests/helpers.py``) that drive
+``due_feeds``.
+
 All timestamps are integer epoch seconds (the reference stores
 ``unixepoch()``), passed in explicitly — nothing here calls the clock, so
 scheduling decisions replay deterministically from checkpoints.
 
 Scale posture: the feeds table is dimension-sized (one row per feed, not
-per item); every operation below is a single key-partitioned join or
-aggregate over it, and `due_feeds` is a pushdown-able filter + projection.
+per item), and `due_feeds` is a pushdown-able filter + projection over it.
 """
 
 from __future__ import annotations
@@ -43,8 +46,6 @@ FEED_REFRESH_SCHEMA = T.StructType(
     ]
 )
 
-_COLS = [f.name for f in FEED_REFRESH_SCHEMA.fields]
-
 
 def due_feeds(feeds: DataFrame, now: int) -> DataFrame:
     """Feeds due for a refresh pass at `now`: overdue by cadence AND still
@@ -58,36 +59,4 @@ def due_feeds(feeds: DataFrame, now: int) -> DataFrame:
         .filter(F.col("due_at") <= F.lit(int(now)))
         .filter(F.col("last_request") + F.col("idle_timeout") > F.lit(int(now)))
         .select("url", "due_at", "last_refresh", "refresh_interval")
-    )
-
-
-def record_request(feeds: DataFrame, requests: DataFrame, now: int) -> DataFrame:
-    """Client requested these feed urls: upsert (PK REPLACE shape). Existing
-    rows keep their cadence state with `last_request` bumped; new rows enter
-    with the schema defaults."""
-    inc = requests.select("url").distinct()
-    touched = inc.join(feeds, "url", "left").select(
-        "url",
-        F.lit(int(now)).alias("last_request"),
-        F.coalesce("refresh_interval", F.lit(DEFAULT_REFRESH_INTERVAL)).alias(
-            "refresh_interval"
-        ),
-        F.coalesce("last_refresh", F.lit(0)).cast("long").alias("last_refresh"),
-        F.coalesce("idle_timeout", F.lit(DEFAULT_IDLE_TIMEOUT)).alias("idle_timeout"),
-    )
-    return feeds.join(inc, "url", "left_anti").select(*_COLS).unionByName(touched)
-
-
-def record_refresh(feeds: DataFrame, refreshed: DataFrame, now: int) -> DataFrame:
-    """A refresh pass completed for these urls: set last_refresh = now."""
-    done = refreshed.select("url").distinct().withColumn("__now", F.lit(int(now)))
-    return (
-        feeds.join(done, "url", "left")
-        .select(
-            "url",
-            "last_request",
-            "refresh_interval",
-            F.coalesce("__now", F.col("last_refresh")).cast("long").alias("last_refresh"),
-            "idle_timeout",
-        )
     )

@@ -204,51 +204,6 @@ def synth_pages(
     return rng.mapInPandas(gen, schema=PAGES_FETCH_SCHEMA)
 
 
-FIXTURE_HOST = "fixture.ex0.test"
-
-
-def fetch_fixture_pages(spark: SparkSession) -> DataFrame:
-    """Corpus fixture mirroring the reference fetcher's httptest servers —
-    one URL per behavior class, used by tests/test_fetch_model.py:
-
-    - /status/{400,401,403,404,429,500,503}: error statuses
-      (fetcher_test.go:19-66)
-    - /redirect/{301,302,303,307,308} → /200: followed transparently
-      (fetcher_test.go:68-111; Go http.Client default)
-    - /ctype/{html,xhtml,text}: allowed; /ctype/{xml,json,unsupported}: 415
-      (fetcher_test.go:180-247; whitelist fetcher.go:73-88)
-    - /timeout: client timeout ⇒ 504 error class (client.go:70-81,
-      fetcher_test.go:249-272)
-    - /redirect/chain{1,2}: a 2-hop chain (hop limit exercise)
-    """
-    base = f"https://{FIXTURE_HOST}"
-    ok_html = (
-        '<!DOCTYPE html>\n<html lang="en">\n<head>\n<title>OK page</title>\n'
-        f'<meta property="og:url" content="{base}/200">\n'
-        "</head>\n<body>\n<article>\n<h1>OK page</h1>\n<p>OK body text.</p>\n"
-        "</article>\n</body>\n</html>\n"
-    ).encode()
-    rows: list[tuple] = [(f"{base}/200", None, ok_html, "OK body text.", "en", "text/html", 200, None)]
-    for sc in (400, 401, 403, 404, 429, 500, 503):
-        rows.append((f"{base}/status/{sc}", None, f"Err: {sc}".encode(), None, None, "text/html", sc, None))
-    for sc in (301, 302, 303, 307, 308):
-        rows.append((f"{base}/redirect/{sc}", None, b"", None, None, "text/html", sc, f"{base}/200"))
-    for name, ctype in (
-        ("html", "text/html"),
-        ("xhtml", "application/xhtml+xml"),
-        ("text", "text/plain"),
-        ("xml", "application/xml"),
-        ("json", "application/json"),
-        ("unsupported", "application/unsupported"),
-    ):
-        body = ok_html if name in ("html", "xhtml") else b"OK"
-        rows.append((f"{base}/ctype/{name}", None, body, None, "en", ctype + "; charset=utf-8", 200, None))
-    rows.append((f"{base}/timeout", None, b"", None, None, "text/html", 504, None))
-    rows.append((f"{base}/redirect/chain1", None, b"", None, None, "text/html", 301, f"{base}/redirect/chain2"))
-    rows.append((f"{base}/redirect/chain2", None, b"", None, None, "text/html", 302, f"{base}/200"))
-    return spark.createDataFrame(rows, schema=PAGES_FETCH_SCHEMA)
-
-
 def ensure_pages(
     spark: SparkSession, path: str, n_hosts: int, per_host: int
 ) -> DataFrame:
@@ -268,36 +223,6 @@ def robots_table(spark: SparkSession, n_hosts: int) -> DataFrame:
         for h in range(n_hosts)
     ]
     return spark.createDataFrame(rows, schema=ROBOTS_SCHEMA)
-
-
-def robots_txt_pages(spark: SparkSession, n_hosts: int) -> DataFrame:
-    """/robots.txt pages for every synthetic host, encoding the SAME policy
-    as ``robots_table`` (disallow /private/, per-host crawl-delay) as real
-    RFC 9309 text — the corpus-discovery crawl (no pre-supplied rules table)
-    must reach identical behavior by fetching + parsing these."""
-    delays = [0.2, 0.5, 1.0, 2.0]
-    rows = []
-    for h in range(n_hosts):
-        d = delays[h % len(delays)] if h else 0.1
-        txt = (
-            "# synthetic policy\n"
-            "User-agent: *\n"
-            "Disallow: /private/\n"
-            f"Crawl-delay: {d}\n"
-        )
-        rows.append(
-            (
-                f"https://{host_name(h)}/robots.txt",
-                None,
-                txt.encode("utf-8"),
-                txt,
-                "en",
-                "text/plain",
-                200,
-                None,
-            )
-        )
-    return spark.createDataFrame(rows, schema=PAGES_FETCH_SCHEMA)
 
 
 def seed_urls(n_hosts: int, seeds_per_host: int = 1) -> list[str]:

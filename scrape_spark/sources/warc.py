@@ -154,15 +154,6 @@ def iter_warc_records(raw: bytes) -> Iterator[tuple[dict[bytes, bytes], bytes]]:
 _STATUS_RE = re.compile(rb"^HTTP/\d\.\d\s+(\d{3})")
 
 
-def parse_warc_segment(raw: bytes) -> pd.DataFrame:
-    """One WARC segment's bytes → a pandas frame of PAGES_FETCH_SCHEMA
-    columns (response records only). Convenience wrapper over
-    parse_warc_frames for tests/small segments — production tasks stream
-    the chunked frames instead of accumulating the whole segment."""
-    frames = list(parse_warc_frames(raw, chunk_records=1 << 62))
-    return frames[0] if frames else _rows_frame([])
-
-
 def parse_warc_frames(
     raw: bytes, chunk_records: int = 2000
 ) -> Iterator[pd.DataFrame]:

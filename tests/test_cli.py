@@ -153,7 +153,7 @@ def test_crawl_discovers_robots_without_flags(spark, capsys, tmp_path):
     """No --robots/--robots-txt flag: the crawl must fetch /robots.txt pages
     from the corpus itself and obey them (VERDICT r3 #8 — RFC 9309 story
     end-to-end from the command line)."""
-    from scrape_spark.sources.pages import robots_txt_pages
+    from tests.helpers import robots_txt_pages
 
     corpus = str(tmp_path / "pages_with_robots")
     synth_pages(spark, n_hosts=3, per_host=20).unionByName(

@@ -599,7 +599,7 @@ def test_robots_discovered_from_corpus_matches_model(spark, tmp_path_factory, pa
     the discovered rules accumulated in the checkpoint."""
     import os
 
-    from scrape_spark.sources.pages import robots_txt_pages
+    from tests.helpers import robots_txt_pages
 
     corpus = pages.unionByName(robots_txt_pages(spark, N_HOSTS))
     tmpdir = str(tmp_path_factory.mktemp("crawl_robots_disc"))
@@ -787,7 +787,7 @@ def test_robots_ttl_expires_and_refetches(spark, tmp_path_factory, pages):
     refetched (state rows carry the refetch epoch); crawl behavior over a
     static corpus is identical to the fetch-once default, and rules stay
     enforced after a refetch (private paths still denied)."""
-    from scrape_spark.sources.pages import robots_txt_pages
+    from tests.helpers import robots_txt_pages
 
     corpus = pages.unionByName(robots_txt_pages(spark, N_HOSTS))
 
@@ -833,7 +833,7 @@ def test_robots_ttl_does_not_reharvest_sitemaps(spark, tmp_path_factory, pages):
     anti-joins the pre-expiry state hosts, so per-epoch sitemap cost stays
     ∝ genuinely-new hosts."""
     from scrape_spark.schemas import FRONTIER_SCHEMA
-    from scrape_spark.sources.pages import robots_txt_pages
+    from tests.helpers import robots_txt_pages
 
     corpus = pages.unionByName(robots_txt_pages(spark, N_HOSTS))
     tmpdir = str(tmp_path_factory.mktemp("ttl_sitemaps"))

@@ -174,10 +174,8 @@ def test_ann_lsh_size_gate_falls_back_to_exact(spark, embeddings):
 
 
 def test_embedding_neardup_blocked_equals_naive(spark, embeddings):
-    from scrape_spark.operators.similarity import (
-        embedding_neardup_pairs,
-        embedding_neardup_pairs_naive,
-    )
+    from scrape_spark.operators.similarity import embedding_neardup_pairs
+    from tests.helpers import embedding_neardup_pairs_naive
 
     naive = {(r.i, r.j, r.sim_r) for r in
              embedding_neardup_pairs_naive(embeddings, threshold=0.4).collect()}

@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from scrape_spark.plans.batch_extract import batch_extract
-from scrape_spark.sources.pages import FIXTURE_HOST, fetch_fixture_pages
+from tests.helpers import FIXTURE_HOST, fetch_fixture_pages
 
 BASE = f"https://{FIXTURE_HOST}"
 

@@ -249,9 +249,8 @@ def test_feed_refresh_cadence(spark):
         DEFAULT_REFRESH_INTERVAL,
         FEED_REFRESH_SCHEMA,
         due_feeds,
-        record_refresh,
-        record_request,
     )
+    from tests.helpers import record_refresh, record_request
 
     now = 1_000_000
     empty = spark.createDataFrame([], FEED_REFRESH_SCHEMA)

@@ -642,38 +642,54 @@ def test_read_since_none_and_broken_history_fall_back_to_full(spark, store):
     assert store.urls.read_since(pin).count() == 2
 
 
-def test_merge_delta_single_exchange(spark, tmp_path):
+@pytest.mark.parametrize("table_name", ["urls", "id_map"])
+def test_merge_delta_single_exchange(spark, tmp_path, table_name):
     """r6 optimization pin: a MERGE's payload must cross exactly ONE
-    shuffle. The delta is hash-partitioned by bucket up front; because
-    bucket = pmod(key, n) is a function of the key, the per-(bucket, key)
-    dedupe aggregate reuses that partitioning and the bucketed file write
-    needs no second repartition — the physical plan carries a single
-    Exchange node, and the dedupe still keeps the newest row per key."""
-    from pyspark.sql import functions as F
-
-    from scrape_spark.operators.store import ManifestTable
-
+    shuffle, on each of the store's tables. The delta is hash-partitioned
+    by bucket up front; because bucket = pmod(key, n) is a function of the
+    key, the per-(bucket, key) dedupe aggregate reuses that partitioning and
+    the bucketed file write needs no second repartition — the physical plan
+    carries a single Exchange node, and the dedupe still keeps the newest
+    row per key."""
+    table = getattr(UrlStore(spark, str(tmp_path / "store"), n_buckets=16), table_name)
+    key = F.col("id") % 100
+    if table.order_col:
+        # key k arrives 10 times, at fetch times k, 100+k, ..., 900+k
+        made = {
+            "key": key,
+            "fetch_time": F.timestamp_seconds("id"),
+            "title": (F.col("id") * 2).cast("string"),
+        }
+        checked = ("fetch_time", "title")
+    else:
+        # id_map has no order column: a key's 10 rows repeat one alias
+        made = {"requested_id": key, "canonical_id": key + 1000}
+        checked = ("canonical_id",)
     src = tmp_path / "delta_src"
     spark.range(1000).select(
-        (F.col("id") % 100).alias("key"),
-        F.col("id").alias("fetch_time"),
-        (F.col("id") * 2).alias("payload"),
+        *[made.get(f.name, F.lit(None)).cast(f.dataType).alias(f.name)
+          for f in table.schema.fields]
     ).write.parquet(str(src))
     rows = spark.read.parquet(str(src))
-    table = ManifestTable(
-        spark, str(tmp_path / "t"), rows.schema, "key", n_buckets=16,
-        order_col="fetch_time",
-    )
     delta = table.dedupe_delta(rows)
     plan = delta._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1, plan
-    got = {r["key"]: (r["fetch_time"], r["payload"]) for r in delta.collect()}
+    # ... and that exchange is by bucket: one write task owns each bucket
+    assert "Exchange hashpartitioning(__bucket" in plan, plan
+    got = {r[table.key_col]: tuple(r[c] for c in checked) for r in delta.collect()}
     assert len(got) == 100
-    # newest (max fetch_time) row per key survives: key k keeps id 900+k
-    assert got[7] == (907, 1814)
+    if table.order_col:
+        # newest (max fetch_time) row per key survives: key 7 keeps id 907
+        assert got[7][1] == "1814"
+        newest_7 = rows.filter(F.col("key") == 7).agg(F.max("fetch_time")).first()[0]
+        assert got[7][0] == newest_7
+    else:
+        assert got[7] == (1007,)
     # and the commit writes exactly that delta
     table.append_buckets(rows)
-    assert {r["key"]: (r["fetch_time"], r["payload"]) for r in table.read().collect()} == got
+    assert {
+        r[table.key_col]: tuple(r[c] for c in checked) for r in table.read().collect()
+    } == got
 
 
 def test_manifest_records_bucket_count(spark, store, tmp_path):

@@ -9,7 +9,8 @@ import gzip
 
 import pytest
 
-from scrape_spark.sources.warc import parse_warc_segment, warc_pages
+from scrape_spark.sources.warc import warc_pages
+from tests.helpers import parse_warc_segment
 
 
 def _http_response(
@@ -192,7 +193,7 @@ def test_parse_warc_frames_chunks_match_whole_segment(tmp_path):
     whole-segment parse (r6: bounded task memory, same rows)."""
     import pandas as pd
 
-    from scrape_spark.sources.warc import parse_warc_frames, parse_warc_segment
+    from scrape_spark.sources.warc import parse_warc_frames
 
     recs = []
     for i in range(7):
