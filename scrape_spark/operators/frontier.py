@@ -475,14 +475,14 @@ class Crawl:
         cfg.user_agent group selection), and accumulate one rules row per
         host in the epoch checkpoint. Per-epoch cost ∝ NEW hosts: the
         accumulated state is a host-dimension table; the fetch streams the
-        corpus against the missing-host probe (the same zero-corpus-shuffle
-        decomposition the fetch join uses). The probe is cached and counted
-        (one host-dimension aggregate); the count lets the sitemap harvest
-        skip epochs with no new host. No join here carries a broadcast hint:
-        Spark plans the cached probe's join from its real size, so a
-        frontier that adds millions of new hosts in one epoch simply gets a
-        shuffle join. A host with no robots.txt page gets an allow-all row
-        once and (TTL aside) is never refetched.
+        corpus against the missing-host probe in one inner join (a small
+        probe broadcasts and the corpus streams in place). The probe is
+        cached and counted (one host-dimension aggregate); the count lets
+        the sitemap harvest skip epochs with no new host. No join here
+        carries a broadcast hint: Spark plans the cached probe's join from
+        its real size, so a frontier that adds millions of new hosts in one
+        epoch simply gets a shuffle join. A host with no robots.txt page
+        gets an allow-all row once and (TTL aside) is never refetched.
 
         ``cfg.robots_ttl_epochs`` (RFC 9309 §2.4 allows caching, commonly
         bounded to ~24h): when set, rules older than that many epochs are
@@ -778,8 +778,8 @@ class Crawl:
             .withColumn("budget", cfg.budget_expr())
             .cache()
         )
-        # one aggregate materializes the cache AND yields the stats; the
-        # selected count doubles as the fetch-join probe-size hint below
+        # one aggregate materializes the cache AND yields the epoch stats'
+        # selected and deferred counts
         sel_def = ranked.agg(
             F.coalesce(
                 F.sum((F.col("rank") <= F.col("budget")).cast("long")), F.lit(0)
@@ -819,7 +819,6 @@ class Crawl:
                 "depth", "priority", "rank",
             ),
             epoch_pages,
-            probe_rows_hint=int(sel_def.sel),
         ).cache()
         # the frontier key rides along as the request key: the store's
         # id_map write and the cuckoo alias inserts reuse it, no re-hash

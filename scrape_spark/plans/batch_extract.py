@@ -29,7 +29,9 @@ request prep (carried past finalize as REQUESTED_KEY) instead of re-hashing
 Scale notes: the cache-split join is key-equi on `key long` (never URL
 strings, O1); the pages join prunes to (url, html, ctype, status,
 redirect_to) at the scan and skips the redirect-hop plan branches entirely
-for redirect-free corpora; the store read is bucket-manifest-backed so only
+for redirect-free corpora; it is one unhinted left join that Spark sizes (a
+small corpus broadcasts; a large one shuffles once, and the redirect hops
+reuse that shuffle); the store read is bucket-manifest-backed so only
 fresh files of touched buckets are opened. Output order is not guaranteed
 (parity: internal/scrape.go:98-99) — consumers that need determinism sort
 by (key).
@@ -65,77 +67,6 @@ RESULT_COLS = RESULT_SCHEMA.fieldNames()
 # (the Go http.Client follows up to 10; fetcher_test.go:68-111).
 MAX_REDIRECT_HOPS = 4
 
-# ---- automatic fetch-join strategy gate --------------------------------------
-# Above this estimated corpus size, a plain left join's corpus shuffle is no
-# longer page-cache-local — it crosses a network on any real cluster — so the
-# zero-corpus-shuffle decomposed plan wins. Below it, the measured single-box
-# numbers (119k vs 104k pages/s at 1.3M pages, local[16]) keep the plain
-# join the default. Module-level so tests/ops can tune it.
-CORPUS_SHUFFLE_BYTES = 8 << 30
-# Never broadcast a probe side bigger than this many rows (a ~200 B request
-# row × 4M ≈ 800 MB broadcast — beyond this the decomposition's premise that
-# the batch is "bounded" has failed and the plain join is safer).
-MAX_BROADCAST_PROBE_ROWS = 4_000_000
-
-
-def _plan_size_bytes(df: DataFrame) -> int | None:
-    """Catalyst's estimated size of the plan's output (for a parquet scan:
-    the file bytes × compression factor) — free, no job."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # pragma: no cover - py4j estimation unavailable
-        return None
-
-
-# Catalyst's sizeInBytes for stat-less plans (in-memory frames, missing
-# statistics) defaults to Long.MaxValue — such an estimate means "unknown",
-# not "huge", and must never qualify a plan for the broadcast arm.
-IMPLAUSIBLE_SIZE_BYTES = 1 << 60
-
-
-# A probe side whose Catalyst size estimate is at or under this is broadcast
-# unconditionally: the decomposed plan then removes the corpus-side shuffle
-# for a hash map that fits CPU cache. Measured (r6, local[32], sf0.1 54k-row
-# batch, probe estimate 1.1 MB): decomposed 1.69 s vs plain 3.44 s min-of-3.
-# The 1.3M-row batch (estimate 26 MB) stays on the plain join — its broadcast
-# hash relation thrashes CPU cache (r5 measurement: 104k vs 119k pages/s).
-PROBE_BROADCAST_BYTES = 8 << 20
-
-
-def choose_probe_strategy(
-    corpus_bytes: int | None,
-    probe_rows: int | None,
-    probe_bytes: int | None = None,
-) -> bool:
-    """True ⇒ use the decomposed zero-corpus-shuffle plan (broadcast the
-    request batch, stream the corpus in place); False ⇒ plain left join.
-    The decision the crawl epoch / CLI no longer has to know about. Two arms
-    choose the decomposed plan:
-
-    - probe side PROVABLY small (Catalyst estimate ≤ PROBE_BROADCAST_BYTES):
-      the broadcast is bounded by construction and removing the corpus
-      shuffle wins at every corpus size (measured 2× at sf0.1);
-    - corpus PROVABLY big enough that its shuffle would cross a network
-      (≥ CORPUS_SHUFFLE_BYTES) AND the probe side bounded by the caller's
-      row hint.
-
-    Unknowns fall back to the plain join — an unknown probe size must never
-    become an unbounded broadcast (driver/executor OOM), and an implausible
-    Catalyst estimate (stat-less plan ⇒ Long.MaxValue) reads as unknown,
-    not small/large."""
-    if (
-        probe_bytes is not None
-        and 0 <= probe_bytes <= PROBE_BROADCAST_BYTES
-    ):
-        return True
-    if corpus_bytes is None or corpus_bytes >= IMPLAUSIBLE_SIZE_BYTES:
-        return False
-    if corpus_bytes < CORPUS_SHUFFLE_BYTES:
-        return False
-    if probe_rows is None or probe_rows > MAX_BROADCAST_PROBE_ROWS:
-        return False
-    return True
-
 
 def prepare_requests(requests: DataFrame, url_col: str = "url") -> DataFrame:
     """Validate + canonicalize + key a batch of requested URLs.
@@ -166,55 +97,14 @@ def _as_result(df: DataFrame) -> DataFrame:
     return df.select(*[F.col(c) for c in RESULT_COLS])
 
 
-_CORPUS_COLS = ("__page_url", "html", "__ctype", "__status", "__redirect_to")
+def _join_corpus(df: DataFrame, corpus: DataFrame, url_col: str) -> DataFrame:
+    """df LEFT JOIN the pruned corpus projection on ``url_col``; a URL the
+    corpus lacks keeps null page columns (⇒ 404 in finalize). No hint:
+    Spark sizes the join, as it does the store's and the robots joins."""
+    return df.join(corpus, df[url_col] == corpus["__page_url"], "left")
 
 
-def _probe_corpus(requests: DataFrame, corpus: DataFrame, url_col: str) -> DataFrame:
-    """requests LEFT JOIN corpus — built so the html NEVER shuffles.
-
-    A plain left-outer join hash-shuffles BOTH sides, moving the whole
-    corpus (2 KB html/row; 100 TB at production scale) across the wire just
-    to attach a bounded request batch. Spark cannot broadcast the preserved
-    side of an outer join, so the outer join is decomposed:
-
-      found    = corpus ⋈ broadcast(requests)   (inner BHJ, corpus streamed
-                                                 in place, zero corpus shuffle)
-      notfound = requests ⟕̸ corpus.url           (left-anti against the url
-                                                 column only — a shuffle of
-                                                 one short string column,
-                                                 planner's choice of strategy)
-      result   = found ∪ notfound(null page columns)
-
-    The request side is bounded by construction — a CLI/API batch, or one
-    politeness-capped crawl epoch (hosts × per-epoch budget) — which is what
-    makes broadcasting it the right plan once the corpus shuffle crosses a
-    NETWORK. Measured single-box (local[16], 1.3M pages) the plain left
-    join is ~15% faster (119k vs 104k pages/s): the "shuffle" there is
-    page-cache-local while the 1.3M-entry broadcast map thrashes CPU cache.
-    The choice is AUTOMATIC (``choose_probe_strategy``: Catalyst's corpus
-    size estimate vs the caller's batch-count hint); the redirect-hop
-    probes (tiny request subsets) use this shape unconditionally."""
-    probe = F.broadcast(requests)
-    found = corpus.join(probe, requests[url_col] == corpus["__page_url"], "inner")
-    notfound = requests.join(
-        corpus.select("__page_url"),
-        requests[url_col] == F.col("__page_url"),
-        "left_anti",
-    )
-    # Null casts derived from the actual corpus schema (not hardcoded types):
-    # the CLI reads arbitrary user parquet, where e.g. html may be string-
-    # typed, and a type mismatch here fails unionByName analysis.
-    corpus_types = {f.name: f.dataType for f in corpus.schema.fields}
-    for c in _CORPUS_COLS:
-        notfound = notfound.withColumn(c, F.lit(None).cast(corpus_types[c]))
-    return found.unionByName(notfound.select(*found.columns))
-
-
-def fetch_join(
-    misses: DataFrame,
-    pages: DataFrame,
-    probe_rows_hint: int | None = None,
-) -> DataFrame:
+def fetch_join(misses: DataFrame, pages: DataFrame) -> DataFrame:
     """The 'network' stage: equi-join against the pages corpus (absent ⇒
     404 later), then one vectorized extraction pass. Keeps the extract's
     raw columns (incl. `links`) so callers can derive both result rows and
@@ -230,10 +120,10 @@ def fetch_join(
     redirect status as an HTTP error (parity: Go returns 'stopped after 10
     redirects' as an error).
 
-    The join arm is ``choose_probe_strategy``'s: the hint comes from the
-    caller when it knows the batch size for free (the crawl epoch's
-    politeness-capped selected count); the probe-side size estimate comes
-    from Catalyst — never a count() job here."""
+    The request batch and every redirect hop left-join the corpus one way
+    (``_join_corpus``) and Spark picks the strategy: a small corpus is
+    broadcast (BuildRight), a large one is shuffled once and the hop joins
+    reuse that shuffle."""
     cols = set(pages.columns)
     corpus = pages.select(
         F.col("url").alias("__page_url"),
@@ -244,14 +134,7 @@ def fetch_join(
             "__redirect_to"
         ),
     )
-    if choose_probe_strategy(
-        _plan_size_bytes(pages), probe_rows_hint, _plan_size_bytes(misses)
-    ):
-        joined = _probe_corpus(misses, corpus, "parsed_url")
-    else:
-        joined = misses.join(
-            corpus, misses["parsed_url"] == corpus["__page_url"], "left"
-        )
+    joined = _join_corpus(misses, corpus, "parsed_url")
     # The hop machinery multiplies plan branches (each union arm re-scans the
     # fetch join) — pay for it ONLY when the corpus actually contains
     # redirects. One column-pruned probe scan, run only when the corpus has
@@ -286,7 +169,7 @@ def _follow_redirects(joined: DataFrame, corpus: DataFrame, req_cols: list[str])
         # requested columns ride along unchanged (parsed_url stays the
         # requested URL — the reference echoes RequestedURL on redirects)
         hop = pending.select(*req_cols, F.col("__redirect_to").alias("__target"))
-        hopped = _probe_corpus(hop, corpus, "__target").drop("__target")
+        hopped = _join_corpus(hop, corpus, "__target").drop("__target")
         done = done.unionByName(hopped.filter(~is_redirect))
         pending = hopped.filter(is_redirect)
     # hop budget exhausted: surface as an error row (Go http.Client:

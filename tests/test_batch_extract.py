@@ -4,12 +4,17 @@ error rows, cache hits with stable fetch_time, errors never stored."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 from scrape_spark.operators.store import UrlStore
 from scrape_spark.plans.batch_extract import batch_extract
 from scrape_spark.sources.pages import page_url, synth_pages
+from tests.helpers import FIXTURE_HOST, fetch_fixture_pages
+
+BASE = f"https://{FIXTURE_HOST}"
 
 
 @pytest.fixture(scope="module")
@@ -21,17 +26,6 @@ def pages(spark):
 
 def _req_df(spark, urls):
     return spark.createDataFrame([(u,) for u in urls], ["url"])
-
-
-def _probe_arm(df) -> str:
-    """The fetch-join arm a plan took, read from its physical plan: only the
-    plain arm has a left-outer join (the decomposed arm is an inner join
-    plus a left-anti, and the redirect-hop probes use the same shape)."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    if "LeftOuter" in plan:
-        return "plain"
-    assert "LeftAnti" in plan
-    return "decomposed"
 
 
 def test_batch_end_to_end(spark, pages, tmp_path):
@@ -145,29 +139,6 @@ def test_cache_split_is_bucket_pruned(spark, pages, tmp_path):
     assert None not in seen_buckets  # no unpruned full read anywhere
 
 
-def test_broadcast_probe_join_is_equivalent(spark, pages, monkeypatch):
-    """The no-corpus-shuffle probe decomposition (inner BHJ + left-anti)
-    must return exactly what the plain left join returns, misses included."""
-    import scrape_spark.plans.batch_extract as bx
-    from scrape_spark.plans.batch_extract import fetch_join, prepare_requests
-
-    req = prepare_requests(
-        _req_df(spark, [page_url(0, 1), page_url(1, 2), "https://missing.test/x"])
-    ).withColumn("__fetch_method", F.lit(1))
-    shape = lambda df: {  # noqa: E731
-        (r["original_url"], r["__page_url"], r["title"]) for r in
-        df.select("original_url", "__page_url", "title").collect()
-    }
-
-    def forced(decomposed: bool):
-        monkeypatch.setattr(bx, "choose_probe_strategy", lambda *a: decomposed)
-        out = fetch_join(req, pages)
-        assert _probe_arm(out) == ("decomposed" if decomposed else "plain")
-        return shape(out)
-
-    assert forced(True) == forced(False)
-
-
 def test_fetch_client_routing(spark, pages, tmp_path):
     """S3: batch-level headless (the /extract/headless surface) and
     per-domain settings override (fetch_client='chromium-headless') both
@@ -246,71 +217,74 @@ def test_unordered_union_has_all_columns(spark, pages, tmp_path):
     assert out.schema.fieldNames() == RESULT_SCHEMA.fieldNames()
 
 
-def test_auto_probe_strategy_gate(spark, pages, monkeypatch):
-    """fetch_join picks the plan automatically: plain join on a
-    small/single-box corpus (the measured-faster default), the decomposed
-    zero-corpus-shuffle plan when the corpus size estimate crosses the
-    network-shuffle threshold and the batch is verifiably bounded."""
+@pytest.fixture(scope="module")
+def redirect_corpus(spark, tmp_path_factory):
+    """The HTTP-behaviour fixture corpus as parquet, so plans show its scan."""
+    path = str(tmp_path_factory.mktemp("redirects") / "pages")
+    fetch_fixture_pages(spark).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def _fetch_redirect_batch(spark, corpus):
+    from scrape_spark.plans.batch_extract import fetch_join, prepare_requests
+
+    req = prepare_requests(
+        _req_df(spark, [f"{BASE}/redirect/chain1", f"{BASE}/redirect/301", f"{BASE}/absent"])
+    )
+    return fetch_join(req, corpus).select("original_url", "__page_url", "title")
+
+
+def test_redirect_hops_reuse_the_corpus_shuffle(spark, redirect_corpus):
+    """With broadcasts off, the request batch and every redirect hop
+    left-join one corpus shuffle: the executed plan has no
+    BroadcastExchange and scans the corpus's html column once (the hop
+    joins read a ReusedExchange of it)."""
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        out = _fetch_redirect_batch(spark, redirect_corpus)
+        rows = out.collect()
+        plan = out._jdf.queryExecution().executedPlan().toString().split(
+            "== Initial Plan =="
+        )[0]
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert "BroadcastExchange" not in plan, plan
+    schemas = re.findall(r"FileScan parquet .*?ReadSchema: (\S*)", plan)
+    assert sum("html:" in s for s in schemas) == 1, plan
+    assert "ReusedExchange" in plan, plan
+    assert {u: page for u, page, _ in rows} == {
+        f"{BASE}/redirect/chain1": f"{BASE}/200",
+        f"{BASE}/redirect/301": f"{BASE}/200",
+        f"{BASE}/absent": None,
+    }
+
+
+def test_fetch_join_is_sized_by_spark(spark, redirect_corpus, monkeypatch):
+    """fetch_join passes no broadcast hint: F.broadcast is never called, and
+    the rows are the same whether Spark broadcasts the corpus (the session
+    default threshold) or shuffles it (threshold -1)."""
     import scrape_spark.plans.batch_extract as bx
 
-    # pure decision-function boundaries
-    assert bx.choose_probe_strategy(None, 100) is False           # unknown corpus
-    assert bx.choose_probe_strategy(1 << 20, 100) is False        # small corpus
-    assert bx.choose_probe_strategy(bx.CORPUS_SHUFFLE_BYTES, 100) is True
-    assert bx.choose_probe_strategy(
-        bx.CORPUS_SHUFFLE_BYTES, bx.MAX_BROADCAST_PROBE_ROWS + 1
-    ) is False                                                     # unbounded batch
-    # unknown probe size must NOT broadcast (an unhinted call site would
-    # otherwise ship an unboundedly large batch), and Catalyst's stat-less
-    # Long.MaxValue estimate reads as unknown corpus, not huge corpus
-    assert bx.choose_probe_strategy(bx.CORPUS_SHUFFLE_BYTES, None) is False
-    assert bx.choose_probe_strategy(1 << 62, 100) is False
-    # probe-side-small arm (r6): a provably tiny probe estimate broadcasts
-    # at ANY corpus size; implausible/unknown estimates never do
-    assert bx.choose_probe_strategy(1 << 20, None, probe_bytes=1 << 20) is True
-    assert bx.choose_probe_strategy(None, None, probe_bytes=1 << 20) is True
-    assert bx.choose_probe_strategy(
-        1 << 20, None, probe_bytes=bx.PROBE_BROADCAST_BYTES + 1
-    ) is False
-    assert bx.choose_probe_strategy(1 << 20, None, probe_bytes=None) is False
+    hinted = []
+    real_broadcast = F.broadcast
+    monkeypatch.setattr(
+        bx.F, "broadcast", lambda df: hinted.append(df) or real_broadcast(df)
+    )
 
-    req = bx.prepare_requests(
-        _req_df(spark, [page_url(0, 1), "https://missing.test/x"])
-    ).withColumn("__fetch_method", F.lit(1))
+    def fetched(threshold: str):
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+        return set(_fetch_redirect_batch(spark, redirect_corpus).collect())
 
-    # a createDataFrame request frame is RDD-backed — Catalyst reports
-    # Long.MaxValue, which must read as UNKNOWN probe size → plain join
-    out_plain = bx.fetch_join(req, pages, probe_rows_hint=2)
-    assert _probe_arm(out_plain) == "plain"
-
-    # a parquet-backed request frame carries a real (tiny) size estimate →
-    # the probe-side-small arm picks the decomposed plan at any corpus size
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as td:
-        _req_df(spark, [page_url(0, 1), "https://missing.test/x"]).write.mode(
-            "overwrite"
-        ).parquet(f"{td}/req")
-        req_pq = bx.prepare_requests(spark.read.parquet(f"{td}/req")).withColumn(
-            "__fetch_method", F.lit(1)
-        )
-        out_small = bx.fetch_join(req_pq, pages, probe_rows_hint=2)
-        assert _probe_arm(out_small) == "decomposed"
-        # probe-side arm disabled → back to the mid-size default (plain)
-        monkeypatch.setattr(bx, "PROBE_BROADCAST_BYTES", -1)
-        out_mid = bx.fetch_join(req_pq, pages, probe_rows_hint=2)
-        assert _probe_arm(out_mid) == "plain"
-
-    # corpus "large" (threshold forced down): decomposed plan chosen,
-    # visible in the physical plan as the left-anti arm of the union
-    monkeypatch.setattr(bx, "CORPUS_SHUFFLE_BYTES", 1)
-    out_auto = bx.fetch_join(req, pages, probe_rows_hint=2)
-    assert _probe_arm(out_auto) == "decomposed"
-    # and both plans agree on the rows
-    shape = lambda df: {  # noqa: E731
-        (r["original_url"], r["title"]) for r in df.select("original_url", "title").collect()
-    }
-    assert shape(out_auto) == shape(out_plain)
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        on_rows = fetched(prev)
+        off_rows = fetched("-1")
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert hinted == []
+    assert on_rows == off_rows
+    assert len(on_rows) == 3
 
 
 def _persisted_rdds(spark) -> int:

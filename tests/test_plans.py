@@ -2,10 +2,11 @@
 the engine's scale rests on, read from Spark's own physical plans.
 
 Explain-first: every check reads the plan of a lazy frame
-(``queryExecution().executedPlan()``, no action) except the codegen check,
-which executes a tiny flagship because whole-stage codegen spans (``*(n)``)
-only appear in an executed plan. The store MERGE's one-exchange check lives
-with the store tests (``test_store.py::test_merge_delta_single_exchange``).
+(``queryExecution().executedPlan()``, no action) except the codegen and
+dedupe-reuse checks, which read a tiny flagship's final plan because
+whole-stage codegen spans (``*(n)``) and AQE's ``ReusedExchange`` nodes
+only appear once a plan has executed. The store MERGE's one-exchange check
+lives with the store tests (``test_store.py::test_merge_delta_single_exchange``).
 """
 
 from __future__ import annotations
@@ -38,7 +39,7 @@ EXCHANGES = {
     "minhash_neardup": 6,
     "embedding_neardup": 3,
     "ann_topk": 2,
-    "batch_pipeline": 4,
+    "batch_pipeline": 2,
 }
 
 
@@ -64,6 +65,13 @@ def pages(spark, tmp_path_factory):
 @pytest.fixture(scope="module")
 def flagship(spark, pages):
     return plan_of(batch_extract(spark, pages.select("url"), pages, store=None))
+
+
+@pytest.fixture(scope="module")
+def executed_flagship(spark, pages):
+    df = batch_extract(spark, pages.select("url"), pages, store=None)
+    df.collect()
+    return plan_of(df)
 
 
 @pytest.fixture(scope="module")
@@ -110,10 +118,24 @@ def test_inflight_dedupe_combines_before_its_exchange(flagship):
         assert "partial_first" in lines[i + 1], flagship
 
 
-def test_flagship_has_whole_stage_codegen(spark, pages):
-    df = batch_extract(spark, pages.select("url"), pages, store=None)
-    df.collect()
-    assert "*(" in plan_of(df)
+def test_inflight_dedupe_aggregates_once(executed_flagship):
+    """The request dedupe's final ``first(`` aggregate runs once per batch:
+    the fetch join consumes the deduped batch on one branch, so no second
+    copy of the aggregate reads a ReusedExchange of its shuffle."""
+    finals = re.findall(
+        r"Aggregate\(key=\[__dedupe_key[^\]]*\], functions=\[first\(",
+        executed_flagship,
+    )
+    assert len(finals) == 1, executed_flagship
+    reused = [
+        line for line in executed_flagship.splitlines()
+        if "ReusedExchange" in line and "__dedupe_key" in line
+    ]
+    assert not reused, executed_flagship
+
+
+def test_flagship_has_whole_stage_codegen(executed_flagship):
+    assert "*(" in executed_flagship
 
 
 def test_store_backed_batch_has_no_cross_join(spark, pages, store):
