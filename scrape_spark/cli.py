@@ -205,38 +205,31 @@ def cmd_feed(args) -> int:
     from pyspark.sql import functions as F
 
     from scrape_spark.sources.feed import feed_to_requests, parse_feeds
+    from scrape_spark.sources.live import LiveFetchConfig, body_fetcher
 
     spark = _spark(args.cores)
-    req = spark.createDataFrame([(u,) for u in args.urls], ["feed_url"])
-    live = None
+    live = pages = None
     if args.live:
         # live journey: fetch the feed XML itself over the wire, then the
         # item links through the live batch pipeline
-        from scrape_spark.sources.live import LiveFetchConfig, fetch_pages
-
         live = LiveFetchConfig(
             timeout=args.timeout, max_concurrent=args.max_concurrent
         )
-        pages = None
-        fetched = fetch_pages(req.select(F.col("feed_url").alias("url")), live)
-        feeds_xml = req.join(
-            fetched.select(
-                F.col("url").alias("feed_url"),
-                F.when(F.col("status") == 200, F.decode("html", "UTF-8")).alias("xml"),
-            ),
-            "feed_url",
-            "left",
-        )
-    else:
-        if not args.pages:
-            print("feed needs --pages (corpus) or --live", file=sys.stderr)
-            return 2
+    elif args.pages:
         pages = spark.read.parquet(args.pages)
-        feeds_xml = req.join(
-            pages.select(F.col("url").alias("feed_url"), F.decode("html", "UTF-8").alias("xml")),
-            "feed_url",
-            "left",
-        )
+    else:
+        print("feed needs --pages (corpus) or --live", file=sys.stderr)
+        return 2
+    req = spark.createDataFrame([(u,) for u in args.urls], ["feed_url"])
+    # a feed that does not answer 200 left-joins to a NULL xml: no items
+    bodies = body_fetcher(pages, live)(req.select(F.col("feed_url").alias("url")))
+    feeds_xml = req.join(
+        bodies.select(
+            F.col("url").alias("feed_url"), F.decode("html", "UTF-8").alias("xml")
+        ),
+        "feed_url",
+        "left",
+    )
     links = feed_to_requests(parse_feeds(feeds_xml))
     if not args.extract:
         for r in links.collect():

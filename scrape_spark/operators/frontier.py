@@ -76,6 +76,7 @@ from scrape_spark.operators.cuckoo import (
 from scrape_spark.operators.store import REQUESTED_KEY, UrlStore
 from scrape_spark.plans.batch_extract import fetch_join, finalize_results
 from scrape_spark.schemas import FRONTIER_SCHEMA
+from scrape_spark.sources.live import body_fetcher, fetch_pages
 from scrape_spark.sources.robots import (
     ROBOTS_RULES_SCHEMA,
     as_rules,
@@ -83,7 +84,6 @@ from scrape_spark.sources.robots import (
     parse_robots,
 )
 from scrape_spark.sources.sitemap import (
-    corpus_fetcher,
     expand_sitemap_entries,
     hint_priority_rows,
     parse_sitemaps,
@@ -194,10 +194,11 @@ class Crawl:
         """``robots`` may be a pre-supplied rules table (parsed RFC 9309
         rules, or plain disallow-prefix arrays — converted once here to the
         parsed shape by ``sources.robots.as_rules``), or None — then the crawl
-        DISCOVERS robots.txt from the corpus itself: each epoch it fetches
-        ``https://<host>/robots.txt`` for hosts newly seen in the frontier
-        (through the same corpus equi-join every fetch uses), parses them
-        (RFC 9309), and accumulates the rules in the epoch checkpoint.
+        DISCOVERS robots.txt: each epoch it fetches
+        ``<scheme>://<host>/robots.txt`` for hosts newly seen in the frontier
+        through :meth:`_fetcher` (the side-input fetcher, which keeps only
+        200 answers), parses them (RFC 9309), and accumulates the rules in
+        the epoch checkpoint.
 
         ``live`` (a :class:`scrape_spark.sources.live.LiveFetchConfig`)
         replaces the pages corpus with the real network: each epoch's
@@ -218,7 +219,6 @@ class Crawl:
         self.robots = as_rules(robots).cache() if robots is not None else None
         self.cfg = config or CrawlConfig()
         self._epoch_caches: list[DataFrame] = []
-        self._robots_delta_hosts = 0  # set per-epoch by _robots_for_epoch
         self._robots_raw_delta = None  # (host, robots_txt) for this epoch's NEW hosts
         self._robots_prior_hosts = None  # hosts ever fetched (pre-TTL-expiry)
         os.makedirs(os.path.join(state_dir, "epochs"), exist_ok=True)
@@ -281,15 +281,19 @@ class Crawl:
             json.dump({"n_seeds": len(urls), "sitemaps": sitemaps is not None}, f)
 
     def _fetcher(self, extra: DataFrame | None = None):
-        """``urls_df -> (url, html)`` for sitemap pages: the executors' HTTP
-        fetch in live mode, else a join against the pages corpus (plus the
-        ``extra`` (url, html) pages, when given)."""
+        """``urls_df -> (url, html)`` for robots.txt and sitemap pages, one
+        row per URL that answers 200 (:func:`body_fetcher`): the executors'
+        HTTP fetch in live mode, else the pages corpus plus the ``extra``
+        (url, html) pages, when given, which count as answering 200."""
         if self.live is not None:
-            from scrape_spark.sources.live import fetch_pages
-
-            return lambda urls: fetch_pages(urls, self.live).select("url", "html")
-        pages = self.pages.select("url", F.col("html").cast("binary").alias("html"))
-        return corpus_fetcher(pages if extra is None else extra.unionByName(pages))
+            return body_fetcher(cfg=self.live)
+        pages = self.pages
+        if extra is not None:
+            pages = extra.unionByName(
+                pages.withColumn("html", F.col("html").cast("binary")),
+                allowMissingColumns=True,
+            )
+        return body_fetcher(pages)
 
     def _sitemap_rows(
         self, sm_pages: DataFrame, fetch, depth: int, discovered_epoch: int,
@@ -468,21 +472,21 @@ class Crawl:
             ck, self._cuckoo_multiset(fresh_keys, attempted), "key", n_buckets=n
         )
 
-    # ---- corpus-discovered robots ------------------------------------------
+    # ---- discovered robots ---------------------------------------------------
     def _robots_for_epoch(self, epoch: int, frontier: DataFrame) -> DataFrame:
         """Robots discovery (robots=None mode): fetch /robots.txt for hosts
-        newly seen in the frontier from the pages corpus, parse (RFC 9309,
-        cfg.user_agent group selection), and accumulate one rules row per
-        host in the epoch checkpoint. Per-epoch cost ∝ NEW hosts: the
-        accumulated state is a host-dimension table; the fetch streams the
-        corpus against the missing-host probe in one inner join (a small
-        probe broadcasts and the corpus streams in place). The probe is
-        cached and counted (one host-dimension aggregate); the count lets
-        the sitemap harvest skip epochs with no new host. No join here
-        carries a broadcast hint: Spark plans the cached probe's join from
-        its real size, so a frontier that adds millions of new hosts in one
-        epoch simply gets a shuffle join. A host with no robots.txt page
-        gets an allow-all row once and (TTL aside) is never refetched.
+        newly seen in the frontier through :meth:`_fetcher`, parse (RFC
+        9309, cfg.user_agent group selection), and accumulate one rules row
+        per host in the epoch checkpoint. One path in corpus and live mode:
+        the missing hosts left-join the bodies the fetcher returns, so a
+        host whose robots.txt is absent or answers anything but 200 gets a
+        NULL text, parsed as allow-all (RFC 9309 §2.3.1.3 for 4xx), once
+        and (TTL aside) is never refetched. Per-epoch cost ∝ NEW hosts: the
+        accumulated state is a host-dimension table, and the corpus is only
+        the streamed side of the fetcher's left-semi join against the
+        cached missing-host URLs. No join here carries a broadcast hint:
+        Spark plans each from its size, so a frontier that adds millions of
+        new hosts in one epoch simply gets a shuffle join.
 
         ``cfg.robots_ttl_epochs`` (RFC 9309 §2.4 allows caching, commonly
         bounded to ~24h): when set, rules older than that many epochs are
@@ -536,62 +540,23 @@ class Crawl:
             .cache()
         )
         self._epoch_caches.append(missing)
-        self._robots_delta_hosts = missing.count()
-        if self.live is not None:
-            # Live mode: fetch /robots.txt for the new hosts over the real
-            # network (cost ∝ new hosts by construction — the request set IS
-            # the missing-host probe). Non-2xx / unreachable ⇒ NULL text ⇒
-            # allow-all once, same as a corpus without the page; the parsed
-            # state is cached+checkpointed by run_epoch, so the per-epoch
-            # network cost stays one bounded pass.
-            from scrape_spark.sources.live import fetch_pages
-
-            resp = fetch_pages(
-                missing.select(F.col("__rurl").alias("url")), self.live
-            ).select(
-                F.col("url").alias("__rurl"),
-                F.when(
-                    F.col("status") == 200, F.decode(F.col("html"), "UTF-8")
-                ).alias("robots_txt"),
+        bodies = self._fetcher()(missing.select(F.col("__rurl").alias("url")))
+        # cached: parsed below and read again by the sitemap harvest, and in
+        # live mode a recompute would fetch over the network again
+        fetched = (
+            missing.join(
+                bodies.select(
+                    F.col("url").alias("__rurl"),
+                    F.decode("html", "UTF-8").alias("robots_txt"),
+                ),
+                "__rurl",
+                "left",
             )
-            fetched = missing.join(resp, "__rurl", "left").select(
-                "host", "robots_txt"
-            ).cache()  # network fetch must not recompute (sitemap harvest reads it)
-            self._epoch_caches.append(fetched)
-            self._robots_raw_delta = fetched
-            parsed = parse_robots(
-                fetched, user_agent=self.cfg.user_agent,
-                host_col="host", txt_col="robots_txt",
-            ).withColumn("robots_epoch", stamp)
-            return state.unionByName(parsed)
-        html_t = {f.name: f.dataType for f in self.pages.schema.fields}["html"]
-        body = (
-            F.decode(F.col("html"), "UTF-8")
-            if isinstance(html_t, T.BinaryType)
-            else F.col("html").cast("string")
-        )
-        corpus = self.pages.select(F.col("url").alias("__rurl"), body.alias("robots_txt"))
-        # hosts WITH a robots.txt page: inner probe join — a small probe
-        # broadcasts, so the corpus streams in place with zero corpus
-        # shuffle. Cached because both union arms below reference it (the
-        # absent-host derivation must not trigger a second corpus scan);
-        # host-dimension rows, bounded by the probe.
-        found = (
-            corpus.join(missing, "__rurl", "inner")
             .select("host", "robots_txt")
             .cache()
         )
-        self._epoch_caches.append(found)
-        # hosts WITHOUT one: derived from `found` — NOT an anti-join against
-        # the corpus url column. That shape put the corpus on the build side
-        # of an O(corpus) shuffle every epoch (the corpus cannot broadcast),
-        # breaking the cost-∝-new-hosts claim; this one touches only
-        # host-dimension rows.
-        absent = missing.select("host").join(
-            found.select("host"), "host", "left_anti"
-        ).withColumn("robots_txt", F.lit(None).cast("string"))
-        fetched = found.unionByName(absent.select("host", "robots_txt"))
-        self._robots_raw_delta = fetched  # `found` is cached; `absent` derives from it
+        self._epoch_caches.append(fetched)
+        self._robots_raw_delta = fetched
         parsed = parse_robots(
             fetched, user_agent=self.cfg.user_agent, host_col="host", txt_col="robots_txt"
         ).withColumn("robots_epoch", stamp)
@@ -605,9 +570,9 @@ class Crawl:
         capped at one nested level, per the protocol), and return their
         page URLs as frontier input rows at depth 1. Returns None when the
         stage has nothing to do — zero new hosts, or no Sitemap lines —
-        WITHOUT touching the corpus (the two probes are host-dimension
-        counts)."""
-        if self._robots_raw_delta is None or self._robots_delta_hosts == 0:
+        WITHOUT touching the corpus (its one probe counts host-dimension
+        rows of the cached robots delta)."""
+        if self._robots_raw_delta is None:
             return None
         # genuinely-new hosts only: a robots TTL refetch puts known hosts
         # back in the raw delta, but their sitemaps were already harvested
@@ -637,8 +602,6 @@ class Crawl:
         them as a pages table in the epoch dir. Idempotent on resume: an
         existing ``fetched_pages.parquet`` (from a run that died after the
         fetch but before the commit) is reused, not refetched."""
-        from scrape_spark.sources.live import fetch_pages
-
         path = os.path.join(self._edir(epoch), "fetched_pages.parquet")
         if not os.path.exists(os.path.join(path, "_SUCCESS")):
             fetch_pages(

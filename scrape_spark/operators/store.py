@@ -65,7 +65,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from scrape_spark.functions.textfns import expires_at, is_fresh, stamp_fetch_time
-from scrape_spark.functions.urlkeys import clean_url, url_key
+from scrape_spark.functions.urlkeys import clean_and_key, url_key
 from scrape_spark.schemas import DEFAULT_TTL_SECONDS, ID_MAP_SCHEMA, URL_STORE_SCHEMA
 
 BUCKET_COL = "__bucket"
@@ -850,8 +850,8 @@ class UrlStore:
         """Point/batch lookup: clean → key → alias-resolve → bucket-pruned
         store read → freshness filter. Expired rows are invisible (F3)."""
         req = self.spark.createDataFrame([(u,) for u in urls], ["original_url"])
-        req = req.withColumn("parsed_url", clean_url("original_url")).withColumn(
-            "key", url_key("parsed_url")
+        req = req.withColumn("__ck", clean_and_key("original_url")).select(
+            "original_url", "__ck.parsed_url", "__ck.key"
         )
         resolved, buckets = self.resolve_keys_pruned(req)
         store = self.urls.read(buckets=buckets).filter(is_fresh("expires"))
@@ -872,7 +872,7 @@ class UrlStore:
         URL is a no-op, deleting by the canonical URL drops the store row
         while id_map alias rows survive."""
         req = self.spark.createDataFrame([(u,) for u in urls], ["u"])
-        resolved = req.select(url_key(clean_url("u")).alias("key"))
+        resolved = req.select(clean_and_key("u")["key"].alias("key"))
         touched = self.urls.touched_buckets(resolved)
         if not touched:
             cur = self.urls.current_snapshot()

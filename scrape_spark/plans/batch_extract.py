@@ -50,7 +50,7 @@ from scrape_spark.functions.textfns import (
     stamp_fetch_time,
     status_error,
 )
-from scrape_spark.functions.urlkeys import clean_url, hostname_col, url_key
+from scrape_spark.functions.urlkeys import clean_and_key, hostname_col, url_key
 from scrape_spark.operators.extract import extract_pages
 from scrape_spark.operators.store import REQUESTED_KEY, UrlStore
 from scrape_spark.schemas import (
@@ -76,8 +76,6 @@ def prepare_requests(requests: DataFrame, url_col: str = "url") -> DataFrame:
     clean_url + url_key run as ONE fused pandas UDF (clean_and_key): the
     chained form was two ArrowEvalPython nodes with the URL strings crossing
     the JVM↔Python boundary three times per batch (guide §4.1)."""
-    from scrape_spark.functions.urlkeys import clean_and_key
-
     req = requests.select(F.col(url_col).alias("original_url"))
     req = req.withColumn("__valid", F.col("original_url").rlike(_VALID_URL))
     req = req.withColumn("__ck", clean_and_key("original_url"))
@@ -151,7 +149,7 @@ def fetch_join(misses: DataFrame, pages: DataFrame) -> DataFrame:
 
     if redirects:
         joined = _follow_redirects(joined, corpus, misses.columns)
-    joined = joined.withColumn("__plain_text", _plain_text_col(joined))
+    joined = joined.withColumn("__plain_text", _plain_text_col())
     return extract_pages(joined, html_col="html")
 
 
@@ -184,20 +182,14 @@ def _follow_redirects(joined: DataFrame, corpus: DataFrame, req_cols: list[str])
     return done.unionByName(exhausted)
 
 
-def _plain_text_col(df: DataFrame):
+def _plain_text_col():
     """text/plain bodies ARE the content (no markup to extract) — captured
     before extract_pages drops the raw bytes; null on every other row, and
-    on every row of a corpus with no ``ctype``. Decode only when html is
-    actually binary: user parquet read via the CLI may carry a string-typed
-    html column, where F.decode would fail analysis."""
-    from pyspark.sql.types import BinaryType
-
-    html_is_binary = isinstance(df.schema["html"].dataType, BinaryType)
-    body = (
-        F.decode(F.col("html"), "UTF-8")
-        if html_is_binary
-        else F.col("html").cast("string")
-    )
+    on every row of a corpus with no ``ctype``. User parquet read via the
+    CLI may carry a string-typed html column: the cast to binary makes one
+    decode serve both types (and is dropped from the plan when html is
+    already binary)."""
+    body = F.decode(F.col("html").cast("binary"), "UTF-8")
     return F.when(mime_type(F.col("__ctype")) == "text/plain", body)
 
 

@@ -13,6 +13,10 @@ live sites in production:
     pages = fetch_pages(urls_df, LiveFetchConfig(...))
     batch_extract(spark, urls_df, pages, store=...)
 
+Side inputs (robots.txt, sitemaps, feeds) need only the bodies of the URLs
+that answer 200: :func:`body_fetcher` returns that, from the network or
+from a pages corpus, and is the one place those callers fork on the mode.
+
 Reference parity:
 
 - Direct client ≙ the trafilatura fetcher's http.Client
@@ -400,3 +404,27 @@ def fetch_pages(
         n_part, salted_host_hash(hostname_col(F.col("url")))
     )
     return df.mapInPandas(_fetch_partition_factory(cfg), _FETCH_OUT_SCHEMA)
+
+
+def body_fetcher(pages: DataFrame | None = None, cfg: LiveFetchConfig | None = None):
+    """``urls_df(url) -> (url, html)`` for side inputs (robots.txt,
+    sitemaps, feeds): one row, ``html`` binary, for each URL that answers
+    200 and no row for any other URL, so every caller treats an error
+    status like an absent page. This is the status gate the batch path
+    applies before it reads a body (``finalize_results``; reference
+    fetcher.go:52-95).
+
+    Without ``pages`` the URLs are fetched over the network with ``cfg``.
+    With ``pages`` they are read from that corpus, where a missing or null
+    ``status`` counts as 200. The corpus is the streamed side of a
+    left-semi join and the URL set its build side, so a small URL set
+    broadcasts and the corpus is read in place."""
+    if pages is None:
+        return lambda urls: (
+            fetch_pages(urls, cfg).where(F.col("status") == 200).select("url", "html")
+        )
+    status = F.col("status") if "status" in pages.columns else F.lit(None)
+    ok = pages.where(F.coalesce(status, F.lit(200)) == 200).select(
+        "url", F.col("html").cast("binary").alias("html")
+    )
+    return lambda urls: ok.join(urls.select("url"), "url", "left_semi")

@@ -180,25 +180,13 @@ def parse_sitemaps(
     return src.mapInPandas(run, schema=SITEMAP_ENTRY_SCHEMA)
 
 
-def corpus_fetcher(pages: DataFrame, url_col: str = "url", html_col: str = "html"):
-    """Resolve sitemap URLs against an already-fetched pages corpus: a
-    left-semi join (requested side small, host-dimension — AQE broadcasts
-    it) returning only the (url, html) pairs present in the corpus."""
-
-    def fetch(urls_df: DataFrame) -> DataFrame:
-        return pages.select(
-            F.col(url_col).alias("url"), F.col(html_col).alias("html")
-        ).join(urls_df.select("url"), "url", "left_semi")
-
-    return fetch
-
-
 def expand_sitemap_entries(
     entries: DataFrame, fetch_fn, max_levels: int = 5, caches: list | None = None
 ) -> DataFrame:
     """Recurse through ``<sitemapindex>`` references: ``kind='sitemap'``
-    rows are fetched (``fetch_fn(urls_df) -> (url, html)`` — a corpus join
-    via :func:`corpus_fetcher` or a live ``fetch_pages``) and parsed again
+    rows are fetched (``fetch_fn(urls_df) -> (url, html)``, a
+    ``sources.live.body_fetcher`` over a corpus or the network, which
+    returns no row for a sitemap that does not answer 200) and parsed again
     until a level yields nothing new. The driver loop sees only a per-level
     existence probe (``limit(1).count()``); entry rows stay distributed.
     Already-visited sitemap URLs are anti-joined out, so reference cycles

@@ -133,3 +133,87 @@ def test_errors_and_redirect_aliases_interact_with_store(spark, fixture_pages, t
     # the redirect's requested URL resolves to the stored canonical row
     got = store.fetch([f"{BASE}/redirect/301"]).collect()
     assert len(got) == 1 and got[0].url == f"{BASE}/200"
+
+
+# Side inputs (robots.txt, sitemaps, feeds) read a body only when the URL
+# answers 200, like the batch path: each host or feed below has a 200 control
+# and a 404 twin whose body would change the outcome if it were read.
+_PAGE = b"<html><body><p>side input fixture page</p></body></html>"
+_DENY_ALL = b"User-agent: *\nDisallow: /\n"
+_FEED_OK, _FEED_GONE = "https://feeds.test/ok.rss", "https://feeds.test/gone.rss"
+
+
+def _rss(link: str) -> bytes:
+    return f"<rss><channel><item><link>{link}</link></item></channel></rss>".encode()
+
+
+def _urlset(loc: str) -> bytes:
+    return f"<urlset><url><loc>{loc}</loc></url></urlset>".encode()
+
+
+@pytest.fixture(scope="module")
+def side_input_corpus(spark, tmp_path_factory):
+    from scrape_spark.schemas import PAGES_FETCH_SCHEMA
+
+    maps_robots = (
+        b"User-agent: *\nAllow: /\n"
+        b"Sitemap: https://maps.test/ok.xml\nSitemap: https://maps.test/gone.xml\n"
+    )
+    bodies = [
+        ("https://gone.test/robots.txt", _DENY_ALL, "text/plain", 404),
+        ("https://denied.test/robots.txt", _DENY_ALL, "text/plain", 200),
+        ("https://maps.test/robots.txt", maps_robots, "text/plain", 200),
+        ("https://maps.test/ok.xml", _urlset("https://maps.test/listed-ok"), "text/xml", 200),
+        ("https://maps.test/gone.xml", _urlset("https://maps.test/listed-gone"), "text/xml", 404),
+        (_FEED_OK, _rss("https://feeds.test/item-ok"), "application/rss+xml", 200),
+        (_FEED_GONE, _rss("https://feeds.test/item-gone"), "application/rss+xml", 404),
+    ] + [
+        (f"https://{h}.test/a", _PAGE, "text/html", 200) for h in ("gone", "denied", "maps")
+    ]
+    path = str(tmp_path_factory.mktemp("side_inputs") / "pages")
+    spark.createDataFrame(
+        [(u, None, b, None, None, ct, st, None) for u, b, ct, st in bodies],
+        schema=PAGES_FETCH_SCHEMA,
+    ).write.parquet(path)
+    return path
+
+
+@pytest.fixture(scope="module")
+def side_input_crawl(spark, side_input_corpus, tmp_path_factory):
+    """One discovered-robots epoch with sitemap discovery over the corpus."""
+    from scrape_spark.operators.frontier import Crawl, CrawlConfig
+    from scrape_spark.operators.store import UrlStore
+
+    tmp = tmp_path_factory.mktemp("side_input_crawl")
+    crawl = Crawl(
+        spark, str(tmp / "state"), UrlStore(spark, str(tmp / "store"), n_buckets=8),
+        spark.read.parquet(side_input_corpus), None,
+        CrawlConfig(epoch_seconds=4.0, shuffle_partitions=4, discover_sitemaps=True),
+    )
+    seeds = [f"https://{h}.test/a" for h in ("gone", "denied", "maps")]
+    (stats,) = crawl.run(1, seeds=seeds)
+    frontier = spark.read.parquet(f"{crawl.state_dir}/epochs/e00001/frontier.parquet")
+    return stats, {r.url for r in frontier.collect()}
+
+
+@pytest.mark.parametrize("side_input", ["robots", "sitemap", "feed"])
+def test_side_input_not_answering_200_is_absent(
+    spark, side_input_corpus, side_input, request, capsys
+):
+    """A robots.txt, sitemap or feed whose corpus row has status 404 counts
+    as absent, whatever its body says: the 404 robots.txt allows its host
+    (RFC 9309 §2.3.1.3), the 404 sitemap adds no frontier entries and the
+    404 feed prints no links. Each 200 twin still takes effect."""
+    if side_input == "feed":
+        from scrape_spark.cli import main
+
+        assert main(["feed", "--pages", side_input_corpus, _FEED_OK, _FEED_GONE]) == 0
+        assert capsys.readouterr().out.splitlines() == ["https://feeds.test/item-ok"]
+        return
+    stats, next_frontier = request.getfixturevalue("side_input_crawl")
+    if side_input == "robots":
+        # gone.test and maps.test are crawled; only denied.test's 200 blocks
+        assert (stats["selected"], stats["robots_denied"]) == (2, 1)
+    else:
+        assert "https://maps.test/listed-ok" in next_frontier
+        assert "https://maps.test/listed-gone" not in next_frontier

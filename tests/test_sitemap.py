@@ -131,7 +131,8 @@ def test_sitemap_seed_drives_a_crawl_epoch(spark, tmp_path):
 def test_expand_sitemap_index_recursion(spark):
     """sitemapindex → nested urlsets resolve from a pages corpus, across
     two index levels; a self-referencing cycle terminates."""
-    from scrape_spark.sources.sitemap import corpus_fetcher, expand_sitemap_entries
+    from scrape_spark.sources.live import body_fetcher
+    from scrape_spark.sources.sitemap import expand_sitemap_entries
 
     top = (b"<sitemapindex>"
            b"<sitemap><loc>https://sm.test/l1.xml</loc></sitemap>"
@@ -153,15 +154,16 @@ def test_expand_sitemap_index_recursion(spark):
         "url string, html binary",
     )
     entries = parse_sitemaps(corpus.where(F.col("url").endswith("top.xml")))
-    out = expand_sitemap_entries(entries, corpus_fetcher(corpus))
+    out = expand_sitemap_entries(entries, body_fetcher(corpus))
     assert {r.loc for r in out.collect()} == {"https://sm.test/deep"}
     assert all(r.kind == "url" for r in out.collect())
 
 
 def test_expand_missing_nested_sitemap_is_skipped(spark):
     """An index entry whose sitemap is absent from the corpus contributes
-    nothing (and doesn't error) — the corpus fetcher just returns no row."""
-    from scrape_spark.sources.sitemap import corpus_fetcher, expand_sitemap_entries
+    nothing (and doesn't error) — the body fetcher just returns no row."""
+    from scrape_spark.sources.live import body_fetcher
+    from scrape_spark.sources.sitemap import expand_sitemap_entries
 
     corpus = spark.createDataFrame(
         [("https://sm.test/top.xml", INDEX),
@@ -170,7 +172,7 @@ def test_expand_missing_nested_sitemap_is_skipped(spark):
         "url string, html binary",
     )
     entries = parse_sitemaps(corpus.where(F.col("url").endswith("top.xml")))
-    out = expand_sitemap_entries(entries, corpus_fetcher(corpus))
+    out = expand_sitemap_entries(entries, body_fetcher(corpus))
     # sitemap-b.xml.gz referenced by INDEX is not in the corpus → only a1
     assert {r.loc for r in out.collect()} == {"https://sm.test/a1"}
 
