@@ -12,10 +12,12 @@ reference can run the same invocations against this engine:
     python -m scrape_spark.cli maintain --store DIR   # expire + compact
 
 Flag names follow the reference: -notext (cmd/scrape/main.go:36), -csv /
--csv-column (:39-40), -headless (:41), -maintain (:43). The one structural
-difference: there is no live network here, so the "internet" is the pages
-corpus parquet given by --pages (the same network-free fetch model the
-whole engine uses, SURVEY.md §2.1 S1).
+-csv-column (:39-40), -headless (:41), -maintain (:43). Like the reference,
+each fetching command (extract, feed, crawl) takes one fetch source per run
+(cmd/scrape/main.go:47-93): --pages (a pages corpus parquet, the
+network-free fetch model the whole engine uses, SURVEY.md §2.1 S1), --warc
+(WARC segment files; not on feed) or --live (the real network). Giving two
+of them exits 2.
 """
 
 from __future__ import annotations
@@ -35,6 +37,53 @@ def _spark(cores: str = "*"):
         # tools/submit_entry.py); --cores only shapes standalone local runs
         return get_spark("scrape-cli")
     return get_spark("scrape-cli", master=f"local[{cores}]")
+
+
+def _corpus_source(args):
+    """Resolve the run's one fetch source from --pages / --warc / --live.
+
+    Returns ``(spark, pages, live)``: a pages corpus and no live config, or
+    no corpus and the ``LiveFetchConfig`` built from --timeout,
+    --max-concurrent, the command's --user-agent (``DEFAULT_UA`` where it
+    has none) and extract's --headless-endpoint. A flag error is printed
+    and returns None before Spark starts; the command then exits 2."""
+    given = [f"--{f}" for f in ("pages", "warc", "live") if getattr(args, f, None)]
+    if len(given) > 1:
+        print(f"{args.command}: {' and '.join(given)} exclude each other; "
+              "give one fetch source", file=sys.stderr)
+        return None
+    if not given:
+        corpus = "--pages/--warc" if hasattr(args, "warc") else "--pages"
+        print(f"{args.command} needs {corpus} (corpus) or --live", file=sys.stderr)
+        return None
+    endpoint = getattr(args, "headless_endpoint", None)
+    if args.live and getattr(args, "headless", False) and not endpoint:
+        print("--headless with --live needs --headless-endpoint", file=sys.stderr)
+        return None
+    spark = _spark(args.cores)
+    if args.live:
+        # Real-network fetch (the reference's default mode; the parquet
+        # corpus is this engine's test/bench stand-in for the web). The
+        # headless flag / settings routing then drive a CDP browser at
+        # --headless-endpoint instead of the corpus join.
+        from scrape_spark.sources.live import DEFAULT_UA, LiveFetchConfig
+
+        return spark, None, LiveFetchConfig(
+            user_agent=getattr(args, "user_agent", None) or DEFAULT_UA,
+            timeout=args.timeout,
+            max_concurrent=args.max_concurrent,
+            headless_endpoint=endpoint,
+        )
+    if args.pages:
+        return spark, spark.read.parquet(args.pages), None
+    # WARC segment ingest (Common Crawl's distribution format).
+    # latest_captures collapses recrawl duplicates (newest warc_ts wins).
+    # Persisted: extract reads the frame as both the request set and the
+    # corpus, and a crawl probes it every epoch; without it the per-record
+    # Python WARC parse and the max_by shuffle would re-run on every use.
+    from scrape_spark.sources.warc import latest_captures, warc_pages
+
+    return spark, latest_captures(warc_pages(spark, args.warc)).persist(), None
 
 
 def _request_df(spark, args, default_all=None) -> "DataFrame":  # noqa: F821
@@ -81,50 +130,19 @@ def cmd_extract(args) -> int:
     from scrape_spark.plans.batch_extract import batch_extract
     from scrape_spark.schemas import FETCH_METHOD_DIRECT, FETCH_METHOD_HEADLESS
 
-    if args.warc and (args.pages or args.live):
-        print("--warc is a corpus source; it excludes --pages/--live", file=sys.stderr)
+    src = _corpus_source(args)
+    if src is None:
         return 2
-    spark = _spark(args.cores)
-    live = None
-    if args.live:
-        # Real-network fetch (the reference's default mode; the parquet
-        # corpus is this engine's test/bench stand-in for the web). The
-        # headless flag / settings routing then drive a CDP browser at
-        # --headless-endpoint instead of the corpus join.
-        from scrape_spark.sources.live import DEFAULT_UA, LiveFetchConfig
-
-        if args.headless and not args.headless_endpoint:
-            print("--headless with --live needs --headless-endpoint", file=sys.stderr)
-            return 2
-        live = LiveFetchConfig(
-            user_agent=args.user_agent or DEFAULT_UA,
-            timeout=args.timeout,
-            max_concurrent=args.max_concurrent,
-            headless_endpoint=args.headless_endpoint,
-        )
-        pages = None
-    elif args.pages:
-        pages = spark.read.parquet(args.pages)
-    elif args.warc:
-        # WARC segment ingest (Common Crawl's distribution format): with no
-        # explicit URLs the whole dump is the request set — the CC-to-corpus
-        # journey is `extract --warc ... --store S --out R` then `export`.
-        # latest_captures collapses recrawl duplicates (newest warc_ts wins).
-        # Persisted: the frame is consumed as BOTH the request set and the
-        # pages corpus, and without it the per-record Python WARC parse plus
-        # the max_by shuffle would execute once per side of the fetch join.
-        from scrape_spark.sources.warc import latest_captures, warc_pages
-
-        pages = latest_captures(warc_pages(spark, args.warc)).persist()
-    else:
-        print("extract needs --pages/--warc (corpus) or --live", file=sys.stderr)
-        return 2
+    spark, pages, live = src
     store = UrlStore(spark, args.store) if args.store else None
     settings = (
         DomainSettingsStore(spark, args.settings) if getattr(args, "settings", None) else None
     )
     out = batch_extract(
         spark,
+        # --warc with no explicit URLs: the whole dump is the request set —
+        # the CC-to-corpus journey is `extract --warc ... --store S --out R`
+        # then `export`
         _request_df(spark, args, default_all=pages if args.warc else None),
         pages,
         store=store,
@@ -205,21 +223,14 @@ def cmd_feed(args) -> int:
     from pyspark.sql import functions as F
 
     from scrape_spark.sources.feed import feed_to_requests, parse_feeds
-    from scrape_spark.sources.live import LiveFetchConfig, body_fetcher
+    from scrape_spark.sources.live import body_fetcher
 
-    spark = _spark(args.cores)
-    live = pages = None
-    if args.live:
-        # live journey: fetch the feed XML itself over the wire, then the
-        # item links through the live batch pipeline
-        live = LiveFetchConfig(
-            timeout=args.timeout, max_concurrent=args.max_concurrent
-        )
-    elif args.pages:
-        pages = spark.read.parquet(args.pages)
-    else:
-        print("feed needs --pages (corpus) or --live", file=sys.stderr)
+    src = _corpus_source(args)
+    if src is None:
         return 2
+    # --live fetches the feed XML itself over the wire, then the item links
+    # through the live batch pipeline
+    spark, pages, live = src
     req = spark.createDataFrame([(u,) for u in args.urls], ["feed_url"])
     # a feed that does not answer 200 left-joins to a NULL xml: no items
     bodies = body_fetcher(pages, live)(req.select(F.col("feed_url").alias("url")))
@@ -279,28 +290,10 @@ def cmd_crawl(args) -> int:
             file=sys.stderr,
         )
         return 2
-    spark = _spark(args.cores)
-    live = None
-    if args.live:
-        from scrape_spark.sources.live import LiveFetchConfig
-
-        live = LiveFetchConfig(
-            user_agent=args.user_agent,
-            timeout=args.timeout,
-            max_concurrent=args.max_concurrent,
-        )
-        pages = None
-    elif args.pages:
-        pages = spark.read.parquet(args.pages)
-    elif args.warc:
-        # persisted: every crawl epoch probes this corpus — without it the
-        # expensive per-record WARC parse would re-execute per epoch
-        from scrape_spark.sources.warc import latest_captures, warc_pages
-
-        pages = latest_captures(warc_pages(spark, args.warc)).persist()
-    else:
-        print("crawl needs --pages/--warc (corpus) or --live", file=sys.stderr)
+    src = _corpus_source(args)
+    if src is None:
         return 2
+    spark, pages, live = src
     if args.robots_txt:
         from scrape_spark.sources.robots import parse_robots
 
@@ -483,31 +476,39 @@ def cmd_ping(args) -> int:
     return 0
 
 
+def _add_source_flags(parser: argparse.ArgumentParser, warc: bool = True) -> None:
+    """The fetch-source flags :func:`_corpus_source` resolves."""
+    parser.add_argument("--pages", default=None, help="pages corpus parquet")
+    if warc:
+        parser.add_argument(
+            "--warc", default=None, metavar="GLOB",
+            help="WARC segment files as the corpus (e.g. 'segs/*.warc.gz'); "
+            "extract with no URLs extracts the whole dump",
+        )
+    parser.add_argument("--live", action="store_true",
+                        help="fetch over the real network instead of a corpus")
+    parser.add_argument("--timeout", type=float, default=30.0,
+                        help="live-fetch per-request timeout seconds")
+    parser.add_argument("--max-concurrent", type=int, default=6, dest="max_concurrent",
+                        help="live connections per task (MaxTabs parity)")
+
+
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="scrape_spark")
     p.add_argument("--cores", default="*", help="local[N] parallelism")
     sub = p.add_subparsers(dest="command", required=True)
 
     ex = sub.add_parser("extract", help="batch fetch+extract → JSON array")
-    ex.add_argument("--pages", default=None, help="pages corpus parquet")
-    ex.add_argument("--warc", default=None, metavar="GLOB",
-                    help="WARC segment files as the corpus (e.g. 'segs/*.warc.gz'); "
-                    "with no URLs, extracts the whole dump")
+    _add_source_flags(ex)
     ex.add_argument("--out", default=None, metavar="PARQUET",
                     help="write results to parquet instead of a stdout JSON array")
     ex.add_argument("--store", default=None, help="memoization store dir")
     ex.add_argument("--notext", action="store_true", help="omit content_text")
     ex.add_argument("--headless", action="store_true", help="headless client")
-    ex.add_argument("--live", action="store_true",
-                    help="fetch over the real network instead of --pages")
     ex.add_argument("--headless-endpoint", default=None, dest="headless_endpoint",
                     help="CDP browser http endpoint (e.g. http://127.0.0.1:9222)")
     ex.add_argument("--user-agent", default=None, dest="user_agent",
                     help="live-fetch User-Agent")
-    ex.add_argument("--timeout", type=float, default=30.0,
-                    help="live-fetch per-request timeout seconds")
-    ex.add_argument("--max-concurrent", type=int, default=6, dest="max_concurrent",
-                    help="live connections per task (MaxTabs parity)")
     ex.add_argument("--csv", default=None, help="CSV file of URLs")
     ex.add_argument("--csv-column", type=int, default=1, help="1-based URL column")
     ex.add_argument("--settings", default=None, help="domain-settings store dir (per-host routing)")
@@ -527,11 +528,7 @@ def build_parser() -> argparse.ArgumentParser:
     se.set_defaults(fn=cmd_settings)
 
     fe = sub.add_parser("feed", help="parse RSS/Atom feeds → item links")
-    fe.add_argument("--pages", default=None)
-    fe.add_argument("--live", action="store_true",
-                    help="fetch feed + items over the real network")
-    fe.add_argument("--timeout", type=float, default=30.0)
-    fe.add_argument("--max-concurrent", type=int, default=6, dest="max_concurrent")
+    _add_source_flags(fe, warc=False)
     fe.add_argument(
         "--extract", action="store_true",
         help="run item links through the fetch+extract pipeline (/feed → /batch)",
@@ -614,15 +611,7 @@ def build_parser() -> argparse.ArgumentParser:
     pi.set_defaults(fn=cmd_ping)
 
     cr = sub.add_parser("crawl", help="BFS crawl epochs → store (resumable)")
-    cr.add_argument("--pages", default=None, help="pages corpus parquet")
-    cr.add_argument("--warc", default=None, metavar="GLOB",
-                    help="WARC segment files as the corpus")
-    cr.add_argument("--live", action="store_true",
-                    help="fetch over the real network instead of --pages")
-    cr.add_argument("--timeout", type=float, default=30.0,
-                    help="live-fetch per-request timeout seconds")
-    cr.add_argument("--max-concurrent", type=int, default=6, dest="max_concurrent",
-                    help="live connections per task")
+    _add_source_flags(cr)
     cr.add_argument("--state", required=True, help="crawl state/checkpoint dir")
     cr.add_argument("--store", required=True, help="url store dir")
     cr.add_argument(

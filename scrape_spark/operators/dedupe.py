@@ -73,13 +73,12 @@ def jaccard_pairs(
     text_col: str,
     threshold: float = 0.9,
     ngram: int = 1,
-    prefix_filter: bool = True,
 ) -> DataFrame:
     """All pairs (i < j) with Jaccard(token-set_i, token-set_j) > threshold.
     ngram=1 → word sets; ngram>=2 → shingle sets. Jaccard is a small-integer
     ratio → bit-identical across engines.
 
-    EXACT result either way. With prefix_filter (SSJoin-style): any pair with
+    EXACT result through an SSJoin-style prefix filter: any pair with
     jac ≥ t has overlap c ≥ t·u ≥ ⌈t·n⌉ for each side's size n, so by
     pigeonhole the two docs must share a token inside their first
     n − ⌈t·n⌉ + 1 tokens under ANY fixed global token order. Ordering tokens
@@ -89,24 +88,6 @@ def jaccard_pairs(
     tokens. Candidates are then verified with the full sets."""
     tok = word_set(text_col) if ngram == 1 else shingles(text_col, ngram)
     base = df.select(F.col(id_col).alias("doc_id"), tok.alias("toks")).cache()
-    sizes = base.select("doc_id", F.size("toks").alias("n"))
-
-    if not prefix_filter:
-        inv = base.select("doc_id", F.explode("toks").alias("tok"))
-        a, b = inv.alias("a"), inv.alias("b")
-        inter = (
-            a.join(b, (F.col("a.tok") == F.col("b.tok")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .groupBy(F.col("a.doc_id").alias("i"), F.col("b.doc_id").alias("j"))
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        sa = sizes.select(F.col("doc_id").alias("i"), F.col("n").alias("na"))
-        sb = sizes.select(F.col("doc_id").alias("j"), F.col("n").alias("nb"))
-        return (
-            inter.join(sa, "i").join(sb, "j")
-            .withColumn("jac", F.col("c") / (F.col("na") + F.col("nb") - F.col("c")))
-            .filter(F.col("jac") > threshold)
-            .select("i", "j", "c", (F.col("na") + F.col("nb") - F.col("c")).alias("u"))
-        )
 
     # r6 shape (measured 1.9× on sf0.1, identical output): document
     # frequency comes from a window count over the 64-bit token hash —

@@ -9,8 +9,7 @@ and an optional content_text drop (-notext). Engine equivalents:
 - ``metadata_json_col``: the stored-blob subset (skip-list applied) — kept
   only for compat round-trips; the engine's tables stay fully shredded.
 - ``parse_metadata_json``: the K9 inverse via from_json.
-- ``write_json``: newline-delimited JSON to a path (the distributed sink);
-  ``json_array_string`` collapses a SMALL result to one JSON array string
+- ``json_array_string``: collapses a SMALL result to one JSON array string
   (the CLI-shaped output) — explicitly driver-side, never for big frames.
 """
 
@@ -42,11 +41,6 @@ def metadata_json_col(df: DataFrame) -> Column:
 def parse_metadata_json(col: Column, schema: T.StructType) -> Column:
     """K9: inverse of metadata_json_col."""
     return F.from_json(col, schema)
-
-
-def write_json(df: DataFrame, path: str, drop_text: bool = False) -> None:
-    cols = [c for c in df.columns if not (drop_text and c == "content_text")]
-    df.select(*cols).write.mode("overwrite").json(path)
 
 
 def json_array_string(df: DataFrame, drop_text: bool = False) -> str:

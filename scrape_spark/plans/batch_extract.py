@@ -301,14 +301,11 @@ def _live_pages(misses: DataFrame, live) -> DataFrame:
             F.lit("chromium-headless"),
         )
         .otherwise(F.lit("direct"))
-        .alias("client"),
-        F.col("__user_agent").alias("ua"),
-        F.col("__headers").alias("hdrs"),
+        .alias("fetch_client"),
+        F.col("__user_agent").alias("user_agent"),
+        F.col("__headers").alias("headers"),
     )
-    return fetch_pages(
-        routed, live, url_col="url", client_col="client",
-        ua_col="ua", headers_col="hdrs",
-    ).cache()
+    return fetch_pages(routed, live).cache()
 
 
 def batch_extract(

@@ -13,6 +13,12 @@ live sites in production:
     pages = fetch_pages(urls_df, LiveFetchConfig(...))
     batch_extract(spark, urls_df, pages, store=...)
 
+``fetch_pages`` takes one request shape: a ``url`` column plus, optionally,
+per-row ``fetch_client`` ('chromium-headless' routes through the CDP
+endpoint, anything else is direct), ``user_agent`` and ``headers``
+(map<string,string>) columns, which override the config's User-Agent and
+add to its headers. The per-domain settings routing (J3/S3) fills them.
+
 Side inputs (robots.txt, sitemaps, feeds) need only the bodies of the URLs
 that answer 200: :func:`body_fetcher` returns that, from the network or
 from a pages corpus, and is the one place those callers fork on the mode.
@@ -86,17 +92,9 @@ class LiveFetchConfig:
     max_concurrent: int = 6  # per-task live connections (MaxTabs parity)
     headless_endpoint: str | None = None  # http://host:port of a CDP browser
     headers: dict[str, str] | None = None
-    n_partitions: int | None = None
 
 
 # ---- direct HTTP client ------------------------------------------------------
-
-
-class _NoRaiseRedirects(urllib.request.HTTPRedirectHandler):
-    # Keep urllib's default 10-hop cap (== Go http.Client's); nothing to
-    # override — subclass exists as the documented hook for politeness
-    # instrumentation (per-hop accounting) without changing semantics.
-    pass
 
 
 class DirectClient:
@@ -113,7 +111,9 @@ class DirectClient:
 
     def __init__(self, cfg: LiveFetchConfig):
         self.cfg = cfg
-        self._opener = urllib.request.build_opener(_NoRaiseRedirects())
+        # build_opener installs urllib's HTTPRedirectHandler: 10 hops, the
+        # same cap as Go's http.Client
+        self._opener = urllib.request.build_opener()
 
     def get(
         self,
@@ -368,40 +368,28 @@ def _fetch_partition_factory(cfg: LiveFetchConfig):
     return run
 
 
-def fetch_pages(
-    urls_df: DataFrame,
-    cfg: LiveFetchConfig | None = None,
-    url_col: str = "url",
-    client_col: str | None = None,
-    ua_col: str | None = None,
-    headers_col: str | None = None,
-) -> DataFrame:
+def fetch_pages(urls_df: DataFrame, cfg: LiveFetchConfig | None = None) -> DataFrame:
     """Fetch every URL in ``urls_df`` over the real network and return a
     pages table (PAGES_FETCH_SCHEMA shape: url/html/ctype/status, plus
     fetch_client provenance; redirect_to is absent — the HTTP clients
     follow redirects themselves, so the corpus-model hop machinery is
     skipped, exactly like the reference's http.Client).
 
-    ``client_col`` names an optional per-row column selecting the client
-    ('chromium-headless' routes through the CDP endpoint, anything else is
-    direct) — the per-domain settings routing (J3/S3) feeds this.
+    ``urls_df`` has the request shape in the module docstring: ``url`` and
+    any of ``fetch_client``, ``user_agent`` and ``headers``; other columns
+    are dropped.
 
     The result is network-non-deterministic: persist before branching on
-    it. ``batch_extract(live=...)`` caches it; a crawl epoch would write
-    it to the epoch directory.
+    it. ``batch_extract(live=...)`` caches it; a crawl epoch writes it to
+    the epoch directory.
     """
     cfg = cfg or LiveFetchConfig()
-    sel = [F.col(url_col).alias("url")]
-    if client_col is not None:
-        sel.append(F.col(client_col).cast("string").alias("fetch_client"))
-    if ua_col is not None:
-        sel.append(F.col(ua_col).cast("string").alias("user_agent"))
-    if headers_col is not None:
-        sel.append(F.col(headers_col).alias("headers"))
-    df = urls_df.select(*sel).dropDuplicates(["url"])
-    n_part = cfg.n_partitions or df.sparkSession.sparkContext.defaultParallelism
+    cols = ("url", "fetch_client", "user_agent", "headers")
+    df = urls_df.select(*[c for c in cols if c in urls_df.columns])
+    df = df.dropDuplicates(["url"])
     df = df.repartition(
-        n_part, salted_host_hash(hostname_col(F.col("url")))
+        df.sparkSession.sparkContext.defaultParallelism,
+        salted_host_hash(hostname_col(F.col("url"))),
     )
     return df.mapInPandas(_fetch_partition_factory(cfg), _FETCH_OUT_SCHEMA)
 

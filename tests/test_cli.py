@@ -335,9 +335,10 @@ def test_warc_dump_to_corpus_journey(spark, capsys, tmp_path):
 
 
 def test_corpus_source_flags_are_exclusive(capsys, tmp_path):
-    """--warc excludes --pages/--live; --discover-sitemaps needs
-    discovered-robots mode; an empty --sitemaps seed fails loudly.
-    All argument-level: exit 2 with a message, no 0-page 'success'."""
+    """Every fetching command takes at most one of --pages/--warc/--live
+    (feed has no --warc); --discover-sitemaps needs discovered-robots mode.
+    All argument-level: exit 2 naming the flags, no 0-page 'success' and no
+    silently preferred source."""
     assert main(["extract", "--pages", "x", "--warc", "y", "u"]) == 2
     assert "--warc" in capsys.readouterr().err
     assert main(["extract", "--live", "--warc", "y"]) == 2
@@ -345,6 +346,87 @@ def test_corpus_source_flags_are_exclusive(capsys, tmp_path):
     assert main(["crawl", "--pages", "x", "--state", "s", "--store", "st",
                  "--allow-all", "--discover-sitemaps", "u"]) == 2
     assert "--discover-sitemaps" in capsys.readouterr().err
+
+    sources = {"--pages": [str(tmp_path / "p")], "--warc": [str(tmp_path / "w")],
+               "--live": []}
+    crawl_args = ["--state", str(tmp_path / "s"), "--store", str(tmp_path / "st")]
+    pairs = [("--pages", "--warc"), ("--pages", "--live"), ("--warc", "--live")]
+    cases = [("extract", [], p) for p in pairs] + [
+        ("crawl", crawl_args, p) for p in pairs
+    ] + [("feed", [], ("--pages", "--live"))]
+    for command, extra, (a, b) in cases:
+        # a loopback URL: a regression that reaches a live fetch stays local
+        argv = [command, *extra, a, *sources[a], b, *sources[b], "http://127.0.0.1:9/"]
+        assert main(argv) == 2, argv
+        err = capsys.readouterr().err
+        assert a in err and b in err, (argv, err)
+
+
+# Each fetching command's flags: dest -> (option strings, default, type).
+# The source flags come from one parser helper shared by the three
+# commands; sharing them must not add, drop or re-default any flag.
+_FETCH_COMMAND_FLAGS = {
+    "extract": {
+        "csv": (("--csv",), None, None),
+        "csv_column": (("--csv-column",), 1, int),
+        "headless": (("--headless",), False, None),
+        "headless_endpoint": (("--headless-endpoint",), None, None),
+        "live": (("--live",), False, None),
+        "max_concurrent": (("--max-concurrent",), 6, int),
+        "notext": (("--notext",), False, None),
+        "out": (("--out",), None, None),
+        "pages": (("--pages",), None, None),
+        "settings": (("--settings",), None, None),
+        "store": (("--store",), None, None),
+        "timeout": (("--timeout",), 30.0, float),
+        "urls": ((), None, None),
+        "user_agent": (("--user-agent",), None, None),
+        "warc": (("--warc",), None, None),
+    },
+    "feed": {
+        "extract": (("--extract",), False, None),
+        "live": (("--live",), False, None),
+        "max_concurrent": (("--max-concurrent",), 6, int),
+        "notext": (("--notext",), False, None),
+        "pages": (("--pages",), None, None),
+        "store": (("--store",), None, None),
+        "timeout": (("--timeout",), 30.0, float),
+        "urls": ((), None, None),
+    },
+    "crawl": {
+        "allow_all": (("--allow-all",), False, None),
+        "discover_sitemaps": (("--discover-sitemaps",), False, None),
+        "epoch_seconds": (("--epoch-seconds",), 10.0, float),
+        "epochs": (("--epochs",), 4, int),
+        "keep_snapshots": (("--keep-snapshots",), False, None),
+        "live": (("--live",), False, None),
+        "max_concurrent": (("--max-concurrent",), 6, int),
+        "max_depth": (("--max-depth",), 6, int),
+        "pages": (("--pages",), None, None),
+        "robots": (("--robots",), None, None),
+        "robots_ttl_epochs": (("--robots-ttl-epochs",), None, int),
+        "robots_txt": (("--robots-txt",), None, None),
+        "seeds": ((), None, None),
+        "seen_filter": (("--seen-filter",), "none", None),
+        "sitemaps": (("--sitemaps",), None, None),
+        "state": (("--state",), None, None),
+        "store": (("--store",), None, None),
+        "timeout": (("--timeout",), 30.0, float),
+        "user_agent": (("--user-agent",), "scrape-spark", None),
+        "warc": (("--warc",), None, None),
+    },
+}
+
+
+@pytest.mark.parametrize("command", sorted(_FETCH_COMMAND_FLAGS))
+def test_fetch_command_flags_are_pinned(command):
+    sub = next(a for a in build_parser()._actions if a.dest == "command")
+    got = {
+        a.dest: (tuple(a.option_strings), a.default, a.type)
+        for a in sub.choices[command]._actions
+        if a.dest != "help"
+    }
+    assert got == _FETCH_COMMAND_FLAGS[command]
 
 
 def test_crawl_empty_sitemaps_seed_fails_loudly(spark, corpus_path, capsys, tmp_path):

@@ -121,6 +121,31 @@ def test_error_urls_attempted_once(spark, crawl_run):
     assert (pdf["error"].str.len() > 0).all()
 
 
+def test_epoch_metrics_and_lineage_match_commit(spark, crawl_run):
+    """Each epoch's per-host metrics and per-partition lineage account for
+    exactly the rows its commit record reports: every selected URL is
+    fetched once and lands in one output partition."""
+    import json
+
+    crawl, stats = crawl_run
+    assert len(stats) == N_EPOCHS
+    for epoch in range(N_EPOCHS):
+        edir = f"{crawl.state_dir}/epochs/e{epoch:05d}"
+        with open(f"{edir}/_COMMIT.json") as f:
+            commit = json.load(f)
+        m = spark.read.parquet(f"{edir}/metrics.parquet").agg(
+            F.coalesce(F.sum("fetched"), F.lit(0)).alias("fetched"),
+            F.coalesce(F.sum("errors"), F.lit(0)).alias("errors"),
+        ).collect()[0]
+        rows = spark.read.parquet(f"{edir}/lineage.parquet").agg(
+            F.coalesce(F.sum("rows"), F.lit(0))
+        ).collect()[0][0]
+        assert commit["selected"] > 0, epoch
+        assert m.fetched == commit["selected"], (epoch, m, commit)
+        assert m.errors == commit["errors"], (epoch, m, commit)
+        assert rows == commit["selected"], (epoch, rows, commit)
+
+
 @pytest.mark.parametrize("seen_filter", ["bloom", "", "cukoo"])
 def test_unknown_seen_filter_rejected(seen_filter):
     with pytest.raises(ValueError, match="seen_filter"):
@@ -177,11 +202,11 @@ def test_resume_from_checkpoint(spark, tmp_path_factory, pages, model, crawl_run
 
 def test_epoch_stats_do_not_recompute_pipelines(spark, tmp_path_factory, pages):
     """Round-3 ratchet: the selected/deferred stats must come from the ONE
-    cached ranked pipeline (computed before the fetch, doubling as the
-    fetch-join probe-size hint) — not from re-running the seen-set
-    anti-join plan. Pinned via total Spark job count per epoch: the
-    recompute shape measured ~97 jobs/epoch on this exact workload, the
-    single-pass shape ~63. Bound set between with headroom for AQE noise."""
+    cached ranked pipeline (computed before the fetch) — not from re-running
+    the seen-set anti-join plan. Pinned via total Spark job count per epoch:
+    the recompute shape measured ~97 jobs/epoch on this exact workload; the
+    single-pass shape measured 37-43 jobs in epochs 0-1 over three runs
+    (`local[4]`, 4 cores). The bound is that maximum plus 10%."""
     tmpdir = str(tmp_path_factory.mktemp("jobs"))
     crawl = _mk_crawl(spark, tmpdir, pages)
     crawl.seed(seed_urls(N_HOSTS))
@@ -193,7 +218,7 @@ def test_epoch_stats_do_not_recompute_pipelines(spark, tmp_path_factory, pages):
         before = njobs()
         stats = crawl.run_epoch(epoch)
         delta = njobs() - before
-        assert delta <= 80, f"epoch {epoch} ran {delta} jobs (recompute regression?)"
+        assert delta <= 47, f"epoch {epoch} ran {delta} jobs (recompute regression?)"
         assert stats["selected"] > 0
 
 
@@ -272,7 +297,9 @@ def test_pruned_confirm_reads_only_touched_buckets(spark, tmp_path_factory, page
 
 def test_cuckoo_epoch_job_count_bounded(spark, tmp_path_factory, pages):
     """The cuckoo path's pruned confirm adds bucket-discovery collects; the
-    total job count per epoch must stay bounded (no recompute regressions)."""
+    total job count per epoch must stay bounded (no recompute regressions).
+    Epochs 0-1 measured 51-53 jobs over three runs (`local[4]`, 4 cores);
+    the bound is that maximum plus 10%."""
     tmpdir = str(tmp_path_factory.mktemp("cuckoo_jobs"))
     crawl = _mk_crawl(spark, tmpdir, pages, seen_filter="cuckoo")
     crawl.seed(seed_urls(N_HOSTS))
@@ -284,7 +311,7 @@ def test_cuckoo_epoch_job_count_bounded(spark, tmp_path_factory, pages):
         before = njobs()
         stats = crawl.run_epoch(epoch)
         delta = njobs() - before
-        assert delta <= 85, f"epoch {epoch} ran {delta} jobs"
+        assert delta <= 58, f"epoch {epoch} ran {delta} jobs"
         assert stats["selected"] > 0
     shutil.rmtree(tmpdir, ignore_errors=True)
 

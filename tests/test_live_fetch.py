@@ -460,11 +460,9 @@ class TestFetchPages:
             (site + "/latin", "direct"),
             (site + "/js-app", "chromium-headless"),
         ]
-        df = spark.createDataFrame(urls, "url string, client string")
-        cfg = LiveFetchConfig(
-            headless_endpoint=cdp.endpoint, timeout=10, n_partitions=2
-        )
-        out = fetch_pages(df, cfg, client_col="client")
+        df = spark.createDataFrame(urls, "url string, fetch_client string")
+        cfg = LiveFetchConfig(headless_endpoint=cdp.endpoint, timeout=10)
+        out = fetch_pages(df, cfg)
         rows = {r["url"]: r for r in out.collect()}
         assert rows[site + "/"]["status"] == 200
         assert bytes(rows[site + "/"]["html"]) == ARTICLE
@@ -572,7 +570,7 @@ class TestFetchPages:
                 epoch_seconds=10.0, max_depth=4,
                 shuffle_partitions=4, user_agent="scrape-spark",
             ),
-            live=LiveFetchConfig(timeout=10, n_partitions=2),
+            live=LiveFetchConfig(timeout=10),
         )
         _SiteHandler.seen.clear()
         stats = crawl.run(3, seeds=[site + "/site/"])
