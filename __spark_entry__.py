@@ -1078,7 +1078,7 @@ def crawl_bfs(spark, sf):  # equivalence vs the Python reference model is pinned
         UrlStore(spark, f"{tmp}/store", n_buckets=4),
         pages,
         robots_table(spark, n_hosts),
-        CrawlConfig(epoch_seconds=4.0, shuffle_partitions=4),
+        CrawlConfig(epoch_seconds=4.0),
     )
     crawl.run(epochs, seeds=seed_urls(n_hosts))
     logs = [

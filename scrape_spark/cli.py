@@ -80,7 +80,7 @@ def _corpus_source(args):
     # latest_captures collapses recrawl duplicates (newest warc_ts wins).
     # Persisted: extract reads the frame as both the request set and the
     # corpus, and a crawl probes it every epoch; without it the per-record
-    # Python WARC parse and the max_by shuffle would re-run on every use.
+    # Python WARC parse and the newest-capture shuffle would re-run on every use.
     from scrape_spark.sources.warc import latest_captures, warc_pages
 
     return spark, latest_captures(warc_pages(spark, args.warc)).persist(), None

@@ -29,6 +29,32 @@ from pyspark.sql import functions as F
 from scrape_spark.functions.textstats import fingerprint, shingles, word_set
 
 # ---------------------------------------------------------------------------
+# one row per key
+# ---------------------------------------------------------------------------
+
+def first_per_key(
+    df: DataFrame, keys: list[str], order: list[Column | str]
+) -> DataFrame:
+    """df (same columns) with one row per ``keys``: the first under the
+    ``order`` sort expressions. Every keep-one-row-per-key rule in the
+    package goes through here — the store's last-write-wins resolve and
+    MERGE dedupe, WARC recapture collapse, frontier dedupe and exact dedupe.
+
+    A ``row_number() == 1`` window rather than ``max_by``/``min`` over a
+    struct: Spark prunes the columns a consumer never selects through the
+    window (a key-only read of a multi-generation store scans the key and
+    sort columns, not the whole row), and plans a partial
+    ``WindowGroupLimit`` before the key exchange. An exchange already
+    clustered on a subset of ``keys`` is reused."""
+    w = Window.partitionBy(*keys).orderBy(*order)
+    return (
+        df.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
+
+
+# ---------------------------------------------------------------------------
 # exact dedupe
 # ---------------------------------------------------------------------------
 
@@ -54,13 +80,9 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     never selects it; as a projected column, Catalyst prunes the text off
     the shuffle when downstream doesn't need it (guide §2.3: project before
     the exchange). Measured 0.93 s → 0.77 s on the driver's export query."""
-    w = F.row_number().over(Window.partitionBy("__fp").orderBy(F.col(id_col)))
-    return (
-        df.withColumn("__fp", fingerprint(text_col))
-        .withColumn("__rn", w)
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__fp")
-    )
+    return first_per_key(
+        df.withColumn("__fp", fingerprint(text_col)), ["__fp"], [F.col(id_col)]
+    ).drop("__fp")
 
 
 # ---------------------------------------------------------------------------

@@ -73,6 +73,7 @@ from scrape_spark.operators.cuckoo import (
     rebuild_flagged,
     update_cuckoo,
 )
+from scrape_spark.operators.dedupe import first_per_key
 from scrape_spark.operators.store import REQUESTED_KEY, UrlStore
 from scrape_spark.plans.batch_extract import fetch_join, finalize_results
 from scrape_spark.schemas import FRONTIER_SCHEMA
@@ -115,22 +116,21 @@ SEEN_FILTERS = ("none", "cuckoo")
 # the daily maintenance ticker (database/sqlite/sqlite.go:76-80).
 COMPACT_AFTER_GENERATIONS = 8
 
+# the frontier row a key keeps: lowest (depth, priority, discovered_epoch),
+# the cleaned URL as the last tie-break (ascending, nulls first)
+_FRONTIER_ORDER = ["depth", "priority", "discovered_epoch", "url"]
+
 
 def frontier_rows(raw: DataFrame) -> DataFrame:
     """(raw, depth, priority, discovered_epoch) rows → FRONTIER_SCHEMA: each
-    URL is cleaned, keyed and hosted, and each key keeps exactly one row —
-    the lowest (depth, priority, discovered_epoch), with the cleaned URL as
-    the last tie-break, so the result never depends on partition order."""
-    best = F.min(F.struct("depth", "priority", "discovered_epoch", "url"))
+    URL is cleaned, keyed and hosted, and each key keeps exactly one row
+    (``_FRONTIER_ORDER``), so the result never depends on partition order."""
+    keyed = raw.withColumn("__ck", clean_and_key("raw")).select(
+        F.col("__ck.key").alias("key"), F.col("__ck.parsed_url").alias("url"),
+        "depth", "priority", "discovered_epoch",
+    )
     return (
-        raw.withColumn("__ck", clean_and_key("raw"))
-        .select(
-            F.col("__ck.key").alias("key"), F.col("__ck.parsed_url").alias("url"),
-            "depth", "priority", "discovered_epoch",
-        )
-        .groupBy("key")
-        .agg(best.alias("__b"))
-        .select("key", "__b.*")
+        first_per_key(keyed, ["key"], _FRONTIER_ORDER)
         .withColumn("host", hostname_col(F.col("url")))
         .select(*FRONTIER_SCHEMA.fieldNames())
     )
@@ -163,17 +163,24 @@ class CrawlConfig:
     # seen-set probe: "none" = exact anti-join against the full fresh key
     # set; "cuckoo" = persistent cuckoo pre-filter + bucket-pruned confirm
     seen_filter: str = "none"
-    shuffle_partitions: int | None = None
 
     def __post_init__(self):
         if self.seen_filter not in SEEN_FILTERS:
             raise ValueError(
                 f"seen_filter must be one of {SEEN_FILTERS}, got {self.seen_filter!r}"
             )
+        if self.robots_ttl_epochs is not None and self.robots_ttl_epochs < 1:
+            raise ValueError("robots_ttl_epochs must be >= 1 (or None)")
 
     def budget_expr(self):
-        d = F.coalesce(F.col("crawl_delay"), F.lit(DEFAULT_CRAWL_DELAY))
-        return F.greatest(F.lit(1), F.floor(F.lit(self.epoch_seconds) / d)).cast("int")
+        """Per-host fetch budget: floor(epoch_seconds / crawl_delay), at
+        least 1, as a long. A NULL or zero delay takes the default (a zero
+        divisor fails under ANSI mode); a negative, NaN or infinite delay
+        gives 1, and a tiny one saturates instead of overflowing."""
+        delay = F.col("crawl_delay")
+        d = F.coalesce(F.when(delay != 0, delay), F.lit(DEFAULT_CRAWL_DELAY))
+        per_epoch = F.floor(F.lit(self.epoch_seconds) / d)
+        return F.greatest(F.lit(1).cast("long"), per_epoch)
 
 
 class Crawl:
@@ -510,8 +517,6 @@ class Crawl:
         self._robots_prior_hosts = state.select("host")
         ttl = self.cfg.robots_ttl_epochs
         if ttl is not None:
-            if ttl < 1:
-                raise ValueError("robots_ttl_epochs must be >= 1 (or None)")
             state = state.filter(
                 F.coalesce(F.col("robots_epoch"), F.lit(-(1 << 30)))
                 > F.lit(epoch - ttl)
@@ -761,7 +766,7 @@ class Crawl:
 
         # 4. ONE fetch join + ONE extraction pass per epoch, spread across
         # executors by salted host hash; results AND outlinks derive from it
-        n_part = cfg.shuffle_partitions or self.spark.sparkContext.defaultParallelism
+        n_part = self.spark.sparkContext.defaultParallelism
         to_fetch = (
             selected.withColumn("request_error", F.lit(None).cast("string"))
             .withColumn("original_url", F.col("url"))
@@ -834,18 +839,9 @@ class Crawl:
             self._unseen(links.join(in_flight, "key", "left_anti"), pre_filter, confirm)
             .select(*FRONTIER_SCHEMA.fieldNames())
         )
-        next_frontier = (
-            deferred.unionByName(fresh_links)
-            .withColumn(
-                "__rn",
-                F.row_number().over(
-                    W.partitionBy("key").orderBy("depth", "priority", "discovered_epoch")
-                ),
-            )
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-            .filter(F.col("depth") <= cfg.max_depth)
-        )
+        next_frontier = first_per_key(
+            deferred.unionByName(fresh_links), ["key"], _FRONTIER_ORDER
+        ).filter(F.col("depth") <= cfg.max_depth)
 
         # 7. metrics with per-partition lineage
         host_metrics = (

@@ -20,8 +20,9 @@ sandbox has no Iceberg jars; on a real cluster ``ManifestTable`` is replaced
   non-trivial batch touches every bucket; a copy-on-write MERGE would
   rewrite approximately the whole store each epoch). Last-write-wins is
   resolved at READ time: every manifest file entry carries the commit
-  sequence (``seq``), and a multi-generation bucket read takes
-  ``max_by(payload, (order_col, seq))`` per key. Buckets that hold a single
+  sequence (``seq``), and a multi-generation bucket read keeps, per key,
+  the first row by ``(order_col desc, seq desc)`` (``first_per_key``, a
+  ``row_number() == 1`` window). Buckets that hold a single
   generation (freshly compacted, or never delta-merged) skip resolution
   entirely — the scan plan is identical to a plain parquet read. This is
   the merge-on-read shape Iceberg v2 uses.
@@ -66,6 +67,7 @@ from pyspark.sql import functions as F
 
 from scrape_spark.functions.textfns import expires_at, is_fresh, stamp_fetch_time
 from scrape_spark.functions.urlkeys import clean_and_key, url_key
+from scrape_spark.operators.dedupe import first_per_key
 from scrape_spark.schemas import DEFAULT_TTL_SECONDS, ID_MAP_SCHEMA, URL_STORE_SCHEMA
 
 BUCKET_COL = "__bucket"
@@ -153,29 +155,6 @@ class LocalFileIO(FileIO):
             os.rmdir(path)
         except OSError:
             pass  # not empty / already gone
-
-
-def _newest_per_key(
-    df: DataFrame, group_cols: list[str], payload: list[str], ord_fields: list
-) -> DataFrame:
-    """Last-write-wins aggregate shared by the read-side resolve and the
-    MERGE dedupe: per group, the payload columns of the row maximal by
-    ``struct(ord_fields)``, as ``group_cols + payload``. ``max_by`` over a
-    struct has no hash-aggregate buffer, so Spark plans it as a
-    ``SortAggregate`` that sorts its input by the group keys. On the read
-    side the partial aggregate sorts and combines before the key exchange
-    and the final one sorts again after it; the MERGE dedupe's bucket
-    repartition comes first, so its partial and final aggregates both run
-    after that one exchange, over one sort."""
-    return (
-        df.groupBy(*group_cols)
-        .agg(
-            F.max_by(
-                F.struct(*[F.col(c) for c in payload]), F.struct(*ord_fields)
-            ).alias("__row")
-        )
-        .select(*group_cols, "__row.*")
-    )
 
 
 class ManifestTable:
@@ -290,10 +269,10 @@ class ManifestTable:
         post-compaction case) take a plain pruned parquet scan — zero
         resolution overhead, full filter pushdown. Only when some requested
         bucket carries multiple delta generations does the plan add the
-        per-key ``max_by`` (``_newest_per_key``: a sort-based aggregate with
-        a map-side partial over just the pruned buckets — and on a real
-        cluster the aggregate's shuffle is what Iceberg's positional-delete
-        readers pay too).
+        per-key last-write-wins window (``first_per_key``, with a map-side
+        partial limit over just the pruned buckets; columns a consumer never
+        selects are pruned through it — and on a real cluster the window's
+        shuffle is what Iceberg's positional-delete readers pay too).
         ``resolve=False`` returns the raw multi-generation union (all row
         versions) — what a consumer that counts every committed copy reads
         (the crawl's cuckoo seen-filter build)."""
@@ -382,15 +361,12 @@ class ManifestTable:
         )
 
     def _resolve(self, df: DataFrame) -> DataFrame:
-        """Last-write-wins over (order_col, __seq) across generations (struct
-        comparison puts NULL order_col lowest = desc_nulls_last)."""
-        ord_fields = [F.col("__seq")]
+        """Last-write-wins over (order_col, __seq) across generations; a
+        NULL order_col sorts lowest."""
+        order = [F.col("__seq").desc()]
         if self.order_col:
-            ord_fields = [F.col(self.order_col), F.col("__seq")]
-        payload = [c for c in self.schema.fieldNames() if c != self.key_col]
-        return _newest_per_key(df, [self.key_col], payload, ord_fields).select(
-            *self.schema.fieldNames()
-        )
+            order.insert(0, F.col(self.order_col).desc_nulls_last())
+        return first_per_key(df, [self.key_col], order).drop("__seq")
 
     # -- write ----------------------------------------------------------------
     def _file_stats(self, path: str) -> dict[str, list] | None:
@@ -512,16 +488,17 @@ class ManifestTable:
         The payload crosses exactly ONE exchange: rows are hash-partitioned
         by BUCKET_COL up front, and because ``bucket = pmod(key, n)`` is a
         function of the key, that partitioning already clusters every key —
-        the ``groupBy(bucket, key)`` max_by reuses it (HashPartitioning on a
-        subset of the grouping keys satisfies the aggregate's required
-        distribution) and the bucketed file write needs no second
-        repartition."""
+        the per-(bucket, key) ``first_per_key`` window reuses it
+        (HashPartitioning on a subset of the partition keys satisfies the
+        window's required distribution) and the bucketed file write needs no
+        second repartition. No partial limit runs before that exchange, so
+        duplicate delta keys still cross it."""
         df = df.where(F.col(self.key_col).isNotNull())
-        payload = [c for c in df.columns if c != self.key_col]
-        ord_fields = [F.col(self.order_col)] if self.order_col else [F.lit(0)]
-        return _newest_per_key(
-            self._bucketed(df), [BUCKET_COL, self.key_col], payload, ord_fields
+        # id_map has no order column: any row of a key will do
+        order = (
+            [F.col(self.order_col).desc_nulls_last()] if self.order_col else [self.key_col]
         )
+        return first_per_key(self._bucketed(df), [BUCKET_COL, self.key_col], order)
 
     def append_buckets(self, df: DataFrame, meta: dict[str, Any] | None = None) -> int:
         """MERGE-ON-READ commit (REPLACE-by-key, storage.go:29-30): dedupe
@@ -780,7 +757,7 @@ class UrlStore:
         )
 
         # alias rows: requested key → canonical (url) key.
-        # NOT pre-deduped — append_buckets' max_by dedupe is the single
+        # NOT pre-deduped — append_buckets' dedupe is the single
         # per-key pass (a dropDuplicates here was a second full shuffle).
         requested = (
             F.col(REQUESTED_KEY)

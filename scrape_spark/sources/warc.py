@@ -235,16 +235,14 @@ def latest_captures(pages: DataFrame) -> DataFrame:
     deterministic across partitionings). A Common Crawl dump routinely
     carries multiple captures of a URL across segments; feeding them
     straight into the fetch equi-join would emit one result row per
-    capture. One map-combinable ``max_by`` shuffle over the dump — run it
-    once at ingest, cost ∝ dump rows, no skew sensitivity beyond the
-    per-URL group (bounded by recrawl count)."""
+    capture. One shuffle over the dump (``first_per_key``, with a map-side
+    partial limit) — run it once at ingest, cost ∝ dump rows, no skew
+    sensitivity beyond the per-URL group (bounded by recrawl count)."""
     from pyspark.sql import functions as F
 
-    cols = [c for c in pages.columns if c != "url"]
-    order = F.struct(
-        F.coalesce(F.col("warc_ts"), F.lit("1970-01-01").cast("timestamp")).alias("t"),
-        F.xxhash64(F.coalesce(F.col("html"), F.lit(b""))).alias("h"),
-    )
-    return pages.groupBy("url").agg(
-        F.max_by(F.struct(*cols), order).alias("__s")
-    ).select("url", *[F.col(f"__s.{c}").alias(c) for c in cols])
+    from scrape_spark.operators.dedupe import first_per_key
+
+    return first_per_key(pages, ["url"], [
+        F.coalesce(F.col("warc_ts"), F.lit("1970-01-01").cast("timestamp")).desc(),
+        F.xxhash64(F.coalesce(F.col("html"), F.lit(b""))).desc(),
+    ])

@@ -57,7 +57,7 @@ def _mk_crawl(spark, tmpdir, pages, seen_filter="none"):
         robots_table(spark, N_HOSTS),
         CrawlConfig(
             epoch_seconds=EPOCH_SECONDS, max_depth=6,
-            seen_filter=seen_filter, shuffle_partitions=4,
+            seen_filter=seen_filter,
         ),
     )
 
@@ -150,6 +150,12 @@ def test_epoch_metrics_and_lineage_match_commit(spark, crawl_run):
 def test_unknown_seen_filter_rejected(seen_filter):
     with pytest.raises(ValueError, match="seen_filter"):
         CrawlConfig(seen_filter=seen_filter)
+
+
+@pytest.mark.parametrize("ttl", [0, -1])
+def test_bad_robots_ttl_rejected(ttl):
+    with pytest.raises(ValueError, match="robots_ttl_epochs"):
+        CrawlConfig(robots_ttl_epochs=ttl)
 
 
 @pytest.mark.parametrize("seen_filter", ["none", "cuckoo"])
@@ -329,7 +335,7 @@ def test_auto_compaction_bounds_delta_generations(
     store = UrlStore(spark, f"{tmpdir}/store", n_buckets=8)
     crawl = Crawl(
         spark, f"{tmpdir}/state", store, pages, robots_table(spark, N_HOSTS),
-        CrawlConfig(epoch_seconds=EPOCH_SECONDS, max_depth=6, shuffle_partitions=4),
+        CrawlConfig(epoch_seconds=EPOCH_SECONDS, max_depth=6),
     )
     crawl.run(N_EPOCHS, seeds=seed_urls(N_HOSTS))
     assert store.urls.delta_generations() <= 2
@@ -483,7 +489,7 @@ def test_cuckoo_build_counts_store_copies_per_generation(
         robots_table(spark, N_HOSTS),
         CrawlConfig(
             epoch_seconds=EPOCH_SECONDS, max_depth=6,
-            seen_filter="cuckoo", shuffle_partitions=4,
+            seen_filter="cuckoo",
         ),
     )
     crawl.seed(seed_urls(1))
@@ -551,7 +557,7 @@ def test_robots_discovery_no_corpus_antijoin(spark, tmp_path_factory, pages):
     store = UrlStore(spark, f"{tmpdir}/store", n_buckets=8)
     crawl = Crawl(
         spark, f"{tmpdir}/state", store, spark.read.parquet(corpus_dir), None,
-        CrawlConfig(epoch_seconds=EPOCH_SECONDS, max_depth=6, shuffle_partitions=4),
+        CrawlConfig(epoch_seconds=EPOCH_SECONDS, max_depth=6),
     )
     crawl.seed(seed_urls(N_HOSTS))
     crawl._epoch_caches = []
@@ -633,7 +639,7 @@ def test_robots_join_is_sized_by_spark(
         discovered = Crawl(
             spark, f"{discovered_dir}/state",
             UrlStore(spark, f"{discovered_dir}/store", n_buckets=8), pages, None,
-            CrawlConfig(epoch_seconds=EPOCH_SECONDS, max_depth=6, shuffle_partitions=4),
+            CrawlConfig(epoch_seconds=EPOCH_SECONDS, max_depth=6),
         )
         discovered.seed(seed_urls(N_HOSTS))
         discovered.run_epoch(0)
@@ -679,9 +685,7 @@ def test_robots_discovered_from_corpus_matches_model(spark, tmp_path_factory, pa
     store = UrlStore(spark, f"{tmpdir}/store", n_buckets=8)
     crawl = Crawl(
         spark, f"{tmpdir}/state", store, corpus, None,
-        CrawlConfig(
-            epoch_seconds=EPOCH_SECONDS, max_depth=6, shuffle_partitions=4,
-        ),
+        CrawlConfig(epoch_seconds=EPOCH_SECONDS, max_depth=6),
     )
     stats = crawl.run(N_EPOCHS, seeds=seed_urls(N_HOSTS))
     got = {r.key for r in store.urls.read().select("key").collect()}
@@ -751,7 +755,7 @@ def test_crawl_discovers_relative_links(spark, tmp_path_factory):
         crawl = Crawl(
             spark, f"{tmpdir}/state", UrlStore(spark, f"{tmpdir}/store", n_buckets=8),
             pages_df, spark.createDataFrame([], ROBOTS_SCHEMA),
-            CrawlConfig(epoch_seconds=10.0, max_depth=6, shuffle_partitions=4),
+            CrawlConfig(epoch_seconds=10.0, max_depth=6),
         )
         crawl.run(4, seeds=["https://rel0.test/a/p0.html"])
         sel = [
@@ -800,7 +804,7 @@ def test_hot_host_fetch_stage_is_budget_bounded_and_balanced(spark):
     # raw skew: the hot host alone is >38% of the frontier, 1250x any other
     assert 5000 / (5000 + 4 * 1999) > 0.38
 
-    cfg = CrawlConfig(epoch_seconds=8.0, shuffle_partitions=16)
+    cfg = CrawlConfig(epoch_seconds=8.0)
     w = W.partitionBy("host").orderBy("priority", "depth", "url")
     selected = (
         frontier.withColumn("rank", F.row_number().over(w))
@@ -871,7 +875,7 @@ def test_robots_ttl_expires_and_refetches(spark, tmp_path_factory, pages):
             UrlStore(spark, f"{tmpdir}/store", n_buckets=8),
             corpus, None,
             CrawlConfig(epoch_seconds=EPOCH_SECONDS, max_depth=6,
-                        shuffle_partitions=4, robots_ttl_epochs=ttl),
+                        robots_ttl_epochs=ttl),
         )
         crawl.run(3, seeds=seed_urls(N_HOSTS))
         states = []
@@ -915,7 +919,7 @@ def test_robots_ttl_does_not_reharvest_sitemaps(spark, tmp_path_factory, pages):
         UrlStore(spark, f"{tmpdir}/store", n_buckets=8),
         corpus, None,
         CrawlConfig(epoch_seconds=EPOCH_SECONDS, max_depth=6,
-                    shuffle_partitions=4, robots_ttl_epochs=1,
+                    robots_ttl_epochs=1,
                     discover_sitemaps=True),
     )
     crawl.run(2, seeds=seed_urls(N_HOSTS))

@@ -188,7 +188,7 @@ def side_input_crawl(spark, side_input_corpus, tmp_path_factory):
     crawl = Crawl(
         spark, str(tmp / "state"), UrlStore(spark, str(tmp / "store"), n_buckets=8),
         spark.read.parquet(side_input_corpus), None,
-        CrawlConfig(epoch_seconds=4.0, shuffle_partitions=4, discover_sitemaps=True),
+        CrawlConfig(epoch_seconds=4.0, discover_sitemaps=True),
     )
     seeds = [f"https://{h}.test/a" for h in ("gone", "denied", "maps")]
     (stats,) = crawl.run(1, seeds=seeds)

@@ -568,7 +568,7 @@ class TestFetchPages:
             robots=None,  # discover /robots.txt over the network
             config=CrawlConfig(
                 epoch_seconds=10.0, max_depth=4,
-                shuffle_partitions=4, user_agent="scrape-spark",
+                user_agent="scrape-spark",
             ),
             live=LiveFetchConfig(timeout=10),
         )

@@ -147,6 +147,27 @@ def test_crawl_delay_and_null_txt(spark, rules_df):
     assert df.disallow == [] and df.allow == []
 
 
+def test_crawl_delay_edge_values_budget(spark):
+    """A zero delay takes the default, as the reference model's
+    ``delay or DEFAULT_CRAWL_DELAY`` does, instead of failing the epoch on
+    an ANSI divide-by-zero; a negative delay gives 1; a tiny, NaN or
+    infinite delay gives a budget of at least 1 without failing."""
+    from scrape_spark.operators.frontier import DEFAULT_CRAWL_DELAY, CrawlConfig
+
+    cfg = CrawlConfig(epoch_seconds=8.0)
+    delays = [None, 0.0, -1.0, 1e-300, float("nan"), float("inf")]
+    rows = spark.createDataFrame(
+        [(i, d) for i, d in enumerate(delays)], "i int, crawl_delay double"
+    ).select("i", cfg.budget_expr().alias("budget"))
+    got = {r.i: r.budget for r in rows.collect()}
+    assert dict(rows.dtypes)["budget"] == "bigint"
+    null_budget = int(8.0 // DEFAULT_CRAWL_DELAY)
+    assert got[0] == null_budget
+    assert got[1] == null_budget
+    assert got[2] == 1
+    assert all(got[i] >= 1 for i in (3, 4, 5))
+
+
 # ---- plain-prefix tables ------------------------------------------------------
 
 
@@ -200,7 +221,7 @@ def test_null_rule_in_supplied_table_is_skipped(spark, tmp_path):
         spark, str(tmp_path / "state"),
         UrlStore(spark, str(tmp_path / "store"), n_buckets=8),
         synth_pages(spark, 2, 10), robots,
-        CrawlConfig(epoch_seconds=4.0, shuffle_partitions=4),
+        CrawlConfig(epoch_seconds=4.0),
     )
     crawl.seed(seed_urls(2))
     stats = crawl.run_epoch(0)
@@ -243,9 +264,7 @@ def test_crawl_with_parsed_robots_matches_model(spark, tmp_path_factory):
         UrlStore(spark, f"{tmpdir}/store", n_buckets=8),
         pages,
         robots,
-        CrawlConfig(
-            epoch_seconds=epoch_s, max_depth=6, shuffle_partitions=4
-        ),
+        CrawlConfig(epoch_seconds=epoch_s, max_depth=6),
     )
     crawl.run(n_epochs, seeds=seed_urls(n_hosts))
     corpus = build_corpus(n_hosts, per_host)

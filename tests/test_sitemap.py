@@ -118,7 +118,7 @@ def test_sitemap_seed_drives_a_crawl_epoch(spark, tmp_path):
         UrlStore(spark, str(tmp_path / "store"), n_buckets=8),
         pages,
         robots_table(spark, 2),
-        CrawlConfig(epoch_seconds=4.0, shuffle_partitions=4),
+        CrawlConfig(epoch_seconds=4.0),
     )
     crawl.seed([], sitemaps=sitemaps)
     stats = crawl.run_epoch(0)
@@ -222,7 +222,7 @@ def test_crawl_discovers_sitemaps_from_robots(spark, tmp_path):
             UrlStore(spark, str(tmp_path / f"store{sub}"), n_buckets=8),
             pages,
             None,  # discovered-robots mode
-            CrawlConfig(epoch_seconds=8.0, shuffle_partitions=4,
+            CrawlConfig(epoch_seconds=8.0,
                         discover_sitemaps=flag),
         )
         crawl.run(2, seeds=[page_url(0, 0)])

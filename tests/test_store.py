@@ -334,12 +334,36 @@ def test_single_generation_read_skips_resolution(spark, store):
                                       expires=dt.datetime(2099, 1, 1))])
     plan = store.urls.read()._jdf.queryExecution().executedPlan().toString()
     assert "max_by" not in plan and "HashAggregate" not in plan
-    # two generations → resolution appears
-    _merge(spark, store, [_result_row("https://example.com/fast2",
+    assert "row_number" not in plan
+    # the same URL again → its bucket holds two generations → resolution
+    _merge(spark, store, [_result_row("https://example.com/fast",
                                       expires=dt.datetime(2099, 1, 1))])
-    if store.urls.delta_generations() > 1:
-        plan2 = store.urls.read()._jdf.queryExecution().executedPlan().toString()
-        assert "max_by" in plan2
+    assert store.urls.delta_generations() > 1
+    plan2 = store.urls.read()._jdf.queryExecution().executedPlan().toString()
+    assert "row_number" in plan2
+
+
+def test_key_only_multi_generation_read_prunes_columns(spark, store):
+    """A key-only read of a multi-generation table scans only the key and
+    the columns the filter and resolution sort on: no generation's scan
+    reads ``content_text``, and no sort-based aggregate runs."""
+    urls = [f"https://example.com/p{i}" for i in range(20)]
+    for gen in range(2):
+        _merge(spark, store, [
+            _result_row(u, title=f"v{gen}", fetch_time=dt.datetime(2026, 1, 1 + gen),
+                        expires=dt.datetime(2099 - 100 * (i % 2), 1, 1))
+            for i, u in enumerate(urls)
+        ])
+    assert store.urls.delta_generations() > 1
+    fresh = F.col("expires") > F.current_timestamp()
+    keys = store.urls.read().filter(fresh).select("key")
+    plan = keys._jdf.queryExecution().executedPlan().toString()
+    schemas = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
+    assert schemas and not any("content_text" in ln for ln in schemas), plan
+    assert "SortAggregate" not in plan, plan
+    want = [r.key for r in store.urls.read().filter(fresh).collect()]
+    assert len(want) == 10
+    assert sorted(r.key for r in keys.collect()) == sorted(want)
 
 
 # ---- FileIO seam (object-store readiness) -----------------------------------
