@@ -31,6 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from scrape_spark.functions.urlkeys import url_key_np
+
 # v2: readability-style fallback for article-less pages
 # v3: attribute-order/quote-insensitive <meta> parsing; <time datetime> and
 #     JSON-LD datePublished date fallbacks (go-trafilatura tolerance,
@@ -62,6 +64,13 @@ EXTRACT_FIELDS = [
     T.StructField("links", T.ArrayType(T.StringType()), True),
     T.StructField("extract_error", T.StringType(), True),
 ]
+
+# What an ok fetch row is stored under, appended by ``extract_pages`` when
+# its input carries the requested ``parsed_url`` (the fetch join's input):
+# the canonical URL, ``coalesce(canonical_url, parsed_url)``, and its key.
+# ``finalize_results`` reads both; this module owns the rule.
+CANONICAL_URL = "__canonical_url"
+CANONICAL_KEY = "__canonical_key"
 
 _ENTITIES = [("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'), ("&#39;", "'"),
              ("&nbsp;", " "), ("&copy;", "©"), ("&amp;", "&")]  # &amp; LAST
@@ -575,7 +584,14 @@ def extract_pages(
     (spec v4; reference analog: trafilatura's OriginalURL resolution,
     fetch/trafilatura/fetcher.go:89-95). Auto-detected when None:
     ``__page_url`` (the URL actually served, i.e. the redirect target on
-    hops) before the requested ``parsed_url``/``url``."""
+    hops) before the requested ``parsed_url``/``url``.
+
+    When the input carries the requested ``parsed_url`` (the fetch join's
+    input does), the pass also appends CANONICAL_URL, ``coalesce(
+    canonical_url, parsed_url)``, and CANONICAL_KEY, its ``url_key``: the
+    URL and key an ok row is stored under, computed in the same Python
+    worker as the extraction so finalize runs no Python UDF of its own.
+    Other inputs get no such columns."""
     if base_col is None:
         for c in ("__page_url", "parsed_url", "url"):
             if c in df.columns and c != html_col:
@@ -583,7 +599,13 @@ def extract_pages(
                 break
     ctype_col = next((c for c in ("__ctype", "ctype") if c in df.columns), None)
     passthrough = [f for f in df.schema.fields if f.name != html_col]
-    out_schema = T.StructType(passthrough + EXTRACT_FIELDS)
+    keyed = "parsed_url" in df.columns
+    out_fields = passthrough + EXTRACT_FIELDS
+    if keyed:
+        out_fields += [
+            T.StructField(CANONICAL_URL, T.StringType(), True),
+            T.StructField(CANONICAL_KEY, T.LongType(), True),
+        ]
     pass_names = [f.name for f in passthrough]
 
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -594,6 +616,11 @@ def extract_pages(
                 pdf[ctype_col] if ctype_col else None,
             )
             base = pdf[pass_names].reset_index(drop=True)
+            if keyed:
+                canon = ext["canonical_url"]
+                canon = canon.where(canon.notna(), base["parsed_url"])
+                ext[CANONICAL_URL] = canon
+                ext[CANONICAL_KEY] = url_key_np(canon)
             yield pd.concat([base, ext], axis=1)
 
-    return df.mapInPandas(run, schema=out_schema)
+    return df.mapInPandas(run, schema=T.StructType(out_fields))

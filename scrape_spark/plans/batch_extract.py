@@ -26,7 +26,14 @@ The id_map aliases of fetched rows take the request key computed in
 request prep (carried past finalize as REQUESTED_KEY) instead of re-hashing
 ``parsed_url`` in a second Python pass.
 
-Scale notes: the cache-split join is key-equi on `key long` (never URL
+Scale notes: the deduped batch is spread over ``defaultParallelism``
+partitions before the fetch (as in the crawl epoch and the live fetch), so
+the fetch join and the extraction run on every core instead of in the one
+task AQE coalesces a small dedupe shuffle to (on ``local[4]``, batches
+up to ~23k requests ran in 1 task, ~47k in 2); the extraction pass also
+computes the canonical URL and key, so each running task holds one Python
+worker.
+The cache-split join is key-equi on `key long` (never URL
 strings, O1); the pages join prunes to (url, html, ctype, status,
 redirect_to) at the scan and skips the redirect-hop plan branches entirely
 for redirect-free corpora; it is one unhinted left join that Spark sizes (a
@@ -50,8 +57,12 @@ from scrape_spark.functions.textfns import (
     stamp_fetch_time,
     status_error,
 )
-from scrape_spark.functions.urlkeys import clean_and_key, hostname_col, url_key
-from scrape_spark.operators.extract import extract_pages
+from scrape_spark.functions.urlkeys import clean_and_key, hostname_col
+from scrape_spark.operators.extract import (
+    CANONICAL_KEY,
+    CANONICAL_URL,
+    extract_pages,
+)
 from scrape_spark.operators.store import REQUESTED_KEY, UrlStore
 from scrape_spark.schemas import (
     FETCH_METHOD_DIRECT,
@@ -106,7 +117,9 @@ def fetch_join(misses: DataFrame, pages: DataFrame) -> DataFrame:
     """The 'network' stage: equi-join against the pages corpus (absent ⇒
     404 later), then one vectorized extraction pass. Keeps the extract's
     raw columns (incl. `links`) so callers can derive both result rows and
-    outlink discovery from a single cached extraction.
+    outlink discovery from a single cached extraction. The pass also emits
+    CANONICAL_URL and CANONICAL_KEY, the URL and key ``finalize_results``
+    gives an ok row.
 
     HTTP-response model: the corpus may carry `ctype` (Content-Type header),
     `status`, and `redirect_to` columns (PAGES_FETCH_SCHEMA); a bare
@@ -215,6 +228,12 @@ def finalize_results(
     plan once per column, analysis time paid on every batch before any job
     runs.
 
+    An ok row takes the CANONICAL_URL and CANONICAL_KEY that
+    ``fetch_join``'s extraction pass computed; an error row keeps the
+    requested URL and the request key. Finalize itself runs no Python UDF:
+    a second Python operator in the extraction's task would hold a second
+    Python worker per running task.
+
     ``keep_requested_key`` appends REQUESTED_KEY — the input ``key`` (the
     request key, ``url_key(parsed_url)``) before it is replaced by the
     canonical key — so ``UrlStore.merge`` writes id_map aliases without
@@ -247,13 +266,11 @@ def finalize_results(
     out = extracted.withColumns({"status_code": status, "error": error})
     ok = F.col("error").isNull()
     # error rows echo the requested URL (reference: RequestedURL, no canonical)
-    canonical = F.when(
-        ok, F.coalesce(F.col("canonical_url"), F.col("parsed_url"))
-    ).otherwise(F.col("parsed_url"))
+    canonical = F.when(ok, F.col(CANONICAL_URL)).otherwise(F.col("parsed_url"))
     fetch_time = stamp_fetch_time()
     cols = {c: F.when(ok, F.col(c)) for c in _EXTRACTED_FIELDS}
     cols.update(
-        key=F.when(ok, url_key(canonical)).otherwise(F.col("key")),
+        key=F.when(ok, F.col(CANONICAL_KEY)).otherwise(F.col("key")),
         url=canonical,
         hostname=hostname_col(canonical),
         fetch_time=fetch_time,
@@ -370,9 +387,23 @@ def batch_extract(
     # Invalid URLs have key = NULL; dropDuplicates treats NULLs as equal, so
     # dedupe on coalesce(key, hash(original_url)) — the reference emits one
     # error row per malformed input (internal/scrape.go:170-177).
-    req = req.withColumn(
-        "__dedupe_key", F.coalesce(F.col("key"), F.xxhash64("original_url"))
-    ).dropDuplicates(["__dedupe_key"]).drop("__dedupe_key")
+    # The deduped batch is then spread over every core, as the crawl epoch
+    # and the live fetch do: the dedupe's shuffle is small enough that AQE
+    # coalesces it to one partition, which would run the fetch join and the
+    # extraction in one task. A REPARTITION_BY_NUM exchange is never
+    # coalesced; it hashes an expression of the key, since a bare-key
+    # repartition matches the aggregate's own partitioning and can be
+    # dropped as redundant.
+    req = (
+        req.withColumn(
+            "__dedupe_key", F.coalesce(F.col("key"), F.xxhash64("original_url"))
+        )
+        .dropDuplicates(["__dedupe_key"])
+        .repartition(
+            spark.sparkContext.defaultParallelism, F.xxhash64("__dedupe_key")
+        )
+        .drop("__dedupe_key")
+    )
 
     if store is None:
         if pages is None:

@@ -11,6 +11,7 @@ that no engine path calls.
 - ``parse_warc_segment``: a whole WARC segment as one pandas frame.
 - ``record_request`` / ``record_refresh``: the feed_refresh table's request
   upsert and refresh write, driving ``feed_refresh.due_feeds``.
+- ``python_udf_names``: the Python UDF calls a physical plan evaluates.
 """
 
 from __future__ import annotations
@@ -157,3 +158,43 @@ def record_refresh(feeds: DataFrame, refreshed: DataFrame, now: int) -> DataFram
             "idle_timeout",
         )
     )
+
+
+def python_udf_names(plan) -> list[str]:
+    """Names of the Python UDF calls, nested ones included, that a physical
+    plan's ArrowEvalPython nodes evaluate. The walk enters inner plans too
+    (a cached relation's plan, an adaptive plan's current plan), and each
+    cache once: a cache evaluates its UDFs once however often it is read."""
+    names: list[str] = []
+    seen_caches: list = []
+
+    def walk(node) -> None:
+        if node.nodeName() == "InMemoryRelation":
+            builder = node.cacheBuilder()
+            if any(builder.equals(b) for b in seen_caches):
+                return
+            seen_caches.append(builder)
+        if node.nodeName() == "ArrowEvalPython":
+            stack = [node.udfs().apply(i) for i in range(node.udfs().size())]
+            while stack:
+                expr = stack.pop()
+                if expr.getClass().getSimpleName() == "PythonUDF":
+                    names.append(expr.name())
+                kids = expr.children()
+                stack += [kids.apply(i) for i in range(kids.size())]
+        kids = node.children()
+        inner = [kids.apply(i) for i in range(kids.size())]
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            inner.append(node.executedPlan())
+        elif cls.endswith("QueryStageExec"):
+            inner.append(node.plan())
+        elif cls == "InMemoryTableScanExec":
+            inner.append(node.relation())
+        elif cls == "InMemoryRelation":
+            inner.append(node.cachedPlan())
+        for kid in inner:
+            walk(kid)
+
+    walk(plan)
+    return names

@@ -437,6 +437,104 @@ def test_carried_and_derived_request_keys_write_identical_id_map(spark, pages, t
     assert len(id_map(carried)) == 4
 
 
+def test_extraction_pass_key_matches_the_url_key_oracle(spark, pages, tmp_path):
+    """Every row's key and url equal the ones finalize used to compute from
+    the raw extraction columns, ``when(ok, url_key(coalesce(canonical_url,
+    parsed_url))).otherwise(key)`` with the url_key UDF and ``when(ok,
+    coalesce(canonical_url, parsed_url)).otherwise(parsed_url)``, across the
+    HTTP fixture (redirect hops, text/plain, 404/415/5xx/504), utm variants,
+    /amp aliases, odd canonicals and malformed URLs; and a store merged from
+    the batch writes the same urls and id_map rows under either pair."""
+    from scrape_spark.functions.urlkeys import clean_url_py, url_key
+    from scrape_spark.operators.store import REQUESTED_KEY
+    from scrape_spark.plans.batch_extract import (
+        fetch_join,
+        finalize_results,
+        prepare_requests,
+    )
+    from scrape_spark.schemas import PAGES_FETCH_SCHEMA
+
+    def page(path, og_url):
+        html = (
+            '<html><head><meta property="og:url" content="' + og_url + '"></head>'
+            "<body><article><p>odd canonical</p></article></body></html>"
+        )
+        return (f"{BASE}/canon/{path}", None, html.encode(), None, None, "text/html", 200, None)
+
+    odd = spark.createDataFrame(
+        [
+            page("relative", "/relative/path"),
+            page("empty", ""),
+            page("bad", "not a url"),
+            page("unicode", "https://unicode.test/ä?q=ü"),
+        ],
+        PAGES_FETCH_SCHEMA,
+    )
+    fixture = fetch_fixture_pages(spark)
+    corpus = pages.unionByName(fixture).unionByName(odd)
+    urls = [r.url for r in fixture.unionByName(odd).select("url").collect()] + [
+        page_url(0, 1),
+        page_url(0, 2) + "?utm_source=feed&utm_medium=x",
+        page_url(1, 3) + "?b=2&a=1&utm_campaign=c",
+        page_url(2, 11) + "/amp",
+        page_url(3, 22) + "/amp?utm_term=t#frag",
+        page_url(0, 37),
+        "https://missing.test/nope",
+        "https://missing.test/ä",
+        "not a url",
+        "ftp://files.test/x",
+        "http://",
+    ]
+    ext = fetch_join(prepare_requests(_req_df(spark, urls)), corpus).cache()
+    results = finalize_results(ext, 3600, keep_requested_key=True)
+    canonical = F.coalesce(F.col("canonical_url"), F.col("parsed_url"))
+    raw = ext.select(
+        "original_url",
+        F.col("parsed_url").alias("requested_url"),
+        canonical.alias("canonical"),
+        url_key(canonical).alias("canonical_key"),
+    )
+    ok = F.col("error").isNull()
+    results = (
+        results.join(raw, "original_url")
+        .withColumn("oracle_key", F.when(ok, F.col("canonical_key")).otherwise(F.col(REQUESTED_KEY)))
+        .withColumn("oracle_url", F.when(ok, F.col("canonical")).otherwise(F.col("requested_url")))
+        .drop("requested_url", "canonical", "canonical_key")
+        .cache()
+    )
+    rows = results.select(
+        "original_url", "url", "error", "key", "oracle_key", "oracle_url"
+    ).collect()
+    assert len(rows) == len(urls)
+    assert [r for r in rows if (r.key, r.url) != (r.oracle_key, r.oracle_url)] == []
+    # the batch reaches each class the oracle must agree on
+    assert any(r.error is None and r.url != clean_url_py(r.original_url) for r in rows)
+    errors = {r.error.split(":")[0] for r in rows if r.error}
+    assert {"HTTP error", "unsupported content type", "invalid url"} <= errors
+
+    stores = {}
+    oracle_cols = ["oracle_key", "oracle_url"]
+    for name, frame in (
+        ("extraction_key", results.drop(*oracle_cols)),
+        (
+            "url_key_udf",
+            results.withColumns(
+                {"key": F.col("oracle_key"), "url": F.col("oracle_url")}
+            ).drop(*oracle_cols),
+        ),
+    ):
+        store = UrlStore(spark, str(tmp_path / name), n_buckets=8)
+        store.merge(frame)
+        stores[name] = {
+            t: sorted(str(r) for r in getattr(store, t).read().collect())
+            for t in ("urls", "id_map")
+        }
+    results.unpersist()
+    ext.unpersist()
+    assert stores["extraction_key"] == stores["url_key_udf"]
+    assert stores["extraction_key"]["urls"] and stores["extraction_key"]["id_map"]
+
+
 def _plan_node_names(plan) -> list[str]:
     """Physical operator names of a plan tree. InMemoryTableScan is a leaf
     here: the plan that built a cache is not re-run by its readers."""

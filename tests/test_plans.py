@@ -2,10 +2,11 @@
 the engine's scale rests on, read from Spark's own physical plans.
 
 Explain-first: every check reads the plan of a lazy frame
-(``queryExecution().executedPlan()``, no action) except the codegen and
-dedupe-reuse checks, which read a tiny flagship's final plan because
-whole-stage codegen spans (``*(n)``) and AQE's ``ReusedExchange`` nodes
-only appear once a plan has executed. The store MERGE's one-exchange check
+(``queryExecution().executedPlan()``, no action) except the codegen,
+dedupe-reuse and fetch-stage spread checks, which read a tiny flagship's
+final plan because whole-stage codegen spans (``*(n)``), AQE's
+``ReusedExchange`` nodes and its coalesced shuffle reads only appear once a
+plan has executed. The store MERGE's one-exchange check
 lives with the store tests (``test_store.py::test_merge_delta_single_exchange``).
 """
 
@@ -20,6 +21,7 @@ from scrape_spark.operators.store import UrlStore
 from scrape_spark.plans.batch_extract import batch_extract
 from scrape_spark.plans.export import export_corpus
 from scrape_spark.sources.pages import page_url, synth_pages
+from tests.helpers import python_udf_names
 
 # Exchange nodes (shuffles and broadcasts) in each declared query's
 # pre-execution plan on the tier-1 data (sf0.001): the queries
@@ -39,7 +41,10 @@ EXCHANGES = {
     "minhash_neardup": 6,
     "embedding_neardup": 3,
     "ann_topk": 2,
-    "batch_pipeline": 2,
+    # the in-flight dedupe's shuffle, the corpus broadcast, and the
+    # REPARTITION_BY_NUM exchange that spreads the deduped batch over every
+    # core before the fetch join and the extraction
+    "batch_pipeline": 3,
 }
 
 
@@ -68,10 +73,29 @@ def flagship(spark, pages):
 
 
 @pytest.fixture(scope="module")
-def executed_flagship(spark, pages):
+def flagship_run(spark, pages):
+    """One executed flagship: its final plan, and the task count of the
+    last stage its collect ran (the result stage, which holds the fetch join
+    and the extraction), read from the status tracker — no extra job."""
+    sc = spark.sparkContext
+    group = "test_plans.flagship_run"
     df = batch_extract(spark, pages.select("url"), pages, store=None)
-    df.collect()
-    return plan_of(df)
+    sc.setJobGroup(group, "executed flagship")
+    try:
+        df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    stages = [
+        s for j in tracker.getJobIdsForGroup(group)
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    return plan_of(df), tracker.getStageInfo(max(stages)).numTasks
+
+
+@pytest.fixture(scope="module")
+def executed_flagship(flagship_run):
+    return flagship_run[0]
 
 
 @pytest.fixture(scope="module")
@@ -132,6 +156,43 @@ def test_inflight_dedupe_aggregates_once(executed_flagship):
         if "ReusedExchange" in line and "__dedupe_key" in line
     ]
     assert not reused, executed_flagship
+
+
+def test_extraction_is_spread_over_every_core(spark, flagship_run):
+    """The extraction reads a REPARTITION_BY_NUM exchange of
+    defaultParallelism partitions that AQE does not coalesce, so the fetch
+    join and the extraction run one task per core, not the one task the
+    small dedupe shuffle coalesces to."""
+    plan, result_tasks = flagship_run
+    n = spark.sparkContext.defaultParallelism
+    lines = plan.splitlines()
+    start = next(i for i, line in enumerate(lines) if "MapInPandas" in line)
+    below = lines[start + 1:]
+    first = next(i for i, line in enumerate(below) if "Exchange " in line)
+    assert f", {n}), REPARTITION_BY_NUM" in below[first], plan
+    assert not any("AQEShuffleRead coalesced" in line for line in below[:first]), plan
+    assert result_tasks == n
+
+
+def test_only_python_udf_is_request_prep(spark, pages, tmp_path):
+    """Request prep's clean_and_key is the one Python UDF of a batch, cold
+    or store-backed with save: finalize reads the canonical key the
+    extraction pass computed instead of running url_key in a second Python
+    worker beside it."""
+    cold = batch_extract(spark, pages.select("url"), pages, store=None)
+    assert python_udf_names(cold._jdf.queryExecution().sparkPlan()) == ["clean_and_key"]
+    store = UrlStore(spark, str(tmp_path / "s"), n_buckets=8)
+    batch_extract(spark, spark.createDataFrame([(page_url(0, 1),)], ["url"]), pages, store).unpersist()
+    requests = spark.createDataFrame(
+        [(page_url(0, 1),), (page_url(1, 2) + "?utm_source=x",), (page_url(2, 11) + "/amp",)],
+        ["url"],
+    )
+    saved = batch_extract(spark, requests, pages, store, save=True)
+    try:
+        names = python_udf_names(saved._jdf.queryExecution().sparkPlan())
+    finally:
+        saved.unpersist()
+    assert names == ["clean_and_key"]
 
 
 def test_flagship_has_whole_stage_codegen(executed_flagship):

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from scrape_spark.functions.urlkeys import clean_url_py, url_key_py
 from scrape_spark.operators.store import UrlStore
 from scrape_spark.schemas import RESULT_SCHEMA
+from tests.helpers import python_udf_names
 
 
 def _result_row(url, canonical=None, title="t", error=None, fetch_time=None, expires=None):
@@ -203,24 +204,6 @@ def test_fetch_output_has_unambiguous_columns(spark, store):
     assert out.select("parsed_url").collect()[0].parsed_url == url
 
 
-def _python_udf_names(node) -> list[str]:
-    """Names of the Python UDF calls, nested ones included, that a physical
-    plan's ArrowEvalPython nodes evaluate."""
-    names = []
-    if node.nodeName() == "ArrowEvalPython":
-        stack = [node.udfs().apply(i) for i in range(node.udfs().size())]
-        while stack:
-            expr = stack.pop()
-            if expr.getClass().getSimpleName() == "PythonUDF":
-                names.append(expr.name())
-            kids = expr.children()
-            stack += [kids.apply(i) for i in range(kids.size())]
-    kids = node.children()
-    for i in range(kids.size()):
-        names += _python_udf_names(kids.apply(i))
-    return names
-
-
 def test_fetch_keys_requests_in_one_python_udf(spark, store):
     """store.fetch keys its URLs with the fused clean_and_key UDF that
     request prep and the frontier use: one Python UDF call per request,
@@ -228,7 +211,7 @@ def test_fetch_keys_requests_in_one_python_udf(spark, store):
     url = "https://example.com/one-pass?utm_source=x"
     _merge(spark, store, [_result_row(url, expires=dt.datetime(2099, 1, 1))])
     out = store.fetch([url])
-    assert _python_udf_names(out._jdf.queryExecution().sparkPlan()) == ["clean_and_key"]
+    assert python_udf_names(out._jdf.queryExecution().sparkPlan()) == ["clean_and_key"]
     assert [(r.original_url, r.parsed_url) for r in out.collect()] == [
         (url, "https://example.com/one-pass")
     ]
